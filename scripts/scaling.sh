@@ -10,12 +10,13 @@
 # last and calibrate the machine's own scaling ceiling (SMT/turbo).
 #
 # Usage: scripts/scaling.sh [nRows] [loCores] [hiCores] [passes]
+#   defaults: 2000000 rows, 1 core vs `nproc` cores, 3 passes
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 N=${1:-2000000}
-LO=${2:-8}
-HI=${3:-32}
+LO=${2:-1}
+HI=${3:-$(nproc)}
 PASSES=${4:-3}
 JAR=target/scala-2.13/aimonitoringlogprocessorspark_2.13-0.1.0.jar
 WORK=$(mktemp -d /dev/shm/graft-scaling-XXXX)
@@ -25,11 +26,13 @@ trap 'rm -rf "$WORK"' EXIT
 # penalties at high thread counts (measured 64s -> 5s on identical work).
 # Big fixed young gen: the write path is pure churn (no live data), so
 # promotion — and with it G1 mixed/full pauses — is avoided entirely.
-SUBMIT=(/opt/spark/bin/spark-submit --driver-memory 24g
+# Heap: half the host's memory, between 2g and 8g; young gen half of it.
+MEM_G=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g)}' /proc/meminfo)
+SUBMIT=(/opt/spark/bin/spark-submit --driver-memory "${MEM_G}g"
         --conf spark.ui.enabled=false
         --conf spark.sql.session.timeZone=UTC
         --conf spark.sql.maxConcurrentOutputFileWriters=8
-        --conf "spark.driver.extraJavaOptions=-XX:+UseParallelGC -Xmn16g -Xms24g -XX:+AlwaysPreTouch")
+        --conf "spark.driver.extraJavaOptions=-XX:+UseParallelGC -Xmn$((MEM_G * 512))m -Xms${MEM_G}g -XX:+AlwaysPreTouch")
 
 sbt -batch package > /dev/null
 

@@ -9,9 +9,9 @@ import graft.functions.CosineSim
 /**
  * SparkSessionExtensions entry point — registers graft's custom Catalyst
  * expressions as SQL functions, so `spark.sql("SELECT cosine_sim(a, b)")`
- * works anywhere the library is on the classpath. Wire up with either
- * `SparkSession.builder.withExtensions(new GraftExtensions)` or
- * `--conf spark.sql.extensions=graft.GraftExtensions`.
+ * works anywhere the library is on the classpath. [[GraftSession]] wires
+ * it in; elsewhere pass `withExtensions(new GraftExtensions)` to the
+ * session builder or `--conf spark.sql.extensions=graft.GraftExtensions`.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

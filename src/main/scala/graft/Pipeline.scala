@@ -42,15 +42,6 @@ object Pipeline {
    * then aggregate stage (per-sink counts), each commit-marker-last so a
    * re-run resumes past completed stages (J1).
    */
-  private def timed[T](what: String)(body: => T): T = {
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[pipeline] $what%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else body
-  }
-
   def run(spark: SparkSession, pages: DataFrame, domainRep: DataFrame,
           langMeta: DataFrame, root: String,
           jobStartTs: java.sql.Timestamp = DefaultJobStart): RunResult = {
@@ -58,11 +49,11 @@ object Pipeline {
 
     val ranRoute = Checkpoint.runStage(spark, root, "route", jobStartTs) {
       val scored = transform(pages, domainRep, langMeta, jobStartTs)
-      val s = timed("route-write") { Route(scored, root) } // ONE heavy pass + columnar derivations
+      val s = Route(scored, root) // ONE heavy pass + columnar derivations
       stats = Some(s)
       (Checkpoint.CommitRow("route", s.inputRows, s.routedRows,
         s.rejectedRows, "", ""),
-        Some(timed("lineage") { Route.lineage(spark, root) }))
+        Some(Route.lineage(spark, root)))
     }
 
     // Downstream consistency: if the route stage (re-)executed, any
@@ -71,10 +62,8 @@ object Pipeline {
     if (ranRoute) Checkpoint.invalidate(spark, root, "aggregate")
 
     val ranAgg = Checkpoint.runStage(spark, root, "aggregate", jobStartTs) {
-      val aggs = timed("aggregates") { Route.sinkAggregates(spark, root) }
-      timed("agg-write") {
-        aggs.write.mode("overwrite").parquet(s"$root/sink_counts")
-      }
+      Route.sinkAggregates(spark, root)
+        .write.mode("overwrite").parquet(s"$root/sink_counts")
       val n = spark.read.parquet(s"$root/sink_counts").count()
       (Checkpoint.CommitRow("aggregate", n, n, 0L, "", ""), None)
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * spark-submit entry point for the flagship pipeline (north_rule):
  *
@@ -18,17 +16,8 @@ object RunPipeline {
       "usage: RunPipeline <outRoot> [nRows] [parts] [cores]"))
     val n = if (args.length > 1) args(1).toLong else 100000L
     val parts = if (args.length > 2) args(2).toInt else 32
-    val cores = if (args.length > 3) args(3) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(sys.props.getOrElse("spark.master", s"local[$cores]"))
-      .appName("graft-pipeline")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      if (args.length > 3) args(3).toInt else GraftSession.defaultCpus)
 
     val t0 = System.nanoTime()
     val pages = Synth.pages(spark, n, parts = parts)

@@ -48,13 +48,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, dstDir, factorS) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     run(spark, srcDir, dstDir, factorS.toInt)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /**
@@ -21,9 +20,7 @@ import org.apache.spark.sql.functions._
 object ScalingGen {
   def main(args: Array[String]): Unit = {
     val Array(nStr, out) = args.take(2)
-    val spark = SparkSession.builder().appName("graft-scaling-gen")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     Synth.pages(spark, nStr.toLong, parts = 128)
       .write.mode("overwrite").parquet(out)
     println(s"""{"generated":$nStr,"out":"$out"}""")
@@ -36,12 +33,7 @@ object ScalingStep {
     val input = args(0)
     val outRoot = args(1)
     val runs = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder().appName("graft-scaling-step")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val cores = spark.sparkContext.defaultParallelism
     val pages = spark.read.parquet(input)
     val n = pages.count()
@@ -66,8 +58,7 @@ object ScalingStep {
 object CpuProbe {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 500000000L
-    val spark = SparkSession.builder().appName("graft-cpu-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val cores = spark.sparkContext.defaultParallelism
     def once(): Double = {
       val t0 = System.nanoTime()
@@ -99,8 +90,7 @@ object MemProbe {
   def main(args: Array[String]): Unit = {
     val mbPerTask = if (args.length > 0) args(0).toInt else 512
     val sweeps = if (args.length > 1) args(1).toInt else 6
-    val spark = SparkSession.builder().appName("graft-mem-probe").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val sc = spark.sparkContext
     val cores = sc.defaultParallelism
     // Long arithmetic: Int overflows at mbPerTask >= 2048 (negative array

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Aggregates
 
@@ -28,21 +28,17 @@ import graft.operators.Aggregates
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 4000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      // local-scale thresholds so AQE's skew split actually fires on MBs
-      // (the production defaults are 256 MB / 64 MB)
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512k")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
+    // 32 reducers whatever the core count, so the hot key's partition
+    // stands out against the median; local-scale thresholds so AQE's skew
+    // split actually fires on MBs (the production defaults are 256 MB / 64 MB)
+    Seq("spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "512k",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1" // force SMJ
+    ).foreach { case (k, v) => spark.conf.set(k, v) }
 
     val pages = Synth.pages(spark, n, parts = 32)
       .select(graft.operators.Parse.hostOf(col("url")).as("host"),

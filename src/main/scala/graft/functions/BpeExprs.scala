@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * Why a custom expression (the documented rejection of built-ins):
  * applying an ORDERED merge list with built-in operators requires one
  * expression node per merge — a chain whose depth equals the merge
- * count. Measured on this build (BpeDepthProbe, BENCH.md): the chain
+ * count. Measured on this build (BENCH.md §7): the chain
  * stays in codegen but its throughput degrades superlinearly (4.9k →
  * 1.7k docs/s from depth 64 → 256: each merge re-scans the whole
  * wrapped string) and Catalyst analysis StackOverflows at depth 512 —

@@ -22,11 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
  * depth 512 (BENCH.md §7). Here the codebook rides along as ONE reference
  * object (k·dim doubles, model-sized), the plan is a single scan-local
  * node at ANY k, and codegen emits one static call — whole-stage codegen
- * survives production codebook sizes (CentroidDepthProbe measures the
- * sweep, BENCH.md).
+ * survives production codebook sizes (BENCH.md §10.1 has the sweep).
  *
  * Semantics are bit-identical to the literal formulation (pinned in
- * SimilaritySpec): the argmax is lexicographic max over
+ * SimilaritySpec and PropertySpec): the argmax is lexicographic max over
  * (cosine, −cid) with [[CosineSim]]'s accumulation order and Spark's
  * double total order (NaN greatest), i.e. highest cosine, ties to the
  * smaller centroid id.

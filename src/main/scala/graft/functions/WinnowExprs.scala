@@ -41,11 +41,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 case class WinnowFingerprints(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    WinnowExprs.checkTokens(prettyName, child.dataType)
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -163,11 +160,8 @@ object WinnowFingerprints {
 case class WinnowMd5Windows(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires array<string> input, got ${other.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    WinnowExprs.checkTokens(prettyName, child.dataType)
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
@@ -241,6 +235,17 @@ object WinnowMd5Windows {
 }
 
 object WinnowExprs {
+  /** Both kernels take `array<string>` without null elements: a null token
+    * has no hash, and their caller's `array_remove(split(…))` never yields
+    * one, so a null-element array is refused at analysis, not mid-task. */
+  private[functions] def checkTokens(name: String, dt: DataType): TypeCheckResult = dt match {
+    case ArrayType(StringType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StringType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$name requires array<string> without null elements")
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$name requires array<string> input, got ${other.catalogString}")
+  }
+
   /** Selected winnowing fingerprints of a token array, as one codegen'd
     * O(n) kernel. */
   def winnowFingerprints(tokens: Column, k: Int, w: Int): Column =

@@ -766,7 +766,7 @@ object Curation {
    * — and the scan never rescans replaced text, so no new cross-boundary
    * matches arise. One codegen'd StringReplace per merge, chained.
    *
-   * DEPTH LIMIT (measured, BpeDepthProbe / BENCH.md): one StringReplace
+   * DEPTH LIMIT (measured, BENCH.md §7): one StringReplace
    * node per merge means expression depth = merge count — throughput
    * degrades superlinearly (each merge re-scans the whole wrapped
    * string; 4.9k → 1.7k docs/s from depth 64 → 256) and Catalyst
@@ -814,7 +814,7 @@ object Curation {
    * k-means-centroid seam in [[Similarity.kmeansCentroids]]), so a
    * production vocabulary (10⁴–10⁵ merges) compiles and streams exactly
    * like a 3-merge test. This replaced the StringReplace chain
-   * ([[bpeEncodeChain]]) after measurement (BpeDepthProbe, BENCH.md):
+   * ([[bpeEncodeChain]]) after measurement (BENCH.md §7):
    * the chain's expression depth equals the merge count, whose per-merge
    * full-string re-scan degrades superlinearly (4.9k → 1.7k docs/s from
    * depth 64 → 256) and whose analysis StackOverflows Catalyst at depth

@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /** Distinct word tokens of a text column (case-folded, \W+ split). */
-  def tokensOf(text: Column): Column =
-    array_distinct(array_remove(split(lower(text), "\\W+"), ""))
-
   /**
    * Exact dedup: group by content hash, keep the smallest id as canonical.
    * Scale: one hash-shuffle on a 32-char key; map-side partial agg.
@@ -79,13 +75,6 @@ object Dedup {
         (0 until MinhashA.length).map(i =>
           element_at(col("_sig"), i + 1).as(s"m$i")): _*)
   }
-
-  /** Signature table from an ALREADY-BUILT (id, shingle) row table — lets
-    * a caller that also needs the shingle rows (e.g. [[containmentPairs]])
-    * stage the shingle scan once instead of re-running it per consumer. */
-  def signaturesFromShingleRows(sh: DataFrame, idCol: String): DataFrame =
-    signaturesFromHash(
-      sh.select(col(idCol), baseHash(col("shingle")).as("h")), idCol)
 
   /** Signature table from an ALREADY-BUILT distinct (id, md5-digest `h`)
     * table — the [[containmentPairs]] staging: min-aggregates are

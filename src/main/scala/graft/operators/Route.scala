@@ -63,31 +63,20 @@ object Route {
    * `severity=REJECTED`), then derives `root/anomalies` from the sink
    * read-back. Returns conservation stats from the single heavy pass.
    */
-  private def timed[T](what: String)(body: => T): T = {
-    if (sys.env.contains("GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[route]    $what%-14s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      r
-    } else body
-  }
-
   def apply(scored: DataFrame, root: String): RouteStats = {
     val spark = scored.sparkSession
     val obs = new Observation()
-    timed("heavy-pass") {
-      scored
-        .withColumn("severity",
-          when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
-        .observe(obs,
-          count(lit(1)).as("input_rows"),
-          count(when(col("parse_ok"), 1)).as("routed_rows"),
-          count(when(!col("parse_ok"), 1)).as("rejected_rows"))
-        .selectExpr(sinkColumns :+ "severity": _*)
-        .write.mode("overwrite")
-        .partitionBy("severity")
-        .parquet(s"$root/routed")
-    }
+    scored
+      .withColumn("severity",
+        when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
+      .observe(obs,
+        count(lit(1)).as("input_rows"),
+        count(when(col("parse_ok"), 1)).as("routed_rows"),
+        count(when(!col("parse_ok"), 1)).as("rejected_rows"))
+      .selectExpr(sinkColumns :+ "severity": _*)
+      .write.mode("overwrite")
+      .partitionBy("severity")
+      .parquet(s"$root/routed")
 
     val row = obs.get
     val stats = RouteStats(
@@ -98,7 +87,7 @@ object Route {
     // B3 — anomaly side-table via read-back (reference persists every
     // prediction, anomalous or not: LogProcessorServiceTest.java:506-533).
     // features JSON (G14) is derived here rather than written twice.
-    timed("anomalies") { logs(spark, root)
+    logs(spark, root)
       .select(
         col("id").as("log_id"),
         col("anomaly_score"),
@@ -109,7 +98,6 @@ object Route {
           .as("features"),
         col("processed_at").as("detected_at"))
       .write.mode("overwrite").parquet(s"$root/anomalies")
-    }
 
     stats
   }

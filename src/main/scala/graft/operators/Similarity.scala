@@ -420,7 +420,7 @@ object Similarity {
    * expression tree linearly in k — fine at k=8, Catalyst-hazardous at
    * production k (BENCH.md §7's StringReplace sibling); the native kernel
    * holds the codebook as ONE model-sized reference object, depth O(1) in
-   * k (CentroidDepthProbe measures the sweep), results bit-identical
+   * k (BENCH.md §10.1 has the sweep), results bit-identical
    * (SimilaritySpec pins equality against the literal form).
    */
   def cellColumn(vecCol: Column, cents: Seq[(Long, Seq[Double])]): Column =

@@ -460,7 +460,7 @@ class CurationSpec extends SparkSuite {
     assert(viaExpr == viaChain,
       "expression and chain must agree token-for-token at depth 128")
     // 512 merges: the depth that StackOverflowed the chain's analysis
-    // (BpeDepthProbe) — the expression must plan and run unchanged
+    // (BENCH.md §7) — the expression must plan and run unchanged
     val m512 = (0 until 512).map { i =>
       (s"w${(2 * i) % 64} w${(2 * i + 1) % 64}", s"w${(3 * i) % 64}")
     }

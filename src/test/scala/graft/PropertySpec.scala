@@ -151,6 +151,23 @@ class PropertySpec extends SparkSuite {
     }
   }
 
+  test("winnow kernels refuse null-element token arrays at analysis, " +
+    "not with an NPE mid-task") {
+    import graft.functions.WinnowExprs
+    val df = Seq(Seq("a", null, "b", "c", "d")).toDF("t")
+    Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      WinnowExprs.winnowMd5Windows(_, 2, 2),
+      WinnowExprs.winnowFingerprints(_, 2, 2)).foreach { kernel =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        df.select(kernel($"t")).collect())
+      assert(e.getMessage.contains("without null elements"), e.getMessage)
+      // the callers' array_remove(split(…)) shape is non-null-element
+      val ok = Seq("a b c d").toDF("s")
+        .select(kernel(array_remove(split($"s", "\\s+"), "")))
+      assert(ok.collect().head.getSeq[Any](0).nonEmpty)
+    }
+  }
+
   test("property: RegexCapturePairs equals the two-pass " +
     "arrays_zip(regexp_extract_all g1, g2) form on generated html") {
     val rnd = new scala.util.Random(41)
@@ -402,5 +419,36 @@ class PropertySpec extends SparkSuite {
     assert(got(1L)._3 == got(1L)._2 && got(1L)._4 == 1.0,
       "verbatim duplicate: every window of both copies is flagged")
     assert(got(3L)._3 == 0L)
+  }
+
+  test("property: nearestCentroidId equals the former literal " +
+    "-array_max(array(struct(cosine, -cid))) formulation at k = 1, 8, 64") {
+    val rnd = new scala.util.Random(67)
+    val dim = 16
+    def vec(): Seq[Double] = Seq.fill(dim)(rnd.nextInt(2001) / 1000.0 - 1.0)
+    Seq(1, 8, 64).foreach { k =>
+      val drawn = (0 until k).map(i => (10L + 3 * i, vec()))
+      // k > 1: the last centroid repeats centroid 1's vector under a
+      // smaller id, so that tie must break on the id, not codebook order
+      val cb = if (k == 1) drawn else drawn.init :+ (1L -> drawn(1)._2)
+      val literal = -array_max(array(cb.map { case (cid, cv) =>
+        struct(graft.functions.VectorExprs.cosineSim($"v", typedlit(cv))
+          .as("c"), lit(-cid).as("nc"))
+      }: _*)).getField("nc").cast("long")
+      // random vectors, every centroid itself, and the all-zero vector
+      // (NaN cosine against every centroid)
+      val vs = Seq.fill(300)(vec()) ++ cb.map(_._2) :+ Seq.fill(dim)(0.0)
+      val rows = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        .toDF("id", "v").repartition(2)
+        .select($"id",
+          graft.functions.CentroidExprs.nearestCentroidId($"v", cb),
+          literal)
+        .as[(Long, Long, Long)].collect()
+      assert(rows.length == vs.length)
+      rows.foreach { case (i, got, exp) =>
+        assert(got == exp, s"k=$k vector $i: kernel $got, literal $exp")
+      }
+      if (k > 1) assert(rows.exists(_._2 == 1L), "the tie is exercised")
+    }
   }
 }

@@ -3,25 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole test JVM. */
+/** One shared local session for the whole test JVM, pinned to 4 cores so
+  * plan-shape gates see the same session on any host. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .withExtensions(new GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(cpus = 4)
 }
 
 abstract class SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = TestSpark.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = TestSpark.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }
