@@ -365,7 +365,9 @@ object SparkEntry {
     "q_features_json" -> ((s, dir) =>
       t(s, dir, "documents").select(
         col("doc_id"),
-        Score.featuresJson(col("text"), upper(col("lang")), col("source")).as("features"))
+        Score.featuresJson(length(col("text")), upper(col("lang")), col("source"),
+          Parse.hasException(col("text")), Parse.hasTimeout(col("text")),
+          Parse.hasConnection(col("text"))).as("features"))
         .orderBy("doc_id")),
 
     // D7+I4 — anomaly-repository predicates + ordering

@@ -975,10 +975,51 @@ object Curation {
     // the per-doc signed bucket sums are a pure per-row function; the
     // former explode + groupBy(id, bucket) shuffled every token row
     docs.select(col(idCol),
-        explode(graft.functions.MinhashExprs.hashedBagFeatures(
-          split(lower(col(textCol)), "\\W+"), dim, signed = true)).as("_f"))
+        explode(bagOf(col(textCol), dim, signed = true)).as("_f"))
       .select(col(idCol), col("_f.bucket").as("bucket"),
         col("_f.weight").as("weight"))
+  }
+
+  /** A doc's hashed (bucket, weight) bag over its lower-cased `\W+`
+    * tokens — the [[graft.functions.HashedBagFeatures]] kernel. The one
+    * token → bucket path of every hashed-bag operator and its streaming
+    * twin; unsigned weights are token counts. */
+  private[graft] def bagOf(text: Column, dim: Int,
+                           signed: Boolean = false): Column =
+    graft.functions.MinhashExprs.hashedBagFeatures(
+      split(lower(text), "\\W+"), dim, signed)
+
+  /** Unsigned bag rows (keep…, bucket, n): one row per bucket a doc's
+    * tokens touched, n = how many did — no shuffle. */
+  private def bagRows(docs: DataFrame, textCol: String, dim: Int,
+                      keep: Column*): DataFrame =
+    docs.select(keep :+ explode(bagOf(col(textCol), dim)).as("_f"): _*)
+      .select(col("*"), col("_f.bucket").as("bucket"), col("_f.weight").as("n"))
+      .drop("_f")
+
+  /**
+   * The Laplace log-ratio model behind DSIR and Naive-Bayes: per bucket,
+   * from the bag's per-row numerator / denominator token counts,
+   *
+   *   lr  = ln((num+1)/(Σnum+dim)) − ln((den+1)/(Σden+dim))
+   *   lr0 = the same ratio at zero counts — the floor for a bucket the
+   *         training corpus never produced (scoring a disjoint corpus)
+   *
+   * One groupBy(bucket) + a 1-row totals broadcast; output
+   * (bucket, lr, lr0), ≤ dim rows BY CONSTRUCTION (a parameter, not a
+   * corpus property — what makes every consumer's broadcast safe).
+   */
+  private def logRatioModel(bag: DataFrame, num: Column, den: Column,
+                            dim: Int): DataFrame = {
+    val counts = bag.groupBy(col("bucket"))
+      .agg(sum(num).as("num"), sum(den).as("den"))
+    val totals = counts.agg(sum(col("num")).as("tnum"),
+      sum(col("den")).as("tden"))
+    def lr(c: Column, d: Column): Column =
+      log((c + 1.0) / (col("tnum") + dim)) - log((d + 1.0) / (col("tden") + dim))
+    counts.crossJoin(broadcast(totals))
+      .select(col("bucket"), lr(col("num"), col("den")).as("lr"),
+        lr(lit(0L), lit(0L)).as("lr0"))
   }
 
   /**
@@ -1201,39 +1242,19 @@ object Curation {
    * (here the [[hashFeaturize]] md5 bucket construction, unsigned).
    *
    * `isTarget` marks the in-domain exemplar rows INSIDE the same corpus
-   * frame (e.g. `col("source") === "wiki"`); both models derive from one
-   * (id, bucket) count table, so the whole operator is ONE scan + one
-   * (id, bucket) partial-agg shuffle + two dim-bounded aggregates. The
-   * model join is broadcast BY CONSTRUCTION (dim rows — a parameter,
-   * not a corpus property; contrast the Heaps-unbounded LM vocab where
-   * the hint would be wrong). Output: (id, n_tokens, dsir_weight 4dp).
+   * frame (e.g. `col("source") === "wiki"`); the model and the doc scores
+   * derive from one scan-local bag table, so the whole operator is ONE
+   * scan + one dim-bounded aggregate ([[logRatioModel]]). The model join
+   * is broadcast BY CONSTRUCTION (dim rows — a parameter, not a corpus
+   * property; contrast the Heaps-unbounded LM vocab where the hint would
+   * be wrong). Output: (id, n_tokens, dsir_weight 4dp).
    */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
                   isTarget: Column, dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    // scan-local kernel (graft.functions.HashedBagFeatures, count mode):
-    // per-doc bucket counts are a per-row function — the former explode +
-    // groupBy(id, is_target, bucket) shuffled every token row (guide §2.4)
-    val docBuckets = docs
-      .select(col(idCol), isTarget.as("is_target"),
-        explode(graft.functions.MinhashExprs.hashedBagFeatures(
-          split(lower(col(textCol)), "\\W+"), dim, signed = false)).as("_f"))
-      .select(col(idCol), col("is_target"),
-        col("_f.bucket").as("bucket"), col("_f.weight").as("n"))
-      .localCheckpoint() // one scan feeds both models AND the doc scores
-    val raw = docBuckets.groupBy(col("bucket")).agg(sum(col("n")).as("cr"))
-    val tgt = docBuckets.filter(col("is_target"))
-      .groupBy(col("bucket")).agg(sum(col("n")).as("ct"))
-    // dim-bounded model: log-ratio per bucket, Laplace-smoothed (buckets
-    // unseen in the target get the +1 floor via the left join)
-    val model = raw.join(tgt, Seq("bucket"), "left")
-      .select(col("bucket"), col("cr"), coalesce(col("ct"), lit(0L)).as("ct"))
-    val totals = model.agg(sum(col("cr")).as("rtot"), sum(col("ct")).as("ttot"))
-    val lr = model.crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        (log((col("ct") + 1.0) / (col("ttot") + dim)) -
-         log((col("cr") + 1.0) / (col("rtot") + dim))).as("lr"))
-    docBuckets.join(broadcast(lr), Seq("bucket")) // dim rows by construction
+    val bag = bagRows(docs, textCol, dim, col(idCol), isTarget.as("y"))
+      .localCheckpoint() // one scan feeds the model AND the doc scores
+    bag.join(broadcast(dsirTrain(bag, dim)), Seq("bucket")) // dim rows
       .groupBy(col(idCol))
       .agg(sum(col("n")).as("n_tokens"),
         pround4(sum((col("n") * col("lr")).cast("decimal(28,12)"))
@@ -1363,11 +1384,11 @@ object Curation {
 
   /**
    * The model half of [[dsirWeights]] as a standalone bucket-level table
-   * (bucket, lr) — for consumers that train on one corpus and score
+   * (bucket, lr, lr0) — for consumers that train on one corpus and score
    * another (the streaming gate [[graft.streaming.StreamPipeline
-   * .dsirGateStream]]). Identical arithmetic to dsirWeights' inline model
-   * (same hash, same Laplace smoothing), so scoring the training corpus
-   * through this model reproduces dsirWeights bit-for-bit. The table is
+   * .dsirGateStream]]). The same bag and [[logRatioModel]] dsirWeights
+   * trains (target counts over all counts), so scoring the training
+   * corpus through this model reproduces dsirWeights bit-for-bit. The table is
    * dim-bounded BY CONSTRUCTION (≤ dim rows — a parameter, not a corpus
    * property), which is what makes the one-row broadcast in the streaming
    * consumer safe at any corpus size.
@@ -1375,25 +1396,12 @@ object Curation {
   def dsirModel(docs: DataFrame, idCol: String, textCol: String,
                 isTarget: Column, dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    val h = md5(col("tok"))
-    val counts = docs
-      .select(isTarget.as("is_target"),
-        explode(TextAnalysis.toks(col(textCol))).as("tok"))
-      .select(col("is_target"),
-        (conv(substring(h, 1, 15), 16, 10).cast("long") % dim).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cr"),
-        sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"))
-    val totals = counts.agg(sum(col("cr")).as("rtot"), sum(col("ct")).as("ttot"))
-    counts.crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        (log((col("ct") + 1.0) / (col("ttot") + dim)) -
-         log((col("cr") + 1.0) / (col("rtot") + dim))).as("lr"),
-        // the unseen-bucket (cr=0, ct=0) log-ratio under the same
-        // smoothing — the OOV floor for scoring a disjoint corpus
-        (log(lit(1.0) / (col("ttot") + dim)) -
-         log(lit(1.0) / (col("rtot") + dim))).as("lr0"))
+    dsirTrain(bagRows(docs, textCol, dim, isTarget.as("y")), dim)
   }
+
+  /** Target-over-corpus log-ratios from a bag labelled `y`. */
+  private def dsirTrain(bag: DataFrame, dim: Int): DataFrame =
+    logRatioModel(bag, when(col("y"), col("n")).otherwise(0L), col("n"), dim)
 
   /**
    * KMV (k-minimum-values) distinct-count sketch, build half (Bar-Yossef
@@ -1596,37 +1604,31 @@ object Curation {
    * Classification") that CCNet/LLaMA-style pipelines run as the
    * "looks-like-Wikipedia" quality gate: multinomial NB over hashed
    * unigram features. Training is CLOSED-FORM — per-class hashed token
-   * counts — so the whole fit is one tokenize scan + two dim-bounded
-   * aggregates: no gradient loop, and the model is bounded BY
+   * counts — so the whole fit is one scan-local bag + one dim-bounded
+   * aggregate: no gradient loop, and the model is bounded BY
    * CONSTRUCTION (dim buckets, the [[dsirModel]] shape — never the
-   * Heaps-law hazard of a raw-vocab model).
-   *
-   *   w_b = ln((c⁺_b+1)/(tot⁺+dim)) − ln((c⁻_b+1)/(tot⁻+dim))  (Laplace)
-   *   w0  = the same log-ratio at zero counts — the OOV-bucket floor
-   *         for scoring a disjoint corpus
+   * Heaps-law hazard of a raw-vocab model). w_b / w0 are
+   * [[logRatioModel]]'s lr / lr0 with positive-class counts over
+   * negative-class counts (Laplace; w0 is the OOV-bucket floor).
    *
    * Output: (bucket, w, w0), ≤ dim rows.
    */
   def nbcModel(docs: DataFrame, textCol: String, isPositive: Column,
                dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    val h = md5(col("tok"))
-    val cls = docs
-      .select(isPositive.as("y"),
-        explode(TextAnalysis.toks(col(textCol))).as("tok"))
-      .select(col("y"),
-        (conv(substring(h, 1, 15), 16, 10).cast("long") % dim).as("bucket"))
-      .groupBy(col("bucket"))
-      .agg(sum(when(col("y"), 1L).otherwise(0L)).as("cp"),
-        sum(when(!col("y"), 1L).otherwise(0L)).as("cn"))
-    val totals = cls.agg(sum(col("cp")).as("tp"), sum(col("cn")).as("tn"))
-    cls.crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        (log((col("cp") + 1.0) / (col("tp") + dim)) -
-         log((col("cn") + 1.0) / (col("tn") + dim))).as("w"),
-        (log(lit(1.0) / (col("tp") + dim)) -
-         log(lit(1.0) / (col("tn") + dim))).as("w0"))
+    nbcTrain(bagRows(docs, textCol, dim, isPositive.as("y")), dim)
+      .toDF("bucket", "w", "w0")
   }
+
+  /** Class-conditional log-ratios from a bag labelled `y`. */
+  private def nbcTrain(bag: DataFrame, dim: Int): DataFrame =
+    logRatioModel(bag, when(col("y"), col("n")).otherwise(0L),
+      when(!col("y"), col("n")).otherwise(0L), dim)
+
+  /** The NB doc-count prior ln((n⁺+1)/(n⁻+1)) as one row (prior). */
+  private[graft] def nbcPrior(docs: DataFrame, isPositive: Column): DataFrame =
+    docs.agg(log((sum(when(isPositive, 1L).otherwise(0L)) + 1.0) /
+      (sum(when(!isPositive, 1L).otherwise(0L)) + 1.0)).as("prior"))
 
   /**
    * Hashed Naive-Bayes scoring — trains [[nbcModel]] on the corpus's own
@@ -1636,42 +1638,24 @@ object Curation {
    *
    * (doc-count prior + per-bucket multinomial log-likelihood ratio; the
    * prediction is taken on the 4dp-ROUNDED score so both engines agree
-   * at the decision boundary). Plan: ONE tokenize scan → one
-   * (id, label, bucket) shuffle; the count table feeds BOTH the model
-   * aggregates and the doc scores (localCheckpoint); the model join back
-   * is broadcast BY CONSTRUCTION (dim rows), the prior is a 1-row
-   * broadcast. Per-doc sums are DECIMAL(28,12)-exact (order-independent;
-   * [[dsirWeights]] conventions throughout). Token-less docs are absent
-   * (no features — the caller's gate decides their fate).
+   * at the decision boundary). Plan: ONE scan-local bag table
+   * (localCheckpoint) feeds BOTH the model aggregate and the doc scores;
+   * the model join back is broadcast BY CONSTRUCTION (dim rows), the
+   * prior is a 1-row broadcast. Per-doc sums are DECIMAL(28,12)-exact
+   * (order-independent; [[dsirWeights]] conventions throughout).
+   * Token-less docs are absent (no features — the caller's gate decides
+   * their fate).
    */
   def nbcScore(docs: DataFrame, idCol: String, textCol: String,
                isPositive: Column, dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    val h = md5(col("tok"))
-    val base = docs
-      .select(col(idCol), isPositive.as("y"),
-        explode(TextAnalysis.toks(col(textCol))).as("tok"))
-      .select(col(idCol), col("y"),
-        (conv(substring(h, 1, 15), 16, 10).cast("long") % dim).as("bucket"))
-      .groupBy(col(idCol), col("y"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
+    val bag = bagRows(docs, textCol, dim, col(idCol), isPositive.as("y"))
       .localCheckpoint() // one scan feeds the model AND the doc scores
-    val cls = base.groupBy(col("bucket"))
-      .agg(sum(when(col("y"), col("n")).otherwise(0L)).as("cp"),
-        sum(when(!col("y"), col("n")).otherwise(0L)).as("cn"))
-    val totals = cls.agg(sum(col("cp")).as("tp"), sum(col("cn")).as("tn"))
-    val w = cls.crossJoin(broadcast(totals))
-      .select(col("bucket"),
-        (log((col("cp") + 1.0) / (col("tp") + dim)) -
-         log((col("cn") + 1.0) / (col("tn") + dim))).as("w"))
-    val prior = docs.agg(
-      log((sum(when(isPositive, 1L).otherwise(0L)) + 1.0) /
-          (sum(when(!isPositive, 1L).otherwise(0L)) + 1.0)).as("prior"))
-    base.join(broadcast(w), Seq("bucket")) // dim rows by construction
+    bag.join(broadcast(nbcTrain(bag, dim)), Seq("bucket")) // dim rows
       .groupBy(col(idCol))
       .agg(sum(col("n")).as("n_tokens"),
-        sum((col("n") * col("w")).cast("decimal(28,12)")).as("s"))
-      .crossJoin(broadcast(prior))
+        sum((col("n") * col("lr")).cast("decimal(28,12)")).as("s"))
+      .crossJoin(broadcast(nbcPrior(docs, isPositive)))
       .select(col(idCol), col("n_tokens"),
         TextAnalysis.pround4(col("s").cast("double") + col("prior"))
           .as("nb_score"))

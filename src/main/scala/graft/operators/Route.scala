@@ -66,17 +66,11 @@ object Route {
   def apply(scored: DataFrame, root: String): RouteStats = {
     val spark = scored.sparkSession
     val obs = new Observation()
-    scored
-      .withColumn("severity",
-        when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
-      .observe(obs,
+    writeSink(scored.observe(obs,
         count(lit(1)).as("input_rows"),
         count(when(col("parse_ok"), 1)).as("routed_rows"),
-        count(when(!col("parse_ok"), 1)).as("rejected_rows"))
-      .selectExpr(sinkColumns :+ "severity": _*)
-      .write.mode("overwrite")
-      .partitionBy("severity")
-      .parquet(s"$root/routed")
+        count(when(!col("parse_ok"), 1)).as("rejected_rows")),
+      s"$root/routed")
 
     val row = obs.get
     val stats = RouteStats(
@@ -86,7 +80,9 @@ object Route {
 
     // B3 — anomaly side-table via read-back (reference persists every
     // prediction, anomalous or not: LogProcessorServiceTest.java:506-533).
-    // features JSON (G14) is derived here rather than written twice.
+    // features JSON (G14) is derived here rather than written twice, from
+    // the stored length and flag columns Parse computed over the same
+    // message — no text bytes are read back
     logs(spark, root)
       .select(
         col("id").as("log_id"),
@@ -94,13 +90,29 @@ object Route {
         col("is_anomaly"),
         col("confidence"),
         col("model_version"),
-        Score.featuresJson(col("message"), col("severity"), col("service"))
-          .as("features"),
+        Score.featuresJson(col("message_length"), col("severity"),
+          col("service"), col("has_exception"), col("has_timeout"),
+          col("has_connection")).as("features"),
         col("processed_at").as("detected_at"))
       .write.mode("overwrite").parquet(s"$root/anomalies")
 
     stats
   }
+
+  /**
+   * The one routed-sink write, batch and streaming alike: rejected rows
+   * re-keyed to the `severity=REJECTED` dead-letter partition, rows
+   * projected to [[sinkColumns]], one dynamic-partition parquet write
+   * (overwrite) under `path`.
+   */
+  def writeSink(scored: DataFrame, path: String): Unit =
+    scored
+      .withColumn("severity",
+        when(col("parse_ok"), col("severity")).otherwise(RejectedPartition))
+      .selectExpr(sinkColumns :+ "severity": _*)
+      .write.mode("overwrite")
+      .partitionBy("severity")
+      .parquet(path)
 
   /** Routed (accepted) log records — partition-pruned to skip REJECTED;
     * reconstructs `message` from the sparse `message_trunc` column. */

@@ -93,17 +93,22 @@ object Score {
    * (Java HashMap order is unspecified; we fix one) and built with string
    * concat so the DuckDB oracle can reproduce it byte-for-byte.
    * Note: per the reference (:151-160) these are the ENRICH-side flags
-   * (hasTimeout = G9 "timeout" only), not the ML-side features.
+   * (hasTimeout = G9 "timeout" only), not the ML-side features — the
+   * `Parse.hasException` / `hasTimeout` / `hasConnection` values, passed
+   * in as columns (the sink stores them, so the side-table reads no
+   * text). A null length serializes as 0, a null flag as false.
    */
-  def featuresJson(message: Column, level: Column, service: Column): Column = {
+  def featuresJson(messageLength: Column, level: Column, service: Column,
+                   hasException: Column, hasTimeout: Column,
+                   hasConnection: Column): Column = {
     val b = (c: Column) => when(coalesce(c, lit(false)), "true").otherwise("false")
     concat(
-      lit("{\"messageLength\":"), coalesce(length(message), lit(0)).cast("string"),
+      lit("{\"messageLength\":"), coalesce(messageLength, lit(0)).cast("string"),
       lit(",\"level\":\""), coalesce(level, lit("null")),
       lit("\",\"service\":\""), coalesce(service, lit("null")),
-      lit("\",\"hasException\":"), b(Parse.hasException(message)),
-      lit(",\"hasTimeout\":"), b(Parse.hasTimeout(message)),
-      lit(",\"hasConnection\":"), b(Parse.hasConnection(message)),
+      lit("\",\"hasException\":"), b(hasException),
+      lit(",\"hasTimeout\":"), b(hasTimeout),
+      lit(",\"hasConnection\":"), b(hasConnection),
       lit("}"))
   }
 

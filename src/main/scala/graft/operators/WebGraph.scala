@@ -380,22 +380,6 @@ object WebGraph {
   }
 
   /**
-   * One PageRank power-iteration step over a domain edge list, from the
-   * uniform start pr₀ = 1:
-   *   pr₁(d) = (1−damping) + damping · Σ_{(s→d)} pr₀(s)·w(s→d)/out(s)
-   * with w the edge multiplicity and out(s) = Σ_d w(s→d). Dangling
-   * domains (no outlinks) receive the teleport term only — standard for
-   * a single diagnostic iteration. Relational shape: out-degree is one
-   * aggregate of the (already sublinear) edge table joined back on the
-   * same key — NOT a forced broadcast: the domain table is ~10⁶ rows for
-   * a curated corpus but can reach 10⁹ at full-crawl scale, so the
-   * planner (AQE) picks broadcast vs shuffle from its measured size; the
-   * contribution roll-up is ONE shuffle on dst. Iterating
-   * to convergence is this same job in a loop with the label-propagation
-   * checkpoint pattern ([[Dedup.dedupClusters]]); one step is what the
-   * oracle can pin exactly.
-   */
-  /**
    * Robots-exclusion filtering (RFC 9309 subset): decide per page whether
    * the crawl may keep it, from a rules table (host, rule ∈
    * allow|disallow, path_prefix). Precedence follows the standard:
@@ -475,12 +459,8 @@ object WebGraph {
     // the edge table feeds FOUR plan branches (auth agg, hub join, both
     // domain-universe arms); its lineage is typically the HTML
     // link-extraction scan, which the unmaterialized diamond re-ran per
-    // branch. LAZY persist (not localCheckpoint): the first branch's
-    // stage populates the cache inside the consumer's own action — no
-    // dedicated materialization job, which an A/B measured at ~+0.1 s
-    // per query on these single-step diagnostics
-    val edges = edges0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // branch. localCheckpoint: materialized once, nothing left cached
+    val edges = edges0.localCheckpoint()
     val auth = edges.groupBy(col("dst_domain").as("domain"))
       .agg(sum(col("n_links")).cast("double").as("auth"))
     val hub = edges
@@ -510,9 +490,8 @@ object WebGraph {
    */
   def degreeTable(edges0: DataFrame): DataFrame = {
     // both direction aggregates read the same (typically
-    // extraction-lineage) edge table — lazy persist, see hitsStep
-    val edges = edges0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // extraction-lineage) edge table — staged once, see hitsStep
+    val edges = edges0.localCheckpoint()
     val outd = edges.groupBy(col("src_domain").as("domain"))
       .agg(count(lit(1)).as("out_deg"), sum(col("n_links")).as("out_weight"))
     val ind = edges.groupBy(col("dst_domain").as("domain"))
@@ -525,11 +504,26 @@ object WebGraph {
         coalesce(col("in_weight"), lit(0L)).as("in_weight"))
   }
 
+  /**
+   * One PageRank power-iteration step over a domain edge list, from the
+   * uniform start pr₀ = 1:
+   *   pr₁(d) = (1−damping) + damping · Σ_{(s→d)} pr₀(s)·w(s→d)/out(s)
+   * with w the edge multiplicity and out(s) = Σ_d w(s→d). Dangling
+   * domains (no outlinks) receive the teleport term only — standard for
+   * a single diagnostic iteration. Relational shape: out-degree is one
+   * aggregate of the (already sublinear) edge table joined back on the
+   * same key — NOT a forced broadcast: the domain table is ~10⁶ rows for
+   * a curated corpus but can reach 10⁹ at full-crawl scale, so the
+   * planner (AQE) picks broadcast vs shuffle from its measured size; the
+   * contribution roll-up is ONE shuffle on dst. Iterating
+   * to convergence is this same job in a loop with the label-propagation
+   * checkpoint pattern ([[Dedup.dedupClusters]]); one step is what the
+   * oracle can pin exactly.
+   */
   def pagerankStep(edges0: DataFrame, damping: Double = 0.85): DataFrame = {
-    // four plan branches over the same edge table — lazy persist, see
+    // four plan branches over the same edge table — staged once, see
     // hitsStep
-    val edges = edges0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = edges0.localCheckpoint()
     val out = edges.groupBy(col("src_domain"))
       .agg(sum(col("n_links")).as("outw"))
     val contrib = edges.join(out, Seq("src_domain"))

@@ -49,15 +49,8 @@ object StreamPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val scored = Pipeline.transform(batch, dims._1, dims._2)
-        scored
-          .withColumn("severity",
-            when(col("parse_ok"), col("severity")).otherwise(Route.RejectedPartition))
-          .selectExpr(Route.sinkColumns :+ "severity": _*)
-          .write.mode("overwrite")
-          .partitionBy("severity")
-          .parquet(s"$outRoot/batch=$batchId") // deterministic path per batch
-        ()
+        Route.writeSink(Pipeline.transform(batch, dims._1, dims._2),
+          s"$outRoot/batch=$batchId") // deterministic path per batch
       }
       .start()
   }
@@ -286,47 +279,28 @@ object StreamPipeline {
    * Streaming DSIR gate — the ingest-time twin of
    * [[graft.operators.Curation.dsirWeights]]: documents arriving on the
    * stream are importance-weighted against a model TRAINED ON THE STATIC
-   * CORPUS ([[graft.operators.Curation.dsirModel]] — same hash, same
+   * CORPUS ([[graft.operators.Curation.dsirModel]] — same bag, same
    * Laplace smoothing), so off-domain docs can be gated before landing.
    *
    * STATELESS like [[lmScoreStream]]: the model is ONE row (bucket→lr
    * map + OOV floor) broadcast into every micro-batch — and unlike the
    * LM vocab it is dim-BOUNDED BY CONSTRUCTION (≤ dim entries), so the
    * broadcast is safe at ANY corpus size. Each doc is scored
-   * array-locally: tokens → buckets, then a fold over the DISTINCT
-   * buckets accumulating count(bucket)·lr(bucket) in DECIMAL(28,12) —
-   * the exact arithmetic dsirWeights' order-free decimal sum performs —
-   * so scoring the training corpus through the gate equals the batch
-   * weights bit-for-bit (asserted in StreamingSpec). Buckets absent from
-   * the model (possible only when train and score corpora differ) price
-   * at the smoothed unseen-bucket log-ratio lr0.
+   * array-locally by [[scoreBags]], so scoring the training corpus
+   * through the gate equals the batch weights bit-for-bit (asserted in
+   * StreamingSpec). Buckets absent from the model (possible only when
+   * train and score corpora differ) price at the smoothed unseen-bucket
+   * log-ratio lr0.
    */
   def dsirGateStream(docs: DataFrame, idCol: String, textCol: String,
                      trainDocs: DataFrame, isTarget: Column,
                      dim: Int = 64): DataFrame = {
     import graft.operators.Curation
-    val model = Curation.dsirModel(trainDocs, idCol, textCol, isTarget, dim)
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("lr"))))
-          .as("lrm"),
-        first(col("lr0")).as("lr0"))
+    val model = modelRow(Curation.dsirModel(trainDocs, idCol, textCol,
+        isTarget, dim))
       .localCheckpoint() // train once, not per micro-batch trigger
-    val bucketOf = (t: Column) =>
-      conv(substring(md5(t), 1, 15), 16, 10).cast("long") % dim
-    docs
-      .select(col(idCol),
-        graft.operators.TextAnalysis.toks(col(textCol)).as("_ts"))
-      .filter(size(col("_ts")) > 0)
-      .crossJoin(broadcast(model))
-      .withColumn("_bs", transform(col("_ts"), bucketOf))
-      .select(col(idCol), size(col("_ts")).cast("long").as("n_tokens"),
-        graft.operators.TextAnalysis.pround4(
-          aggregate(array_distinct(col("_bs")),
-            lit(0.0).cast("decimal(28,12)"),
-            (acc, b) => (acc +
-              (size(filter(col("_bs"), x => x === b)).cast("long") *
-                coalesce(element_at(col("lrm"), b), col("lr0")))
-                .cast("decimal(28,12)")).cast("decimal(28,12)"))
-            .cast("double")).as("dsir_weight"))
+    scoreBags(docs, idCol, textCol, model, dim)(s =>
+      graft.operators.TextAnalysis.pround4(s).as("dsir_weight"))
   }
 
   /**
@@ -340,12 +314,11 @@ object StreamPipeline {
    * STATELESS like [[dsirGateStream]] (the same one-row broadcast-model
    * recipe): the model is ONE row (bucket→w map + OOV floor w0 + prior),
    * dim-BOUNDED BY CONSTRUCTION, trained once (localCheckpoint), never
-   * per trigger. Scoring is the identical array-local DECIMAL(28,12)
-   * fold, so scoring the training corpus through the gate equals the
-   * batch scorer bit-for-bit (StreamingSpec). Buckets the training
-   * corpus never produced price at w0 — a case the SELF-trained batch
-   * scorer cannot encounter, but the gate's whole point is a disjoint
-   * arriving corpus.
+   * per trigger. Scoring is the same [[scoreBags]] fold, so scoring the
+   * training corpus through the gate equals the batch scorer bit-for-bit
+   * (StreamingSpec). Buckets the training corpus never produced price at
+   * w0 — a case the SELF-trained batch scorer cannot encounter, but the
+   * gate's whole point is a disjoint arriving corpus.
    */
   def nbcGateStream(docs: DataFrame, idCol: String, textCol: String,
                     trainDocs: DataFrame, isPositive: Column,
@@ -363,32 +336,47 @@ object StreamPipeline {
         classes.getLong(1) > 0,
       s"nbcGateStream needs BOTH classes in the training corpus; got " +
         s"pos=${classes.get(0)}, neg=${classes.get(1)}")
-    val model = Curation.nbcModel(trainDocs, textCol, isPositive, dim)
-      .agg(map_from_entries(collect_list(struct(col("bucket"), col("w"))))
-          .as("wm"),
-        first(col("w0")).as("w0"))
-      .crossJoin(trainDocs.agg(
-        log((sum(when(isPositive, 1L).otherwise(0L)) + 1.0) /
-            (sum(when(!isPositive, 1L).otherwise(0L)) + 1.0)).as("prior")))
+    val model = modelRow(Curation.nbcModel(trainDocs, textCol, isPositive, dim))
+      .crossJoin(Curation.nbcPrior(trainDocs, isPositive))
       .localCheckpoint() // train once, not per micro-batch trigger
-    val bucketOf = (t: Column) =>
-      conv(substring(md5(t), 1, 15), 16, 10).cast("long") % dim
-    docs
-      .select(col(idCol),
-        graft.operators.TextAnalysis.toks(col(textCol)).as("_ts"))
-      .filter(size(col("_ts")) > 0)
-      .crossJoin(broadcast(model))
-      .withColumn("_bs", transform(col("_ts"), bucketOf))
-      .select(col(idCol), size(col("_ts")).cast("long").as("n_tokens"),
-        graft.operators.TextAnalysis.pround4(
-          aggregate(array_distinct(col("_bs")),
-            lit(0.0).cast("decimal(28,12)"),
-            (acc, b) => (acc +
-              (size(filter(col("_bs"), x => x === b)).cast("long") *
-                coalesce(element_at(col("wm"), b), col("w0")))
-                .cast("decimal(28,12)")).cast("decimal(28,12)"))
-            .cast("double") + col("prior")).as("nb_score"))
+    scoreBags(docs, idCol, textCol, model, dim)(s =>
+      graft.operators.TextAnalysis.pround4(s + col("prior")).as("nb_score"))
       .withColumn("nb_pred", col("nb_score") > 0)
+  }
+
+  /** A (bucket, weight, floor) model table as ONE broadcastable row:
+    * `m` (bucket → weight map, ≤ dim entries) and `floor`. */
+  private def modelRow(model: DataFrame): DataFrame =
+    model.toDF("bucket", "w", "w0")
+      .agg(map_from_entries(collect_list(struct(col("bucket"), col("w"))))
+          .as("m"),
+        first(col("w0")).as("floor"))
+
+  /**
+   * The row-local scorer both hashed-bag gates share: the doc's
+   * [[graft.operators.Curation.bagOf]] (bucket, count) array folded
+   * against the broadcast `model` row — Σ count·m[bucket] (floor for a
+   * bucket the model lacks), each term cast to DECIMAL(28,12) exactly as
+   * the batch operators' order-free decimal sum casts it. n_tokens is the
+   * sum of the counts; token-less docs are dropped, as in batch. `score`
+   * finishes the double-valued sum (it may read the model row's other
+   * columns). Output: (id, n_tokens, score).
+   */
+  private def scoreBags(docs: DataFrame, idCol: String, textCol: String,
+                        model: DataFrame, dim: Int)(
+                        score: Column => Column): DataFrame = {
+    val dec = "decimal(28,12)"
+    docs.select(col(idCol),
+        graft.operators.Curation.bagOf(col(textCol), dim).as("_f"))
+      .filter(size(col("_f")) > 0)
+      .crossJoin(broadcast(model))
+      .select(col(idCol),
+        aggregate(col("_f"), lit(0L), (acc, f) => acc + f.getField("weight"))
+          .as("n_tokens"),
+        score(aggregate(col("_f"), lit(0.0).cast(dec), (acc, f) =>
+          (acc + (f.getField("weight") *
+            coalesce(element_at(col("m"), f.getField("bucket")), col("floor")))
+            .cast(dec)).cast(dec)).cast("double")))
   }
 
   /**

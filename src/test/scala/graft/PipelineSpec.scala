@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Route
+import graft.operators.{Parse, Route, Score}
 import graft.plans.Checkpoint
 
 /**
@@ -111,6 +111,23 @@ class PipelineSpec extends SparkSuite {
     assert(Checkpoint.committed(spark, root, "aggregate"))
     val commits = Checkpoint.commits(spark, root)
     assert(commits.filter($"status" === "committed").count() == 2)
+  }
+
+  test("anomaly side-table features come from the stored columns and " +
+    "equal the JSON derived from the sink's message") {
+    val root = tmpDir("pipe-feat")
+    Pipeline.run(spark, pages, dims._1, dims._2, root, t0)
+    val got = spark.read.parquet(s"$root/anomalies")
+      .select($"log_id", $"features")
+    val m = $"message"
+    val fromMessage = Route.logs(spark, root)
+      .select($"id".as("log_id"),
+        Score.featuresJson(length(m), $"severity", $"service",
+          Parse.hasException(m), Parse.hasTimeout(m), Parse.hasConnection(m))
+          .as("features"))
+    assert(got.count() > 0)
+    assert(got.exceptAll(fromMessage).count() == 0)
+    assert(fromMessage.exceptAll(got).count() == 0)
   }
 
   test("upstream re-run invalidates downstream aggregate (stale-sink guard)") {

@@ -23,6 +23,23 @@ class PlanSpec extends SparkSuite {
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The executed plans of EVERY query `df` runs when built and collected
+    * — staging jobs (localCheckpoint) included, which the final plan hides. */
+  private def plansRun(df: => DataFrame): Seq[String] = {
+    val plans = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val rec = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                    e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(rec)
+    try { df.collect(); org.apache.spark.TestBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(rec)
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
   test("shingles and tokenChunks are scan-local: zero Exchange") {
     assert(!planOf(Dedup.shingles(docs, "doc_id", "text", 3)).contains("Exchange"))
     assert(!planOf(Curation.tokenChunks(docs, "doc_id", "text", 10, 2))
@@ -151,6 +168,23 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("Exchange"),
       "per-row bucket weights must not shuffle\n" + p)
     assert(p.contains("hashed_bag_features"), p)
+  }
+
+  test("DSIR / NB: every hashed-bag plan buckets through the " +
+    "HashedBagFeatures kernel — no md5 token recipe, staging jobs included") {
+    val runs = Seq(
+      "dsirModel" -> plansRun(Curation.dsirModel(docs, "doc_id", "text",
+        $"source" === "s0", 32)),
+      "nbcModel" -> plansRun(Curation.nbcModel(docs, "text",
+        $"source" === "s0", 32)),
+      "nbcScore" -> plansRun(Curation.nbcScore(docs, "doc_id", "text",
+        $"source" === "s0", 32)))
+    runs.foreach { case (name, plans) =>
+      assert(plans.exists(_.contains("hashed_bag_features")),
+        s"$name: no plan runs the kernel\n${plans.mkString("\n")}")
+      assert(!plans.exists(_.contains("md5")),
+        s"$name: a plan hashes tokens with md5\n${plans.mkString("\n")}")
+    }
   }
 
   test("BPE pair top-k: array-local pair build, partial-agg shuffle, " +

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.WebGraph
 
@@ -271,6 +272,23 @@ class WebGraphSpec extends SparkSuite {
     assert(got("B") == (("B", 0.0, 12.0)))
     assert(got("C") == (("C", 3.0, 0.0)))
     assert(got("D") == (("D", 3.0, 0.0)))
+  }
+
+  test("graph steps stage their edge table without leaving it cached: " +
+    "after hitsStep, degreeTable and pagerankStep run, the cache is empty") {
+    val edges = Seq(("P", "Q", 4L), ("Q", "R", 1L), ("R", "P", 2L))
+      .toDF("src_domain", "dst_domain", "n_links")
+    val cache = spark.sharedState.cacheManager
+    val cachedEdges = edges.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    Seq[(String, DataFrame => DataFrame)](
+      "hitsStep" -> WebGraph.hitsStep,
+      "degreeTable" -> WebGraph.degreeTable,
+      "pagerankStep" -> (e => WebGraph.pagerankStep(e))).foreach {
+      case (name, step) =>
+        assert(step(edges).collect().length == 3, name)
+        assert(cache.lookupCachedData(cachedEdges).isEmpty,
+          s"$name left its edge table cached")
+    }
   }
 
   test("degree table: distinct-neighbor counts and weight sums per " +
