@@ -2241,14 +2241,14 @@ object SparkEntry {
     })
   )
 
-  /** Deterministic anchor-bearing html for the web-graph queries: two
-    * `<a>` tags per doc targeting site{f(doc_id)}.com (the corpus itself
-    * carries no markup). Mirrored verbatim by the DuckDB oracles. */
   /** SQL twin of [[plantedHtml]] — ONE definition interpolated into all
     * web-graph oracles so the two recipes cannot drift independently. */
   private val plantedHtmlSql: String =
     """'<html><body><a href="http://site' || (doc_id % 7) || '.com/p' || (doc_id % 13) || '">ref ' || (doc_id % 5) || '</a> mid <a href="http://site' || ((doc_id * 3 + 1) % 7) || '.com/q">link ' || (doc_id % 3) || '</a></body></html>'"""
 
+  /** Deterministic anchor-bearing html for the web-graph queries: two
+    * `<a>` tags per doc targeting site{f(doc_id)}.com (the corpus itself
+    * carries no markup). Mirrored verbatim by the DuckDB oracles. */
   private def plantedHtml: Column =
     concat(lit("<html><body><a href=\"http://site"),
       col("doc_id") % 7, lit(".com/p"), col("doc_id") % 13,
@@ -2257,6 +2257,38 @@ object SparkEntry {
       (col("doc_id") * 3 + 1) % 7,
       lit(".com/q\">link "), col("doc_id") % 3,
       lit("</a></body></html>"))
+
+  /** The planted pages (`h`) and their extracted hrefs (`l`): the head of
+    * every link-graph oracle. */
+  private val linkCtes: String =
+    s"""WITH h AS (
+      |  SELECT doc_id, source, $plantedHtmlSql AS html
+      |  FROM documents),
+      |l AS (
+      |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
+      |  FROM h)""".stripMargin
+
+  /** [[linkCtes]] + the domain edge list `eg(src_domain, dst_domain, n)`
+    * (the oracle twin of `WebGraph.domainEdges`). */
+  private val edgeCtes: String =
+    s"""$linkCtes,
+      |eg AS (
+      |  SELECT src_domain, dst_domain, count(*) AS n FROM (
+      |    SELECT source AS src_domain,
+      |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
+      |    FROM l)
+      |  WHERE dst_domain <> '' AND dst_domain <> src_domain
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Out-weight per source domain over [[edgeCtes]]. */
+  private val outdCte: String =
+    "outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1)"
+
+  /** The domain universe of [[edgeCtes]]: every source and target. */
+  private val domsCte: String =
+    """doms AS (
+      |  SELECT DISTINCT src_domain AS domain FROM eg
+      |  UNION SELECT DISTINCT dst_domain FROM eg)""".stripMargin
 
   /** Pages-shaped frame synthesized from the documents table for the
     * driver-pinned pipeline rows (q_rejected_rows, q_lineage_conservation):
@@ -3735,12 +3767,7 @@ object SparkEntry {
         |FROM x ORDER BY doc_id""".stripMargin,
 
     "q_link_graph" ->
-      s"""WITH h AS (
-        |  SELECT doc_id, source, $plantedHtmlSql AS html
-        |  FROM documents),
-        |l AS (
-        |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-        |  FROM h),
+      s"""$linkCtes,
         |e AS (
         |  SELECT source AS src_domain,
         |         lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
@@ -3768,34 +3795,20 @@ object SparkEntry {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     "q_pagerank" ->
-      s"""WITH h AS (
-        |  SELECT doc_id, source, $plantedHtmlSql AS html
-        |  FROM documents),
-        |l AS (
-        |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-        |  FROM h),
-        |eg AS (
-        |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-        |    SELECT source AS src_domain,
-        |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-        |    FROM l)
-        |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-        |  GROUP BY 1, 2),
-        |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
+      s"""$edgeCtes,
+        |$outdCte,
         |contrib AS (
         |  SELECT dst_domain AS domain, sum(n::DOUBLE / outw) AS inflow
         |  FROM eg JOIN outd USING (src_domain) GROUP BY 1),
-        |doms AS (
-        |  SELECT DISTINCT src_domain AS domain FROM eg
-        |  UNION SELECT DISTINCT dst_domain FROM eg)
+        |$domsCte
         |SELECT domain,
         |       floor(((1.0::DOUBLE - 0.85::DOUBLE) + 0.85::DOUBLE * coalesce(inflow, 0.0)) * 10000.0 + 0.5) / 10000.0 AS pr
         |FROM doms LEFT JOIN contrib USING (domain) ORDER BY domain""".stripMargin,
 
-    "q_pagerank_iters" -> pagerankOracleSql(iters = 3),
+    "q_pagerank_iters" -> rankOracleSql("pr", iters = 3),
 
     "q_trustrank" ->
-      trustrankOracleSql(iters = 3, seeds = Seq("src0", "src1", "site0.com")),
+      rankOracleSql("tr", iters = 3, seeds = Seq("src0", "src1", "site0.com")),
 
     "q_spam_mass" ->
       spamMassOracleSql(iters = 3, seeds = Seq("src0", "src1", "site0.com")),
@@ -3803,29 +3816,15 @@ object SparkEntry {
     "q_frontier" -> frontierOracleSql(iters = 3, mBits = 8192,
       kHashes = 4, topK = 20),
 
-    "q_pagerank_conserving" -> pagerankConservingOracleSql(iters = 3),
+    "q_pagerank_conserving" -> rankOracleSql("pr", iters = 3, dangling = true),
 
     "q_hits" ->
-      s"""WITH h AS (
-        |  SELECT doc_id, source, $plantedHtmlSql AS html
-        |  FROM documents),
-        |l AS (
-        |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-        |  FROM h),
-        |eg AS (
-        |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-        |    SELECT source AS src_domain,
-        |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-        |    FROM l)
-        |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-        |  GROUP BY 1, 2),
+      s"""$edgeCtes,
         |a AS (SELECT dst_domain AS domain, sum(n)::DOUBLE AS auth FROM eg GROUP BY 1),
         |hb AS (
         |  SELECT src_domain AS domain, sum(n::DOUBLE * a.auth) AS hub
         |  FROM eg JOIN a ON eg.dst_domain = a.domain GROUP BY 1),
-        |doms AS (
-        |  SELECT DISTINCT src_domain AS domain FROM eg
-        |  UNION SELECT DISTINCT dst_domain FROM eg)
+        |$domsCte
         |SELECT doms.domain,
         |       floor(coalesce(a.auth, 0.0) * 10000.0 + 0.5) / 10000.0 AS auth,
         |       floor(coalesce(hb.hub, 0.0) * 10000.0 + 0.5) / 10000.0 AS hub
@@ -3833,19 +3832,7 @@ object SparkEntry {
         |ORDER BY domain""".stripMargin,
 
     "q_degree_table" ->
-      s"""WITH h AS (
-        |  SELECT doc_id, source, $plantedHtmlSql AS html
-        |  FROM documents),
-        |l AS (
-        |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-        |  FROM h),
-        |eg AS (
-        |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-        |    SELECT source AS src_domain,
-        |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-        |    FROM l)
-        |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-        |  GROUP BY 1, 2),
+      s"""$edgeCtes,
         |o AS (
         |  SELECT src_domain AS domain, count(*)::BIGINT AS out_deg, sum(n)::BIGINT AS out_weight
         |  FROM eg GROUP BY 1),
@@ -4727,118 +4714,89 @@ object SparkEntry {
          |ORDER BY severity""".stripMargin
   )
 
-  /**
-   * DuckDB mirror of Similarity.kmeansCentroids + multi-probe ivfTopK:
-   * `iters` unrolled Lloyd steps (assignment = argmax cosine with cid
-   * tiebreak; means via exact DECIMAL sums — bit-identical to Spark's
-   * regardless of row order), then full-corpus assignment and an
-   * nprobe-cell search for query vec_id=0.
-   */
-  /**
-   * Unrolled DuckDB SQL for [[graft.operators.WebGraph.pagerank]] at a
-   * fixed iteration count: pr0 = 1.0 on the domain universe, then per
-   * round inflow-join + damped update, 4dp floor-rounding on the FINAL
-   * round only (the implementation's contract — intermediates unrounded).
-   * Constants are written as the same IEEE ops the Scala side runs
-   * (1.0 − 0.85 computed, not 0.15 written). The per-domain inflow sum is
-   * the one engine-order float hazard, absorbed by the final pround4 —
-   * identical trade to the single-step q_pagerank oracle.
-   */
-  /** Unrolled DuckDB SQL for [[graft.operators.WebGraph.trustrank]]:
-    * the pagerank rounds with the teleport biased onto the seed set
-    * (uniform share over seeds, zero elsewhere), t₀ = s. */
-  private def trustrankOracleSql(iters: Int, seeds: Seq[String]): String = {
+  /** The rank oracles' shared preamble: the link-edge CTEs, the
+    * out-weights `outd` and the domain universe `doms`. */
+  private val rankPreamble: String = s"$edgeCtes,\n$outdCte,\n$domsCte"
+
+  /** TrustRank's teleport term: uniform share over the seeds, zero
+    * elsewhere (the oracle twin of `WebGraph.seedTeleport`). */
+  private def seedTeleportSql(seeds: Seq[String]): String = {
     val seedList = seeds.map(s => s"'$s'").mkString(", ")
-    val share = s"(1.0::DOUBLE / ${seeds.size})"
-    val tele = s"(CASE WHEN domain IN ($seedList) THEN $share ELSE 0.0::DOUBLE END)"
-    val rounds = (1 to iters).map { i =>
-      s"""inf$i AS (
-         |  SELECT dst_domain AS domain, sum(tr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN tr${i - 1} ON tr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |tr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) * $tele + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS tr
-         |  FROM doms LEFT JOIN inf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH h AS (
-       |  SELECT doc_id, source, $plantedHtmlSql AS html
-       |  FROM documents),
-       |l AS (
-       |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-       |  FROM h),
-       |eg AS (
-       |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-       |    SELECT source AS src_domain,
-       |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-       |    FROM l)
-       |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-       |  GROUP BY 1, 2),
-       |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
-       |doms AS (
-       |  SELECT DISTINCT src_domain AS domain FROM eg
-       |  UNION SELECT DISTINCT dst_domain FROM eg),
-       |tr0 AS (SELECT domain, $tele AS tr FROM doms),
-       |$rounds
-       |SELECT domain, floor(tr * 10000.0 + 0.5) / 10000.0 AS tr
-       |FROM tr$iters ORDER BY domain""".stripMargin
+    s"(CASE WHEN domain IN ($seedList) THEN (1.0::DOUBLE / ${seeds.size}) ELSE 0.0::DOUBLE END)"
   }
 
   /**
-   * Spam-mass oracle: [[pagerankOracleSql]]'s rounds (pr, `pinf`) and
-   * [[trustrankOracleSql]]'s rounds (tr, `tinf`) unrolled over the SAME
-   * edge CTEs, both floor-rounded to their published 4dp values, then
-   * m = (pr − n·tr)/pr with n = |doms| — mirroring
-   * `WebGraph.spamMass`'s composition of the two published vectors.
+   * `iters` unrolled rounds of the damped rank update over
+   * [[rankPreamble]] — the oracle twin of `WebGraph.powerIteration`:
+   * round i joins `$v{i-1}` to the out-weights into the inflow CTE
+   * `$inf$i`, then `$v$i` = (1 − 0.85)·teleport + 0.85·inflow. `tele` is
+   * the teleport factor as written after (1 − 0.85): empty for the uniform
+   * 1.0, which multiplies out. With `dangling`, each round first sums the
+   * previous vector over the domains without out-links (`dm$i`) and
+   * spreads it uniformly — arithmetic order mirrors the Scala side
+   * (inflow + dmass/n, then damped). Constants are written as the same
+   * IEEE ops the Scala side runs (1.0 − 0.85 computed, not 0.15 written);
+   * the per-domain inflow sum is the one engine-order float hazard,
+   * absorbed by the final 4dp floor-rounding (intermediates unrounded).
+   */
+  private def rankRounds(inf: String, v: String, tele: String, iters: Int,
+                         dangling: Boolean = false): String =
+    (1 to iters).map { i =>
+      val prev = s"$v${i - 1}"
+      val dm = if (!dangling) "" else
+        s"""dm$i AS (
+           |  SELECT coalesce(sum($v), 0.0::DOUBLE) AS dmass FROM $prev
+           |  WHERE domain NOT IN (SELECT src_domain FROM outd)),
+           |""".stripMargin
+      val update = if (!dangling)
+        s"((1.0::DOUBLE - 0.85::DOUBLE)$tele + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS $v"
+      else
+        s"""((1.0::DOUBLE - 0.85::DOUBLE)$tele + 0.85::DOUBLE *
+           |          (coalesce(inflow, 0.0::DOUBLE)
+           |           + (SELECT dmass FROM dm$i) / (SELECT count(*) FROM doms))) AS $v""".stripMargin
+      s"""$dm$inf$i AS (
+         |  SELECT dst_domain AS domain, sum($v * n::DOUBLE / outw) AS inflow
+         |  FROM eg JOIN outd USING (src_domain)
+         |       JOIN $prev ON $prev.domain = eg.src_domain
+         |  GROUP BY 1),
+         |$v$i AS (
+         |  SELECT doms.domain,
+         |         $update
+         |  FROM doms LEFT JOIN $inf$i USING (domain))""".stripMargin
+    }.mkString(",\n")
+
+  /**
+   * Unrolled DuckDB SQL for one rank vector at a fixed iteration count:
+   * `${v}0` = the teleport on the domain universe, [[rankRounds]], 4dp
+   * floor-rounding on the FINAL round only (the implementation's
+   * contract). No seeds = `WebGraph.pagerank` (pr₀ = 1.0), or with
+   * `dangling` `WebGraph.pagerankConserving`; seeds =
+   * `WebGraph.trustrank` (t₀ = s).
+   */
+  private def rankOracleSql(v: String, iters: Int, seeds: Seq[String] = Nil,
+                            dangling: Boolean = false): String = {
+    val tele = if (seeds.isEmpty) None else Some(seedTeleportSql(seeds))
+    s"""$rankPreamble,
+       |${v}0 AS (SELECT domain, ${tele.getOrElse("1.0::DOUBLE")} AS $v FROM doms),
+       |${rankRounds("inf", v, tele.fold("")(t => s" * $t"), iters, dangling)}
+       |SELECT domain, floor($v * 10000.0 + 0.5) / 10000.0 AS $v
+       |FROM $v$iters ORDER BY domain""".stripMargin
+  }
+
+  /**
+   * Spam-mass oracle: the pagerank rounds (pr, `pinf`) and the trustrank
+   * rounds (tr, `tinf`) unrolled over ONE preamble, both floor-rounded to
+   * their published 4dp values, then m = (pr − n·tr)/pr with n = |doms| —
+   * mirroring `WebGraph.spamMass`'s composition of the two published
+   * vectors.
    */
   private def spamMassOracleSql(iters: Int, seeds: Seq[String]): String = {
-    val seedList = seeds.map(s => s"'$s'").mkString(", ")
-    val share = s"(1.0::DOUBLE / ${seeds.size})"
-    val tele = s"(CASE WHEN domain IN ($seedList) THEN $share ELSE 0.0::DOUBLE END)"
-    val prRounds = (1 to iters).map { i =>
-      s"""pinf$i AS (
-         |  SELECT dst_domain AS domain, sum(pr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN pr${i - 1} ON pr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS pr
-         |  FROM doms LEFT JOIN pinf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
-    val trRounds = (1 to iters).map { i =>
-      s"""tinf$i AS (
-         |  SELECT dst_domain AS domain, sum(tr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN tr${i - 1} ON tr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |tr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) * $tele + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS tr
-         |  FROM doms LEFT JOIN tinf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH h AS (
-       |  SELECT doc_id, source, $plantedHtmlSql AS html
-       |  FROM documents),
-       |l AS (
-       |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-       |  FROM h),
-       |eg AS (
-       |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-       |    SELECT source AS src_domain,
-       |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-       |    FROM l)
-       |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-       |  GROUP BY 1, 2),
-       |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
-       |doms AS (
-       |  SELECT DISTINCT src_domain AS domain FROM eg
-       |  UNION SELECT DISTINCT dst_domain FROM eg),
+    val tele = seedTeleportSql(seeds)
+    s"""$rankPreamble,
        |pr0 AS (SELECT domain, 1.0::DOUBLE AS pr FROM doms),
        |tr0 AS (SELECT domain, $tele AS tr FROM doms),
-       |$prRounds,
-       |$trRounds,
+       |${rankRounds("pinf", "pr", "", iters)},
+       |${rankRounds("tinf", "tr", s" * $tele", iters)},
        |prf AS (SELECT domain, floor(pr * 10000.0 + 0.5) / 10000.0 AS pr FROM pr$iters),
        |trf AS (SELECT domain, floor(tr * 10000.0 + 0.5) / 10000.0 AS tr FROM tr$iters)
        |SELECT prf.domain AS domain, prf.pr AS pr, trf.tr AS tr,
@@ -4846,23 +4804,12 @@ object SparkEntry {
        |FROM prf JOIN trf USING (domain) ORDER BY domain""".stripMargin
   }
 
-  /** Frontier oracle: [[pagerankOracleSql]]'s rounds over the planted
-    * edges + the bloom bits/probe CTEs over the seen rule (url ends /q
-    * or in an even digit) + unseen-join-rank — mirroring
-    * `WebGraph.frontierRank`'s composition. */
+  /** Frontier oracle: the pagerank rounds over the planted edges + the
+    * bloom bits/probe CTEs over the seen rule (url ends /q or in an even
+    * digit) + unseen-join-rank — mirroring `WebGraph.frontierRank`'s
+    * composition. */
   private def frontierOracleSql(iters: Int, mBits: Int, kHashes: Int,
                                 topK: Int): String = {
-    val prRounds = (1 to iters).map { i =>
-      s"""pinf$i AS (
-         |  SELECT dst_domain AS domain, sum(pr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN pr${i - 1} ON pr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS pr
-         |  FROM doms LEFT JOIN pinf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
     val bitRows = (0 until kHashes).map { j =>
       val a = graft.operators.Dedup.MinhashA(j)
       val b = graft.operators.Dedup.MinhashB(j)
@@ -4873,25 +4820,9 @@ object SparkEntry {
       val b = graft.operators.Dedup.MinhashB(j)
       s"SELECT url, (($a * h + $b) % 2147483647) % $mBits AS bit FROM phh"
     }.mkString("\n  UNION ALL ")
-    s"""WITH h AS (
-       |  SELECT doc_id, source, $plantedHtmlSql AS html
-       |  FROM documents),
-       |l AS (
-       |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-       |  FROM h),
-       |eg AS (
-       |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-       |    SELECT source AS src_domain,
-       |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-       |    FROM l)
-       |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-       |  GROUP BY 1, 2),
-       |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
-       |doms AS (
-       |  SELECT DISTINCT src_domain AS domain FROM eg
-       |  UNION SELECT DISTINCT dst_domain FROM eg),
+    s"""$rankPreamble,
        |pr0 AS (SELECT domain, 1.0::DOUBLE AS pr FROM doms),
-       |$prRounds,
+       |${rankRounds("pinf", "pr", "", iters)},
        |prf AS (SELECT domain, floor(pr * 10000.0 + 0.5) / 10000.0 AS pr FROM pr$iters),
        |cand AS (
        |  SELECT DISTINCT href AS url,
@@ -4920,101 +4851,6 @@ object SparkEntry {
        |ORDER BY priority DESC, url LIMIT $topK""".stripMargin
   }
 
-  private def pagerankOracleSql(iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""inf$i AS (
-         |  SELECT dst_domain AS domain, sum(pr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN pr${i - 1} ON pr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) + 0.85::DOUBLE * coalesce(inflow, 0.0::DOUBLE)) AS pr
-         |  FROM doms LEFT JOIN inf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH h AS (
-       |  SELECT doc_id, source, $plantedHtmlSql AS html
-       |  FROM documents),
-       |l AS (
-       |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-       |  FROM h),
-       |eg AS (
-       |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-       |    SELECT source AS src_domain,
-       |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-       |    FROM l)
-       |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-       |  GROUP BY 1, 2),
-       |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
-       |doms AS (
-       |  SELECT DISTINCT src_domain AS domain FROM eg
-       |  UNION SELECT DISTINCT dst_domain FROM eg),
-       |pr0 AS (SELECT domain, 1.0::DOUBLE AS pr FROM doms),
-       |$rounds
-       |SELECT domain, floor(pr * 10000.0 + 0.5) / 10000.0 AS pr
-       |FROM pr$iters ORDER BY domain""".stripMargin
-  }
-
-  /**
-   * Unrolled DuckDB SQL for [[graft.operators.WebGraph.pagerankConserving]]:
-   * the [[pagerankOracleSql]] rounds plus, per round, a 1-row dangling-mass
-   * scalar (sum of the previous round's pr over domains with no outlinks)
-   * redistributed uniformly — arithmetic order mirrors the Scala side
-   * (inflow + dmass/n, then damped), final round 4dp only.
-   */
-  private def pagerankConservingOracleSql(iters: Int): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""dm$i AS (
-         |  SELECT coalesce(sum(pr), 0.0::DOUBLE) AS dmass FROM pr${i - 1}
-         |  WHERE domain NOT IN (SELECT src_domain FROM outd)),
-         |inf$i AS (
-         |  SELECT dst_domain AS domain, sum(pr * n::DOUBLE / outw) AS inflow
-         |  FROM eg JOIN outd USING (src_domain)
-         |       JOIN pr${i - 1} ON pr${i - 1}.domain = eg.src_domain
-         |  GROUP BY 1),
-         |pr$i AS (
-         |  SELECT doms.domain,
-         |         ((1.0::DOUBLE - 0.85::DOUBLE) + 0.85::DOUBLE *
-         |          (coalesce(inflow, 0.0::DOUBLE)
-         |           + (SELECT dmass FROM dm$i) / (SELECT count(*) FROM doms))) AS pr
-         |  FROM doms LEFT JOIN inf$i USING (domain))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH h AS (
-       |  SELECT doc_id, source, $plantedHtmlSql AS html
-       |  FROM documents),
-       |l AS (
-       |  SELECT source, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href="([^"]*)"[^>]*>([^<]*)</a>', 1)) AS href
-       |  FROM h),
-       |eg AS (
-       |  SELECT src_domain, dst_domain, count(*) AS n FROM (
-       |    SELECT source AS src_domain,
-       |           lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain
-       |    FROM l)
-       |  WHERE dst_domain <> '' AND dst_domain <> src_domain
-       |  GROUP BY 1, 2),
-       |outd AS (SELECT src_domain, sum(n) AS outw FROM eg GROUP BY 1),
-       |doms AS (
-       |  SELECT DISTINCT src_domain AS domain FROM eg
-       |  UNION SELECT DISTINCT dst_domain FROM eg),
-       |pr0 AS (SELECT domain, 1.0::DOUBLE AS pr FROM doms),
-       |$rounds
-       |SELECT domain, floor(pr * 10000.0 + 0.5) / 10000.0 AS pr
-       |FROM pr$iters ORDER BY domain""".stripMargin
-  }
-
-  /**
-   * Unrolled DuckDB SQL for [[graft.operators.Curation.bpeTrain]] at a
-   * fixed round count. The Scala side's greedy left-to-right fold is
-   * replayed relationally per round: candidate positions (pair matches)
-   * split into runs of consecutive positions, and within each run the
-   * 1st, 3rd, ... merge (exactly the fold's alternation — a just-merged
-   * token can't re-match t1); positions consumed by a preceding merge are
-   * dropped and the survivors renumbered. Pair selection orders by
-   * (count desc, t1, t2) — the components, not their concatenation, which
-   * is ambiguous once merged tokens contain the joiner.
-   */
-  /** DSIR hashed-unigram importance weights (no final ORDER BY so the
-    * block can nest as a CTE body in the Gumbel-selection oracle). */
   /** Snapshot-diff oracle shared by the direct and stored-artifact
     * variants (the roundtrip must not change a single row). */
   private val snapshotDiffOracle: String =
@@ -5033,8 +4869,6 @@ object SparkEntry {
       |FROM o FULL OUTER JOIN n ON o.url_id = n.url_id
       |ORDER BY url_id""".stripMargin
 
-  /** Shared CTE chain for the KMV-sketch oracles: distinct (source,
-    * 48-bit token hash) pairs, then the per-source bottom-32 sketch. */
   /** Shared CMS CTE chain (mirrors `Sketches.cmsSketch`): tokens →
     * 48-bit base hash reduced into the Minhash prime field → d affine
     * row hashes (`rb`) → per-source registers `sk`. The globally-built
@@ -5120,6 +4954,8 @@ object SparkEntry {
        |  FROM hfin)""".stripMargin
   }
 
+  /** Shared CTE chain for the KMV-sketch oracles: distinct (source,
+    * 48-bit token hash) pairs, then the per-source bottom-32 sketch. */
   private val kmvCtes: String =
     """WITH tok AS (
       |  SELECT source, unnest(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS tok
@@ -5164,6 +5000,8 @@ object SparkEntry {
       |         floor((CAST(sum(CAST(n * w AS DECIMAL(28,12))) AS DOUBLE) + (SELECT prior FROM pr)) * 10000.0 + 0.5) / 10000.0 AS nb_score
       |  FROM db JOIN w USING (bucket) GROUP BY doc_id)""".stripMargin
 
+  /** DSIR hashed-unigram importance weights (no final ORDER BY so the
+    * block can nest as a CTE body in the Gumbel-selection oracle). */
   private val dsirWeightsSql: String =
     """WITH tokf AS (
       |  SELECT doc_id, source = 'src0' AS is_target,
@@ -5232,6 +5070,17 @@ object SparkEntry {
        |$rounds""".stripMargin
   }
 
+  /**
+   * Unrolled DuckDB SQL for [[graft.operators.Curation.bpeTrain]] at a
+   * fixed round count. The Scala side's greedy left-to-right fold is
+   * replayed relationally per round: candidate positions (pair matches)
+   * split into runs of consecutive positions, and within each run the
+   * 1st, 3rd, ... merge (exactly the fold's alternation — a just-merged
+   * token can't re-match t1); positions consumed by a preceding merge are
+   * dropped and the survivors renumbered. Pair selection orders by
+   * (count desc, t1, t2) — the components, not their concatenation, which
+   * is ambiguous once merged tokens contain the joiner.
+   */
   private def bpeTrainOracleSql(iters: Int): String = {
     val union = (1 to iters).map(r =>
       s"SELECT $r::BIGINT AS round, t1, t2, c FROM sel$r")
@@ -5304,6 +5153,13 @@ object SparkEntry {
       |         n * (s11 * s2y - s12 * s1y) - s1 * (s1 * s2y - s1y * s2) + sy * (s1 * s12 - s11 * s2) AS det2
       |  FROM mom)""".stripMargin
 
+  /**
+   * DuckDB mirror of Similarity.kmeansCentroids + multi-probe ivfTopK:
+   * `iters` unrolled Lloyd steps (assignment = argmax cosine with cid
+   * tiebreak; means via exact DECIMAL sums — bit-identical to Spark's
+   * regardless of row order), then full-corpus assignment and an
+   * nprobe-cell search for query vec_id=0.
+   */
   private def ivfOracleSql(k: Int, iters: Int, sampleN: Long, nprobe: Int,
                            topK: Int): String = {
     val ctes = kmeansCellsCtes(k, iters, sampleN) ++ Seq(
@@ -5484,11 +5340,6 @@ object SparkEntry {
       base + "\nSELECT event_id, anomaly_score, is_anomaly, confidence FROM c ORDER BY event_id"
   }
 
-  /**
-   * Quality-score SQL mirroring TextAnalysis exactly, including the
-   * engine-portable floor-based rounding (see TextAnalysis.pround4 —
-   * `round(double)` tie-breaking differs between Spark and DuckDB).
-   */
   /** Quality-score CTE chain: `qb`, `qr`, `qual(doc_id, punct_ratio,
     * stopword_ratio, quality)` — shared by q_quality, q_cluster_keeper and
     * q_weighted_sample so the formula cannot drift between oracles. */
@@ -5513,6 +5364,11 @@ object SparkEntry {
       |                      + 0.3 * least(stopword_ratio / 0.4, 1.0)) * 10000.0 + 0.5) / 10000.0 END AS quality
       |  FROM qr)""".stripMargin
 
+  /**
+   * Quality-score SQL mirroring TextAnalysis exactly, including the
+   * engine-portable floor-based rounding (see TextAnalysis.pround4 —
+   * `round(double)` tie-breaking differs between Spark and DuckDB).
+   */
   private def qualitySql: String =
     s"WITH $qualityCtes\nSELECT doc_id, punct_ratio, stopword_ratio, quality FROM qual ORDER BY doc_id"
 

@@ -48,14 +48,6 @@ object Dedup {
   def baseHashOfDigest(dig: Column): Column =
     pmod(conv(substring(dig, 1, 15), 16, 10).cast("long"), lit(MinhashP))
 
-  /**
-   * MinHash + LSH banding over word n-gram shingles, fully relational:
-   * shingle rows → one base hash each → groupBy(id) with 8 min-aggregates
-   * (single shuffle, map-side partial min) → 4 band keys of 2 rows each →
-   * (band, band_key, id) bucket table. Docs sharing any band key are
-   * candidates; bucket sizes stay bounded (the LSH guarantee), never an
-   * all-pairs product.
-   */
   /** MinHash signature table: (id, m0..m7), one row per doc — ZERO
     * shuffle: the 8 permutation minima are a pure per-row function of the
     * doc's own shingles, computed by the scan-local
@@ -126,6 +118,14 @@ object Dedup {
       .withColumnRenamed("col", "band_key")
       .select(col("band"), col("band_key"), col(idCol))
 
+  /**
+   * MinHash + LSH banding over word n-gram shingles, fully relational:
+   * shingle rows → one base hash each → groupBy(id) with 8 min-aggregates
+   * (single shuffle, map-side partial min) → 4 band keys of 2 rows each →
+   * (band, band_key, id) bucket table. Docs sharing any band key are
+   * candidates; bucket sizes stay bounded (the LSH guarantee), never an
+   * all-pairs product.
+   */
   def minhashBuckets(docs: DataFrame, idCol: String, textCol: String,
                      n: Int = 3): DataFrame =
     bucketsFromSignatures(minhashSignatures(docs, idCol, textCol, n), idCol)
@@ -596,15 +596,6 @@ object Dedup {
       .distinct()
   }
 
-  /**
-   * Word n-gram shingles as a relational table (id, shingle), distinct per
-   * doc. Built ARRAY-LOCALLY (transform over the token array) — zero
-   * shuffle, zero per-doc window sort; the former posexplode+lead()+Window
-   * formulation shuffled every token row and sorted per doc, and its
-   * recomputation across the Jaccard plan's branches dominated the query.
-   * Output is identical to the window formulation (the DuckDB oracle keeps
-   * the lead() form and matches).
-   */
   /** Per-row distinct word n-gram ARRAY (the scan-local builder behind
     * [[shingles]]; exposed for stateless per-row consumers like the
     * streaming contamination gate). */
@@ -651,6 +642,15 @@ object Dedup {
       element_at(transform(array(hsCol), hs => bandsOf(hs)), 1))
   }
 
+  /**
+   * Word n-gram shingles as a relational table (id, shingle), distinct per
+   * doc. Built ARRAY-LOCALLY (transform over the token array) — zero
+   * shuffle, zero per-doc window sort; the former posexplode+lead()+Window
+   * formulation shuffled every token row and sorted per doc, and its
+   * recomputation across the Jaccard plan's branches dominated the query.
+   * Output is identical to the window formulation (the DuckDB oracle keeps
+   * the lead() form and matches).
+   */
   def shingles(docs: DataFrame, idCol: String, textCol: String, n: Int = 3,
                carryCols: Seq[String] = Nil): DataFrame =
     // carryCols ride along in the SAME scan — a consumer that needs e.g.
@@ -764,17 +764,8 @@ object Dedup {
     // bytes still flow through md5 — the md5 recipe's documented price
     // (the different-hash-family throughput twin is
     // [[winnowedDupSpansFast]]).
-    val fps = graft.functions.WinnowExprs.winnowMd5Windows(toks, k, w)
-    val full = docs.select(col(idCol), explode(fps).as("h"))
-    val df = full.groupBy(col("h"))
-      .agg(count_distinct(col(idCol)).as("df"))
-    full.join(df, Seq("h"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"),
-        graft.operators.TextAnalysis.pround4(
-          sum(when(col("df") >= 2, 1L).otherwise(0L)).cast("double")
-            / count(lit(1))).as("dup_frac"))
+    dupRollup(docs, idCol,
+      graft.functions.WinnowExprs.winnowMd5Windows(toks, k, w))
   }
 
   /**
@@ -806,17 +797,8 @@ object Dedup {
                            k: Int = 16, w: Int = 8): DataFrame = {
     require(k >= 1 && w >= 1, "need k >= 1 and w >= 1")
     val toks = array_remove(split(col(textCol), "\\s+"), "")
-    val fps = graft.functions.WinnowExprs.winnowFingerprints(toks, k, w)
-    val full = docs.select(col(idCol), explode(fps).as("h"))
-    val df = full.groupBy(col("h"))
-      .agg(count_distinct(col(idCol)).as("df"))
-    full.join(df, Seq("h"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"),
-        graft.operators.TextAnalysis.pround4(
-          sum(when(col("df") >= 2, 1L).otherwise(0L)).cast("double")
-            / count(lit(1))).as("dup_frac"))
+    dupRollup(docs, idCol,
+      graft.functions.WinnowExprs.winnowFingerprints(toks, k, w))
   }
 
   /**
@@ -913,18 +895,29 @@ object Dedup {
     // per candidate position plus a concat_ws(slice)+md5 per surviving
     // window, each in its own lambda frame; the kernel runs the identical
     // sample-then-digest construction in one codegen pass
-    val windows = graft.functions.WindowHashExprs.sampledWindowHashes(
-      split(col(textCol), "\\s+"), window, stride)
-    val full = docs.select(col(idCol), explode(windows).as("h"))
+    dupRollup(docs, idCol, graft.functions.WindowHashExprs
+      .sampledWindowHashes(split(col(textCol), "\\s+"), window, stride))
+  }
+
+  /**
+   * The window-dedup df roll-up shared by [[substringDupSpans]],
+   * [[winnowedDupSpans]] and [[winnowedDupSpansFast]]: one row per
+   * (doc, selected window hash), each hash's cross-doc document frequency
+   * (one hash-keyed shuffle), joined back and rolled up per doc to
+   * (n_windows, n_dup = windows with df ≥ 2, dup_frac 4dp). Docs selecting
+   * no window are absent.
+   */
+  private def dupRollup(docs: DataFrame, idCol: String,
+                        hashes: Column): DataFrame = {
+    val full = docs.select(col(idCol), explode(hashes).as("h"))
     val df = full.groupBy(col("h"))
       .agg(count_distinct(col(idCol)).as("df"))
+    val nDup = sum(when(col("df") >= 2, 1L).otherwise(0L))
     full.join(df, Seq("h"))
       .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_windows"),
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_dup"),
+      .agg(count(lit(1)).as("n_windows"), nDup.as("n_dup"),
         graft.operators.TextAnalysis.pround4(
-          sum(when(col("df") >= 2, 1L).otherwise(0L)).cast("double")
-            / count(lit(1))).as("dup_frac"))
+          nDup.cast("double") / count(lit(1))).as("dup_frac"))
   }
 
   /**

@@ -83,7 +83,11 @@ object Exports {
    */
   def upsertByKey(spark: SparkSession, tableDir: String, batch: DataFrame,
                   keyCol: String, partitionCol: String): Unit = {
-    val exists = new java.io.File(tableDir).exists()
+    // asked of the path's own FileSystem, so URI table paths (`file:/…`,
+    // `hdfs://…`) are found as well as plain local ones
+    val path = new org.apache.hadoop.fs.Path(tableDir)
+    val exists = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(path)
     if (!exists) {
       batch.write.partitionBy(partitionCol).parquet(tableDir)
     } else {

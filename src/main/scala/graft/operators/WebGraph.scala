@@ -118,77 +118,106 @@ object WebGraph {
 
   /**
    * PageRank iterated to a fixed number of power steps from the uniform
-   * start, unrounded between iterations (only the output is 4dp-rounded).
-   * Same relational shape as [[pagerankStep]] per round; the edge table
-   * with out-degrees and the domain universe are materialized ONCE
-   * (`localCheckpoint` — the label-propagation lineage pattern,
-   * [[Dedup.dedupClusters]]), and each round's rank table is checkpointed
-   * so lineage stays constant-depth across iterations.
+   * start pr₀ = 1, unrounded between iterations (only the output is
+   * 4dp-rounded):
+   *   pr_{k+1}(d) = (1−damping) + damping · Σ_{(s→d)} pr_k(s)·w(s→d)/out(s)
+   * with w the edge multiplicity and out(s) = Σ_d w(s→d). One
+   * [[powerIteration]] with the uniform teleport; staging per
+   * [[rankStage]], each round's rank table checkpointed so lineage stays
+   * constant-depth across iterations.
    *
-   * DANGLING-MASS SEMANTICS (deliberate, inherited from [[pagerankStep]]
-   * every round): a dangling domain (in-links but no out-links) receives
-   * rank but redistributes none — its damped mass LEAKS each iteration
-   * rather than being spread uniformly as in standard power iteration, so
-   * on graphs with dangling domains the total rank mass shrinks toward
-   * the teleport floor and iterated ranks sit systematically below the
-   * mass-conserving formulation (WebGraphSpec pins both: conservation on
-   * a dangling-free cycle, measured leak on a graph with a sink). This is
-   * the "leaked PageRank" variant, cheaper by one aggregate-and-broadcast
-   * per round. For a single round the difference is rank-order-neutral
-   * (uniform redistribution adds the same constant to every node); over
-   * multiple rounds the constant feeds back through the graph and
-   * orderings can drift, so use a mass-conserving implementation when
-   * absolute rank values — or deep-iteration orderings on dangling-heavy
-   * graphs — are the product.
+   * DANGLING-MASS SEMANTICS (deliberate): a dangling domain (in-links but
+   * no out-links) receives rank but redistributes none — its damped mass
+   * LEAKS each iteration rather than being spread uniformly as in
+   * standard power iteration, so on graphs with dangling domains the
+   * total rank mass shrinks toward the teleport floor and iterated ranks
+   * sit systematically below the mass-conserving formulation
+   * (WebGraphSpec pins both: conservation on a dangling-free cycle,
+   * measured leak on a graph with a sink). This is the "leaked PageRank"
+   * variant, cheaper by one aggregate-and-broadcast per round. For a
+   * single round the difference is rank-order-neutral (uniform
+   * redistribution adds the same constant to every node); over multiple
+   * rounds the constant feeds back through the graph and orderings can
+   * drift, so use [[pagerankConserving]] when absolute rank values — or
+   * deep-iteration orderings on dangling-heavy graphs — are the product.
    */
   def pagerank(edges: DataFrame, iters: Int,
                damping: Double = 0.85): DataFrame = {
-    val (withOut, doms) = rankStage(edges)
-    pagerankLoop(withOut, doms, iters, damping)
+    val (withOut, doms) = rankStage(edges, iters)
+    powerIteration(withOut, doms, "pr", lit(1.0), None, iters, damping)
   }
 
+  /** One PageRank power step — [[pagerank]] at `iters = 1`, the single
+    * diagnostic round the q_pagerank oracle pins exactly. */
+  def pagerankStep(edges: DataFrame, damping: Double = 0.85): DataFrame =
+    pagerank(edges, 1, damping)
+
   /**
-   * Stage the three tables every fixed-horizon rank loop reads each
-   * round — the checkpointed edge table's out-weight join and the domain
-   * universe (guide §2.4: the edge lineage is typically the HTML
-   * link-extraction scan, which the derivative checkpoints would
-   * otherwise each re-run; the edge table is sublinear in the corpus).
-   * Factored out so [[spamMass]] stages them ONCE for both of its rank
-   * chains instead of paying the three checkpoints per chain.
+   * Stage what a rank loop reads: the edge table joined to its out-weights
+   * (`withOut`) and the domain universe (`doms`). The edge table is always
+   * checkpointed — both derived tables read it, and its lineage is
+   * typically the HTML link-extraction scan (the edge table is sublinear
+   * in the corpus). `withOut` and `doms` are checkpointed only
+   * when they are read more than once: every round reads both, so that is
+   * `iters × chains > 1` ([[spamMass]] runs two chains over one staging).
+   * A single round leaves them lazy, so the plan reads the staged edges
+   * and stages nothing it reads once. The out-weight join is NOT a forced
+   * broadcast: the domain table can reach 10⁹ rows at full-crawl scale,
+   * so AQE picks broadcast vs shuffle from its measured size.
    */
-  private def rankStage(edges: DataFrame): (DataFrame, DataFrame) = {
+  private def rankStage(edges: DataFrame, iters: Int,
+                        chains: Int = 1): (DataFrame, DataFrame) = {
+    require(iters >= 1, "iters must be >= 1")
     val e = edges.localCheckpoint()
     val withOut = e
       .join(e.groupBy(col("src_domain"))
         .agg(sum(col("n_links")).as("outw")), Seq("src_domain"))
-      .localCheckpoint()
     val doms = e.select(col("src_domain").as("domain"))
       .union(e.select(col("dst_domain").as("domain"))).distinct()
-      .localCheckpoint()
-    (withOut, doms)
+    if (iters * chains > 1) (withOut.localCheckpoint(), doms.localCheckpoint())
+    else (withOut, doms)
   }
 
-  private def pagerankLoop(withOut: DataFrame, doms: DataFrame, iters: Int,
-                           damping: Double): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    var pr = doms.withColumn("pr", lit(1.0))
+  /**
+   * The rank recurrence, written once: from v₀ = teleport,
+   *   v_{k+1} = (1−d)·teleport + d·(inflow_k [+ dmass_k/n])
+   * where inflow_k(x) = Σ_{(s→x)} v_k(s)·w/out(s) is one join against the
+   * staged out-weights plus ONE dst-keyed aggregate. With a `dangling`
+   * set, the round's mass on it (one 1-row aggregate, broadcast) is
+   * spread uniformly over the n domains — the mass-conserving variant.
+   * Each round but the last is checkpointed (constant-depth lineage); the
+   * LAST stays lazy — its table is consumed exactly once downstream, so a
+   * checkpoint would materialize it only to read it back (one dead job).
+   * Output: (domain, `name`) rounded to 4dp. With teleport = 1.0 the
+   * (1−d)·1.0 and 1.0·w/out products are exact in IEEE arithmetic, so the
+   * uniform case computes the same doubles as the unscaled formula.
+   */
+  private def powerIteration(withOut: DataFrame, doms: DataFrame,
+                             name: String, teleport: Column,
+                             dangling: Option[DataFrame], iters: Int,
+                             damping: Double): DataFrame = {
+    lazy val nDoms = doms.count().toDouble // model-sized driver scalar
+    var v = doms.withColumn(name, teleport)
     for (i <- 1 to iters) {
       val inflow = withOut
-        .join(pr.withColumnRenamed("domain", "src_domain"),
-          Seq("src_domain"))
+        .join(v.withColumnRenamed("domain", "src_domain"), Seq("src_domain"))
         .select(col("dst_domain").as("domain"),
-          (col("pr") * col("n_links").cast("double") / col("outw")).as("c"))
+          (col(name) * col("n_links").cast("double") / col("outw")).as("c"))
         .groupBy(col("domain")).agg(sum(col("c")).as("inflow"))
-      val next = doms.join(inflow, Seq("domain"), "left")
-        .select(col("domain"),
-          (lit(1.0 - damping) +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
-      // constant-depth lineage between rounds; the LAST round stays lazy —
-      // its table is consumed exactly once downstream, so a checkpoint
-      // would materialize it only to read it back (one dead job)
-      pr = if (i < iters) next.localCheckpoint() else next
+      val rows = doms.join(inflow, Seq("domain"), "left")
+      val received = coalesce(col("inflow"), lit(0.0))
+      val (in, mass) = dangling match {
+        case None => (rows, received)
+        case Some(dg) =>
+          val dm = v.join(dg, Seq("domain"), "left_semi")
+            .agg(coalesce(sum(col(name)), lit(0.0)).as("dmass"))
+          (rows.crossJoin(broadcast(dm)), received + col("dmass") / nDoms)
+      }
+      val next = in.select(col("domain"),
+        (lit(1.0 - damping) * teleport + lit(damping) * mass).as(name))
+      v = if (i < iters) next.localCheckpoint() else next
     }
-    pr.select(col("domain"), pround4(col("pr")).as("pr"))
+    v.select(col("domain"), pround4(col(name)).as(name))
   }
 
   /**
@@ -199,40 +228,23 @@ object WebGraph {
    * zero elsewhere. Trust reaches a domain only through a link path
    * from a seed, so spam clusters with no trusted in-path score exactly
    * 0 — the deliberate difference from [[pagerank]]'s uniform teleport
-   * (which gives every domain the (1−d) floor). Same plan per round as
-   * pagerank: one out-weight join (materialized once) + one dst-keyed
-   * aggregate, per-round localCheckpoint; the seed set is a literal IN
-   * list (seed sets are human-curated — hundreds, not millions).
+   * (which gives every domain the (1−d) floor). The same
+   * [[powerIteration]] as pagerank with the seed teleport; the seed set
+   * is a literal IN list (seed sets are human-curated — hundreds, not
+   * millions).
    */
   def trustrank(edges: DataFrame, seeds: Seq[String], iters: Int,
                 damping: Double = 0.85): DataFrame = {
-    val (withOut, doms) = rankStage(edges)
-    trustrankLoop(withOut, doms, seeds, iters, damping)
+    val tele = seedTeleport(seeds)
+    val (withOut, doms) = rankStage(edges, iters)
+    powerIteration(withOut, doms, "tr", tele, None, iters, damping)
   }
 
-  private def trustrankLoop(withOut: DataFrame, doms: DataFrame,
-                            seeds: Seq[String], iters: Int,
-                            damping: Double): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
+  /** TrustRank's teleport: 1/|seeds| on each seed domain, 0 elsewhere. */
+  private def seedTeleport(seeds: Seq[String]): Column = {
     require(seeds.nonEmpty, "TrustRank needs a non-empty seed set")
-    val tele = when(col("domain").isin(seeds.map(x => x: Any): _*),
+    when(col("domain").isin(seeds.map(x => x: Any): _*),
       lit(1.0 / seeds.size)).otherwise(lit(0.0))
-    var tr = doms.withColumn("tr", tele)
-    for (i <- 1 to iters) {
-      val inflow = withOut
-        .join(tr.withColumnRenamed("domain", "src_domain"),
-          Seq("src_domain"))
-        .select(col("dst_domain").as("domain"),
-          (col("tr") * col("n_links").cast("double") / col("outw")).as("c"))
-        .groupBy(col("domain")).agg(sum(col("c")).as("inflow"))
-      val next = doms.join(inflow, Seq("domain"), "left")
-        .select(col("domain"),
-          (lit(1.0 - damping) * tele +
-            lit(damping) * coalesce(col("inflow"), lit(0.0))).as("tr"))
-      // last round lazy, consumed once (see pagerankLoop)
-      tr = if (i < iters) next.localCheckpoint() else next
-    }
-    tr.select(col("domain"), pround4(col("tr")).as("tr"))
   }
 
   /**
@@ -305,24 +317,21 @@ object WebGraph {
    * NEGATIVE (they hold more trusted than total rank under the leaked-PR
    * formulation) — the paper thresholds on m, this emits the raw value.
    *
-   * Plan: both rank vectors are domain-keyed aggregate-scale tables
-   * (never corpus-scale), so the composition is ONE AQE-sized join plus
-   * scalar arithmetic; the domain count is a driver scalar (model-sized,
-   * same seam as [[pagerankConserving]]'s nDoms). Inputs are the two
-   * operators' published 4dp-rounded ranks, so the division composes
-   * engine-portably — both engines divide the same doubles. PR ≥ (1−d)
-   * everywhere under uniform teleport, so the denominator never vanishes.
+   * Plan: ONE [[rankStage]] feeds both rank chains; both vectors are
+   * domain-keyed aggregate-scale tables (never corpus-scale), so the
+   * composition is ONE AQE-sized join plus scalar arithmetic; the domain
+   * count is a driver scalar read from the staged domain table. Inputs
+   * are the two operators' published 4dp-rounded ranks, so the division
+   * composes engine-portably — both engines divide the same doubles.
+   * PR ≥ (1−d) everywhere under uniform teleport, so the denominator
+   * never vanishes.
    */
   def spamMass(edges: DataFrame, seeds: Seq[String], iters: Int,
                damping: Double = 0.85): DataFrame = {
-    // ONE staged edge/out-weight/domain set feeds BOTH rank chains (each
-    // public entry would otherwise pay its own three rankStage checkpoints
-    // over the identical tables)
-    val (withOut, doms) = rankStage(edges)
-    val pr = pagerankLoop(withOut, doms, iters, damping)
-    val tr = trustrankLoop(withOut, doms, seeds, iters, damping)
-    // domain count — model-sized driver scalar; read from the staged
-    // domain checkpoint (pr has exactly one row per domain)
+    val tele = seedTeleport(seeds)
+    val (withOut, doms) = rankStage(edges, iters, chains = 2)
+    val pr = powerIteration(withOut, doms, "pr", lit(1.0), None, iters, damping)
+    val tr = powerIteration(withOut, doms, "tr", tele, None, iters, damping)
     val nDoms = doms.count().toDouble
     pr.join(tr, Seq("domain"))
       .select(col("domain"), col("pr"), col("tr"),
@@ -333,52 +342,22 @@ object WebGraph {
   /**
    * Mass-CONSERVING PageRank to a fixed horizon — the standard power
    * iteration [[pagerank]] deliberately is not: each round the damped
-   * mass of DANGLING domains (in-links, no out-links) is summed (one
-   * 1-row aggregate, broadcast) and redistributed uniformly across the
-   * domain universe, so Σpr stays exactly n·1.0 through every round
-   * (spec-pinned on a dangling graph). Costs one extra aggregate +
-   * broadcast per round over the leaked variant; choose this one when
-   * absolute rank values or deep-iteration orderings on dangling-heavy
-   * graphs are the product. Same per-round checkpoint pattern.
+   * mass of DANGLING domains (in-links, no out-links) is summed and
+   * redistributed uniformly across the domain universe, so Σpr stays
+   * exactly n·1.0 through every round (spec-pinned on a dangling graph).
+   * [[powerIteration]] with the dangling set (staged once); costs one
+   * extra aggregate + broadcast per round over the leaked variant.
    */
   def pagerankConserving(edges: DataFrame, iters: Int,
                          damping: Double = 0.85): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    val e = edges.localCheckpoint() // one extraction scan (see pagerank)
-    val srcs = e.select(col("src_domain")).distinct()
-    val doms = e.select(col("src_domain").as("domain"))
-      .union(e.select(col("dst_domain").as("domain"))).distinct()
-      .localCheckpoint()
-    val withOut = e
-      .join(e.groupBy(col("src_domain"))
-        .agg(sum(col("n_links")).as("outw")), Seq("src_domain"))
-      .localCheckpoint()
+    val (withOut, doms) = rankStage(edges, iters)
     val dangling = doms
-      .join(srcs, doms("domain") === srcs("src_domain"), "left_anti")
+      .join(withOut.select(col("src_domain").as("domain")), Seq("domain"),
+        "left_anti")
       .localCheckpoint()
-    val nDoms = doms.count().toDouble // model-sized driver scalar
-    var pr = doms.withColumn("pr", lit(1.0))
-    for (i <- 1 to iters) {
-      val inflow = withOut
-        .join(pr.withColumnRenamed("domain", "src_domain"),
-          Seq("src_domain"))
-        .select(col("dst_domain").as("domain"),
-          (col("pr") * col("n_links").cast("double") / col("outw")).as("c"))
-        .groupBy(col("domain")).agg(sum(col("c")).as("inflow"))
-      // the round's dangling mass: one row, broadcast into the update
-      val dm = pr.join(dangling, Seq("domain"), "left_semi")
-        .agg(coalesce(sum(col("pr")), lit(0.0)).as("dmass"))
-      val next = doms.join(inflow, Seq("domain"), "left")
-        .crossJoin(broadcast(dm))
-        .select(col("domain"),
-          (lit(1.0 - damping) + lit(damping) *
-            (coalesce(col("inflow"), lit(0.0)) + col("dmass") / nDoms)).as("pr"))
-      // last round lazy, consumed once (see pagerankLoop)
-      pr = if (i < iters) next.localCheckpoint() else next
-    }
-    pr.select(col("domain"), pround4(col("pr")).as("pr"))
+    powerIteration(withOut, doms, "pr", lit(1.0), Some(dangling), iters,
+      damping)
   }
-
   /**
    * Robots-exclusion filtering (RFC 9309 subset): decide per page whether
    * the crawl may keep it, from a rules table (host, rule ∈
@@ -502,41 +481,5 @@ object WebGraph {
         coalesce(col("out_weight"), lit(0L)).as("out_weight"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"),
         coalesce(col("in_weight"), lit(0L)).as("in_weight"))
-  }
-
-  /**
-   * One PageRank power-iteration step over a domain edge list, from the
-   * uniform start pr₀ = 1:
-   *   pr₁(d) = (1−damping) + damping · Σ_{(s→d)} pr₀(s)·w(s→d)/out(s)
-   * with w the edge multiplicity and out(s) = Σ_d w(s→d). Dangling
-   * domains (no outlinks) receive the teleport term only — standard for
-   * a single diagnostic iteration. Relational shape: out-degree is one
-   * aggregate of the (already sublinear) edge table joined back on the
-   * same key — NOT a forced broadcast: the domain table is ~10⁶ rows for
-   * a curated corpus but can reach 10⁹ at full-crawl scale, so the
-   * planner (AQE) picks broadcast vs shuffle from its measured size; the
-   * contribution roll-up is ONE shuffle on dst. Iterating
-   * to convergence is this same job in a loop with the label-propagation
-   * checkpoint pattern ([[Dedup.dedupClusters]]); one step is what the
-   * oracle can pin exactly.
-   */
-  def pagerankStep(edges0: DataFrame, damping: Double = 0.85): DataFrame = {
-    // four plan branches over the same edge table — staged once, see
-    // hitsStep
-    val edges = edges0.localCheckpoint()
-    val out = edges.groupBy(col("src_domain"))
-      .agg(sum(col("n_links")).as("outw"))
-    val contrib = edges.join(out, Seq("src_domain"))
-      .select(col("dst_domain"),
-        (col("n_links").cast("double") / col("outw")).as("c"))
-    val allDomains = edges.select(col("src_domain").as("domain"))
-      .union(edges.select(col("dst_domain").as("domain"))).distinct()
-    allDomains.join(
-        contrib.groupBy(col("dst_domain").as("domain"))
-          .agg(sum(col("c")).as("inflow")),
-        Seq("domain"), "left")
-      .select(col("domain"),
-        pround4(lit(1.0 - damping) +
-          lit(damping) * coalesce(col("inflow"), lit(0.0))).as("pr"))
   }
 }

@@ -161,6 +161,21 @@ class AggregatesSpec extends SparkSuite {
       "dynamic overwrite must leave untouched partitions' files alone")
   }
 
+  test("keyed upsert into a file: URI table: the second upsert merges " +
+    "instead of failing on the existing path") {
+    val dir = "file:" + tmpDir("upsert_uri") + "/tbl"
+    Exports.upsertByKey(spark, dir,
+      Seq((1L, "v0", "p1"), (2L, "v0", "p2")).toDF("id", "ver", "part"),
+      "id", "part")
+    Exports.upsertByKey(spark, dir,
+      Seq((2L, "v1", "p2"), (3L, "new", "p1")).toDF("id", "ver", "part"),
+      "id", "part")
+    val got = spark.read.parquet(dir).select($"id", $"ver", $"part")
+      .as[(Long, String, String)].collect().toSet
+    assert(got == Set((1L, "v0", "p1"), (2L, "v1", "p2"), (3L, "new", "p1")),
+      got.toString)
+  }
+
   test("z-order layout: hand-computed Morton value; point scans on BOTH " +
     "dimensions overlap fewer files than a single-column sort allows") {
     // zValue(5, 3): a=101b at even bit positions (1,0,16), b=011b at odd

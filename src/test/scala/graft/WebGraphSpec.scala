@@ -291,6 +291,49 @@ class WebGraphSpec extends SparkSuite {
     }
   }
 
+  test("rank staging: the edge table is always staged; out-weights and " +
+    "domains only when a loop reads them more than once; one staging " +
+    "serves both spam-mass chains") {
+    val edges = Seq(("A", "B", 1L), ("A", "C", 1L), ("B", "C", 1L),
+      ("C", "A", 1L)).toDF("src_domain", "dst_domain", "n_links")
+    val sc = spark.sparkContext
+    // localCheckpoint actions a call runs; each stages one RDD. Counted
+    // through the listener rather than the persistent-RDD map, whose
+    // weakly held entries may be collected once a loop drops a table
+    def staged(f: => DataFrame): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val rec = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      ns: Long): Unit = if (fn == "localCheckpoint") n.incrementAndGet()
+        def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                      e: Exception): Unit = ()
+      }
+      org.apache.spark.TestBus.drain(sc)
+      spark.listenerManager.register(rec)
+      try { f.collect(); org.apache.spark.TestBus.drain(sc) }
+      finally spark.listenerManager.unregister(rec)
+      n.get
+    }
+    // one round: only the edge table, which the result still references
+    val before = sc.getPersistentRDDs.keySet
+    val one = WebGraph.pagerank(edges, iters = 1)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1,
+      "a single round stages the edge table alone")
+    assert(one.collect().length == 3)
+    assert(staged(WebGraph.pagerank(edges, iters = 1)) == 1)
+    assert(staged(WebGraph.pagerankStep(edges)) == 1)
+    assert(staged(WebGraph.trustrank(edges, Seq("A"), iters = 1)) == 1)
+    // three rounds: edges + out-weights + domains, then rounds 1 and 2
+    assert(staged(WebGraph.pagerank(edges, iters = 3)) == 5)
+    assert(staged(WebGraph.trustrank(edges, Seq("A"), iters = 3)) == 5)
+    // the dangling set adds one at any horizon
+    assert(staged(WebGraph.pagerankConserving(edges, iters = 1)) == 2)
+    assert(staged(WebGraph.pagerankConserving(edges, iters = 3)) == 6)
+    // spam mass: ONE staging set (3) for both chains, 2 rounds each
+    assert(staged(WebGraph.spamMass(edges, Seq("A"), iters = 3)) == 7)
+    assert(staged(WebGraph.spamMass(edges, Seq("A"), iters = 1)) == 3)
+  }
+
   test("degree table: distinct-neighbor counts and weight sums per " +
     "direction; missing directions zero-filled") {
     val edges = Seq(("A", "C", 2L), ("B", "C", 1L), ("B", "D", 3L))
