@@ -2351,25 +2351,62 @@ object SparkEntry {
       |    FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY p))
       |  WHERE g IS NOT NULL)""".stripMargin
 
-  /** Incremental-dedup survivors oracle — ONE definition shared by
-    * q_dedup_incremental (recomputed seen side), q_dedup_incremental_index
-    * (stored-index rebuild) and q_index_append (stored index grown by an
-    * O(batch) append): all three implementations must produce the exact
-    * same survivor set, so they pin to the same SQL. */
-  private lazy val incrementalSurvivorsSql: String = {
+  /** DuckDB twin of `Dedup.baseHash`: first 15 md5 hex chars mod P. */
+  private def baseHashSql(g: String): String =
+    s"('0x' || substr(md5($g), 1, 15))::UBIGINT % 2147483647"
+
+  /** The MinHash-LSH band preamble, mirroring `Dedup.minhashSignatures` +
+    * `bucketsFromSignatures`: per-shingle base hash `hh`, the 8
+    * permutation minima `sig`, the 4 band keys `bk`. */
+  private lazy val minhashBandCtes: String = {
     val perms = graft.operators.Dedup.MinhashA
       .zip(graft.operators.Dedup.MinhashB).zipWithIndex
       .map { case ((a, b), i) =>
         s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
     s"""$shinglesCte,
        |hh AS (
-       |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
+       |  SELECT doc_id, ${baseHashSql("g")} AS h FROM sh),
        |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
        |bk AS (
        |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
        |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
        |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-       |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
+       |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig)""".stripMargin
+  }
+
+  /** [[minhashBandCtes]] + the `maxBucketSize = 1000` cap: the capped
+    * band sizes `bs` and the surviving bucket rows `bc`. */
+  private lazy val minhashBucketCtes: String =
+    s"""$minhashBandCtes,
+       |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
+       |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key))""".stripMargin
+
+  /** [[minhashBucketCtes]] + `Dedup.minhashCandidates`' pair set `cand`
+    * (id1 < id2, distinct across bands). */
+  private lazy val minhashCandCtes: String =
+    s"""$minhashBucketCtes,
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
+       |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** [[minhashCandCtes]] + the connected components of the candidate
+    * graph: symmetric `edges` and the recursive reachability `reach`
+    * (cluster = min r per id). */
+  private lazy val componentCtes: String =
+    s"""${minhashCandCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
+       |edges AS (SELECT id1, id2 FROM cand UNION SELECT id2, id1 FROM cand),
+       |reach(id, r) AS (
+       |  SELECT id1, id1 FROM edges
+       |  UNION
+       |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id)""".stripMargin
+
+  /** Incremental-dedup survivors oracle — ONE definition shared by
+    * q_dedup_incremental (recomputed seen side), q_dedup_incremental_index
+    * (stored-index rebuild) and q_index_append (stored index grown by an
+    * O(batch) append): all three implementations must produce the exact
+    * same survivor set, so they pin to the same SQL. */
+  private lazy val incrementalSurvivorsSql: String =
+    s"""$minhashBandCtes,
        |seenb AS (SELECT DISTINCT band, band_key FROM bk WHERE doc_id % 5 <> 0),
        |neardup AS (
        |  SELECT DISTINCT n.doc_id FROM bk n JOIN seenb s USING (band, band_key)
@@ -2380,38 +2417,14 @@ object SparkEntry {
        |  AND md5(d.text) NOT IN (SELECT ch FROM seenh)
        |  AND d.doc_id NOT IN (SELECT doc_id FROM neardup)
        |ORDER BY d.doc_id""".stripMargin
-  }
 
   /** Converged-components oracle shared by q_dedup_clusters (min-label
     * propagation) and q_dedup_clusters_star (large-star/small-star): the
     * component structure is algorithm-independent, so both implementations
     * pin to ONE recursive-CTE ground truth. */
-  private lazy val clustersOracle: String = {
-    val perms = graft.operators.Dedup.MinhashA
-      .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-      .map { case ((a, b), i) =>
-        s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
-    s"""${shinglesCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-       |hh AS (
-       |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-       |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-       |bk AS (
-       |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-       |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-       |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-       |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-       |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-       |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key)),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-       |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-       |edges AS (SELECT id1, id2 FROM cand UNION SELECT id2, id1 FROM cand),
-       |reach(id, r) AS (
-       |  SELECT id1, id1 FROM edges
-       |  UNION
-       |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id)
+  private lazy val clustersOracle: String =
+    s"""$componentCtes
        |SELECT id, min(r) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin
-  }
 
   def oracleSql: Map[String, String] = Map(
 
@@ -2881,45 +2894,14 @@ object SparkEntry {
         |FROM documents GROUP BY 1 ORDER BY content_hash""".stripMargin,
 
     "q_dedup_minhash" -> {
-      val perms = graft.operators.Dedup.MinhashA
-        .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-        .map { case ((a, b), i) =>
-          s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
-      s"""$shinglesCte,
-         |hh AS (
-         |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-         |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-         |bk AS (
-         |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-         |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-         |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-         |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-         |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-         |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key))
+      s"""$minhashBucketCtes
          |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
          |FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
          |ORDER BY id1, id2""".stripMargin
     },
 
     "q_dedup_edit" -> {
-      val perms = graft.operators.Dedup.MinhashA
-        .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-        .map { case ((a, b), i) =>
-          s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
-      s"""$shinglesCte,
-         |hh AS (
-         |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-         |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-         |bk AS (
-         |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-         |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-         |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-         |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-         |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-         |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
+      s"""$minhashCandCtes
          |SELECT id1, id2, levenshtein(d1.text, d2.text)::BIGINT AS edit_dist
          |FROM cand JOIN documents d1 ON d1.doc_id = cand.id1
          |          JOIN documents d2 ON d2.doc_id = cand.id2
@@ -2928,24 +2910,7 @@ object SparkEntry {
     },
 
     "q_containment" -> {
-      val perms = graft.operators.Dedup.MinhashA
-        .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-        .map { case ((a, b), i) =>
-          s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
-      s"""$shinglesCte,
-         |hh AS (
-         |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-         |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-         |bk AS (
-         |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-         |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-         |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-         |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-         |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-         |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
+      s"""$minhashCandCtes,
          |shd AS (SELECT DISTINCT doc_id, md5(g) AS hd FROM sh),
          |sz AS (SELECT doc_id, count(*)::BIGINT AS n_sh FROM shd GROUP BY 1),
          |co AS (
@@ -3029,25 +2994,8 @@ object SparkEntry {
     },
 
     "q_dedup_minhash_est" -> {
-      val perms = graft.operators.Dedup.MinhashA
-        .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-        .map { case ((a, b), i) =>
-          s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
       val agree = (0 until 8).map(i => s"(x.m$i = y.m$i)::INT").mkString(" + ")
-      s"""$shinglesCte,
-         |hh AS (
-         |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-         |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-         |bk AS (
-         |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-         |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-         |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-         |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-         |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-         |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id)
+      s"""$minhashCandCtes
          |SELECT c.id1, c.id2, ($agree) / 8.0 AS j_est
          |FROM cand c JOIN sig x ON x.doc_id = c.id1 JOIN sig y ON y.doc_id = c.id2
          |ORDER BY id1, id2""".stripMargin
@@ -3499,29 +3447,7 @@ object SparkEntry {
     "q_dedup_incremental_index" -> incrementalSurvivorsSql,
 
     "q_cluster_keeper" -> {
-      val perms = graft.operators.Dedup.MinhashA
-        .zip(graft.operators.Dedup.MinhashB).zipWithIndex
-        .map { case ((a, b), i) =>
-          s"min(($a * h + $b) % 2147483647) AS m$i" }.mkString(", ")
-      s"""${shinglesCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |hh AS (
-         |  SELECT doc_id, ('0x' || substr(md5(g), 1, 15))::UBIGINT % 2147483647 AS h FROM sh),
-         |sig AS (SELECT doc_id, $perms FROM hh GROUP BY doc_id),
-         |bk AS (
-         |  SELECT doc_id, 0 AS band, md5(m0 || '|' || m1) AS band_key FROM sig
-         |  UNION ALL SELECT doc_id, 1, md5(m2 || '|' || m3) FROM sig
-         |  UNION ALL SELECT doc_id, 2, md5(m4 || '|' || m5) FROM sig
-         |  UNION ALL SELECT doc_id, 3, md5(m6 || '|' || m7) FROM sig),
-         |bs AS (SELECT band, band_key FROM bk GROUP BY 1, 2 HAVING count(*) <= 1000),
-         |bc AS (SELECT bk.* FROM bk JOIN bs USING (band, band_key)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-         |  FROM bc a JOIN bc b ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id),
-         |edges AS (SELECT id1, id2 FROM cand UNION SELECT id2, id1 FROM cand),
-         |reach(id, r) AS (
-         |  SELECT id1, id1 FROM edges
-         |  UNION
-         |  SELECT e.id1, reach.r FROM edges e JOIN reach ON e.id2 = reach.id),
+      s"""$componentCtes,
          |cl AS (SELECT id, min(r) AS cluster FROM reach GROUP BY id),
          |$qualityCtes,
          |mem AS (
@@ -3696,12 +3622,12 @@ object SparkEntry {
     // fold Spark runs: list_reduce over a 0-seeded slice of per-token
     // base hashes (both engines execute the same accumulator sequence)
     "q_dedup_winnow_fast" ->
-      """WITH tokf AS (
+      raw"""WITH tokf AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
         |  FROM documents),
         |thx AS (
         |  SELECT doc_id,
-        |         list_transform(toks, t -> ('0x' || substr(md5(t), 1, 15))::UBIGINT % 2147483647) AS th
+        |         list_transform(toks, t -> ${baseHashSql("t")}) AS th
         |  FROM tokf WHERE len(toks) >= 11),
         |hsx AS (
         |  SELECT doc_id,
@@ -4047,16 +3973,8 @@ object SparkEntry {
          |FROM em, ed, ex""".stripMargin,
 
     "q_bloom_filter" -> {
-      val bitRows = (0 until 4).map { j =>
-        val a = graft.operators.Dedup.MinhashA(j)
-        val b = graft.operators.Dedup.MinhashB(j)
-        s"SELECT (($a * h + $b) % 2147483647) % 8192 AS bit FROM sh"
-      }.mkString("\n  UNION ALL ")
-      val probeRows = (0 until 4).map { j =>
-        val a = graft.operators.Dedup.MinhashA(j)
-        val b = graft.operators.Dedup.MinhashB(j)
-        s"SELECT url, (($a * h + $b) % 2147483647) % 8192 AS bit FROM ph"
-      }.mkString("\n  UNION ALL ")
+      val bitRows = affineHashRows(4, 8192, "bit", "sh")
+      val probeRows = affineHashRows(4, 8192, "bit", "ph", cols = _ => "url, ")
       s"""WITH u AS (
          |  SELECT doc_id,
          |         'https://site' || (doc_id % 20)::VARCHAR || '.com/page/' || doc_id::VARCHAR AS url
@@ -4081,11 +3999,7 @@ object SparkEntry {
     },
 
     "q_bloom_merge" -> {
-      val bitRows = (0 until 4).map { j =>
-        val a = graft.operators.Dedup.MinhashA(j)
-        val b = graft.operators.Dedup.MinhashB(j)
-        s"SELECT (($a * h + $b) % 2147483647) % 8192 AS bit FROM sh"
-      }.mkString("\n  UNION ALL ")
+      val bitRows = affineHashRows(4, 8192, "bit", "sh")
       s"""WITH u AS (
          |  SELECT doc_id,
          |         'https://site' || (doc_id % 20)::VARCHAR || '.com/page/' || doc_id::VARCHAR AS url
@@ -4810,16 +4724,9 @@ object SparkEntry {
     * composition. */
   private def frontierOracleSql(iters: Int, mBits: Int, kHashes: Int,
                                 topK: Int): String = {
-    val bitRows = (0 until kHashes).map { j =>
-      val a = graft.operators.Dedup.MinhashA(j)
-      val b = graft.operators.Dedup.MinhashB(j)
-      s"SELECT (($a * h + $b) % 2147483647) % $mBits AS bit FROM shh"
-    }.mkString("\n  UNION ALL ")
-    val probeRows = (0 until kHashes).map { j =>
-      val a = graft.operators.Dedup.MinhashA(j)
-      val b = graft.operators.Dedup.MinhashB(j)
-      s"SELECT url, (($a * h + $b) % 2147483647) % $mBits AS bit FROM phh"
-    }.mkString("\n  UNION ALL ")
+    val bitRows = affineHashRows(kHashes, mBits, "bit", "shh")
+    val probeRows = affineHashRows(kHashes, mBits, "bit", "phh",
+      cols = _ => "url, ")
     s"""$rankPreamble,
        |pr0 AS (SELECT domain, 1.0::DOUBLE AS pr FROM doms),
        |${rankRounds("pinf", "pr", "", iters)},
@@ -4869,16 +4776,25 @@ object SparkEntry {
       |FROM o FULL OUTER JOIN n ON o.url_id = n.url_id
       |ORDER BY url_id""".stripMargin
 
+  /** DuckDB twin of `Sketches.affinePositions`: for each j < k one
+    * `SELECT <cols(j)>((a_j·h + b_j) mod P) mod w AS <out> FROM <t>` row,
+    * joined by UNION ALL — the CMS rows and the Bloom bits. */
+  private def affineHashRows(k: Int, w: Int, out: String, t: String,
+                             h: String = "h",
+                             cols: Int => String = _ => ""): String =
+    (0 until k).map { j =>
+      val a = graft.operators.Dedup.MinhashA(j)
+      val b = graft.operators.Dedup.MinhashB(j)
+      s"SELECT ${cols(j)}(($a * $h + $b) % 2147483647) % $w AS $out FROM $t"
+    }.mkString("\n  UNION ALL ")
+
   /** Shared CMS CTE chain (mirrors `Sketches.cmsSketch`): tokens →
     * 48-bit base hash reduced into the Minhash prime field → d affine
     * row hashes (`rb`) → per-source registers `sk`. The globally-built
     * sketch is `GROUP BY depth, bucket` over `rb` directly. */
   private def cmsCtes(depth: Int, width: Int): String = {
-    val rows = (0 until depth).map { j =>
-      val a = graft.operators.Dedup.MinhashA(j)
-      val b = graft.operators.Dedup.MinhashB(j)
-      s"SELECT source, $j::BIGINT AS depth, (($a * h + $b) % 2147483647) % $width AS bucket FROM h"
-    }.mkString("\n  UNION ALL ")
+    val rows = affineHashRows(depth, width, "bucket", "h",
+      cols = j => s"source, $j::BIGINT AS depth, ")
     s"""tok AS (
        |  SELECT source, unnest(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')) AS tok
        |  FROM documents),
@@ -4892,11 +4808,8 @@ object SparkEntry {
 
   /** Probe-side CMS coordinates for a `probes(tok, true_cnt)` CTE. */
   private def cmsProbeCtes(depth: Int, width: Int): String = {
-    val rows = (0 until depth).map { j =>
-      val a = graft.operators.Dedup.MinhashA(j)
-      val b = graft.operators.Dedup.MinhashB(j)
-      s"SELECT tok, true_cnt, $j::BIGINT AS depth, (($a * ph + $b) % 2147483647) % $width AS bucket FROM ph"
-    }.mkString("\n  UNION ALL ")
+    val rows = affineHashRows(depth, width, "bucket", "ph", h = "ph",
+      cols = j => s"tok, true_cnt, $j::BIGINT AS depth, ")
     s"""ph AS (
        |  SELECT tok, true_cnt,
        |         ('0x' || substr(md5(tok), 1, 12))::UBIGINT::BIGINT % 2147483647 AS ph

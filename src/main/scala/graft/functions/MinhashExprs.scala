@@ -8,6 +8,19 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+/** The first 15 hex chars of an md5 digest as a non-negative 60-bit long —
+  * bit-identical to `conv(substring(md5(x), 1, 15), 16, 10)::long` (DuckDB
+  * `('0x' || substr(md5(x), 1, 15))::UBIGINT`). Every kernel that hashes a
+  * token or shingle by md5 prefix shares it and applies its own modulus. */
+private[functions] object Md5Prefix {
+  def of(d: Array[Byte]): Long = {
+    var v = 0L
+    var j = 0
+    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
+    (v << 4) | ((d(7) & 0xf0L) >> 4)
+  }
+}
+
 /**
  * Scan-local MinHash signature — the 8 permutation minima of a document's
  * word n-gram shingles computed WITHIN the row, as one codegen kernel.
@@ -65,21 +78,6 @@ object MinhashSig {
   final class Perms(val as: Array[Long], val bs: Array[Long], val p: Long)
       extends Serializable
 
-  private val Space = UTF8String.fromString(" ")
-
-  /** First 15 md5 hex chars as a long (60 bits) mod p — bit-identical to
-    * `pmod(conv(substring(md5(g), 1, 15), 16, 10)::long, p)`. */
-  private def baseHash(md: java.security.MessageDigest,
-                       g: UTF8String, p: Long): Long = {
-    md.reset()
-    val d = md.digest(g.getBytes)
-    var v = 0L
-    var j = 0
-    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-    v = (v << 4) | ((d(7) & 0xf0L) >> 4)
-    v % p
-  }
-
   def build(ts: ArrayData, n: Int, t: Perms): ArrayData = {
     val toks = WordNgrams.cleanTokens(ts)
     if (toks.length < n) return null
@@ -90,19 +88,8 @@ object MinhashSig {
     val m = toks.length - n + 1
     var i = 0
     while (i < m) {
-      val g =
-        if (n == 1) toks(i)
-        else {
-          val parts = new Array[UTF8String](2 * n - 1)
-          var o = 0
-          while (o < n) {
-            parts(2 * o) = toks(i + o)
-            if (o < n - 1) parts(2 * o + 1) = Space
-            o += 1
-          }
-          UTF8String.concat(parts: _*)
-        }
-      val h = baseHash(md, g, t.p)
+      // base hash: md5 prefix of the shingle mod p (digest() resets md)
+      val h = Md5Prefix.of(md.digest(WordNgrams.gram(toks, i, n).getBytes)) % t.p
       var j = 0
       while (j < k) {
         // a·h < 2^54 — fits signed 64; operands non-negative, so % == pmod
@@ -240,14 +227,8 @@ object HashedBagFeatures {
     val md = java.security.MessageDigest.getInstance("MD5")
     var i = 0
     while (i < toks.length) {
-      md.reset()
       val d = md.digest(toks(i).getBytes)
-      // first 15 hex chars as a 60-bit long (non-negative) mod dim
-      var v = 0L
-      var j = 0
-      while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-      v = (v << 4) | ((d(7) & 0xf0L) >> 4)
-      val b = (v % dim).toInt
+      val b = (Md5Prefix.of(d) % dim).toInt
       // 16th hex char = low nibble of byte 7; ≥ 8 → −1
       val s = if (signed && (d(7) & 0x08) != 0) -1L else 1L
       if (!touched(b)) { touched(b) = true; nTouched += 1 }

@@ -70,11 +70,7 @@ object SampledWindowHashes {
   private def samplePrefix(md: java.security.MessageDigest,
                            t: UTF8String): Long = {
     md.reset()
-    val d = md.digest(t.getBytes)
-    var v = 0L
-    var j = 0
-    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-    (v << 4) | ((d(7) & 0xf0L) >> 4)
+    Md5Prefix.of(md.digest(t.getBytes))
   }
 
   def build(ts: ArrayData, window: Int, stride: Int): ArrayData = {

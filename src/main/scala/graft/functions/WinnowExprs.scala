@@ -71,12 +71,7 @@ object WinnowFingerprints {
   private def tokenHash(md: java.security.MessageDigest,
                         bytes: Array[Byte]): Long = {
     md.reset()
-    val d = md.digest(bytes)
-    var v = 0L
-    var j = 0
-    while (j < 7) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-    v = (v << 4) | ((d(7) & 0xf0L) >> 4)
-    v % P
+    Md5Prefix.of(md.digest(bytes)) % P
   }
 
   def select(ts: ArrayData, k: Int, w: Int): ArrayData = {

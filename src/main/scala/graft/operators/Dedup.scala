@@ -58,15 +58,21 @@ object Dedup {
     * form never produced. Values bit-identical (same md5-prefix base
     * hash, same permutations; min is duplicate- and order-free). */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int = 3): DataFrame = {
-    val sig = graft.functions.MinhashExprs.minhashSig(
-      split(lower(col(textCol)), "\\W+"), n, MinhashA, MinhashB, MinhashP)
-    docs.select(col(idCol), sig.as("_sig"))
-      .filter(col("_sig").isNotNull)
-      .select(col(idCol) +:
-        (0 until MinhashA.length).map(i =>
-          element_at(col("_sig"), i + 1).as(s"m$i")): _*)
-  }
+                        n: Int = 3): DataFrame =
+    sigColsFrom(docs.select(col(idCol), sigOf(col(textCol), n).as("_sig")),
+      idCol)
+
+  /** The [[graft.functions.MinhashSig]] kernel over a text column: the 8
+    * permutation minima, null when the doc has fewer than n tokens — the
+    * one signature column behind every MinHash path in this object. */
+  private def sigOf(text: Column, n: Int): Column =
+    graft.functions.MinhashExprs.minhashSig(
+      split(lower(text), "\\W+"), n, MinhashA, MinhashB, MinhashP)
+
+  /** The 4 LSH band keys (2 rows each) over signature component `m(i)` —
+    * shared by the band table and the row-local band keys. */
+  private def bandKeys(m: Int => Column): Seq[Column] =
+    (0 until 4).map(b => md5(concat_ws("|", m(2 * b), m(2 * b + 1))))
 
   /** Signature table from an ALREADY-BUILT distinct (id, md5-digest `h`)
     * table — the [[containmentPairs]] staging: min-aggregates are
@@ -109,11 +115,8 @@ object Dedup {
 
   /** LSH band-bucket rows from a signature table (4 bands × 2 rows). */
   def bucketsFromSignatures(sig: DataFrame, idCol: String): DataFrame =
-    sig.select(col(idCol), posexplode(array(
-        md5(concat_ws("|", col("m0"), col("m1"))),
-        md5(concat_ws("|", col("m2"), col("m3"))),
-        md5(concat_ws("|", col("m4"), col("m5"))),
-        md5(concat_ws("|", col("m6"), col("m7"))))))
+    sig.select(col(idCol),
+        posexplode(array(bandKeys(i => col(s"m$i")): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "band_key")
       .select(col("band"), col("band_key"), col(idCol))
@@ -347,19 +350,16 @@ object Dedup {
     * unpersist around their two writes — no dedicated materialization
     * job, the second write reads the cache). */
   private def dedupKeys(docs: DataFrame, idCol: String,
-                        textCol: String, n: Int): DataFrame = {
-    val sig = graft.functions.MinhashExprs.minhashSig(
-      split(lower(col(textCol)), "\\W+"), n, MinhashA, MinhashB, MinhashP)
+                        textCol: String, n: Int): DataFrame =
     docs.select(col(idCol), md5(col(textCol)).as("content_hash"),
-      sig.as("_sig"))
-  }
+      sigOf(col(textCol), n).as("_sig"))
 
   private def stagedDedupKeys(docs: DataFrame, idCol: String,
                               textCol: String, n: Int): DataFrame =
     dedupKeys(docs, idCol, textCol, n).localCheckpoint()
 
-  /** (id, m0..m7) signature view over a [[stagedDedupKeys]] table — the
-    * same rows [[minhashSignatures]] produces from the raw docs. */
+  /** (id, m0..m7) signature view over an (id, `_sig`) table: the raw-doc
+    * projection of [[minhashSignatures]] or a [[dedupKeys]] staging. */
   private def sigColsFrom(keys: DataFrame, idCol: String): DataFrame =
     keys.filter(col("_sig").isNotNull)
       .select(col(idCol) +:
@@ -433,10 +433,7 @@ object Dedup {
                            indexPath: String, newDocs: DataFrame,
                            idCol: String, textCol: String,
                            n: Int = 3): Unit = {
-    val storedN = spark.read.parquet(s"$indexPath/meta")
-      .head().getAs[Int]("shingle_n")
-    require(storedN == n,
-      s"signature index at $indexPath was built with n=$storedN, appended with n=$n")
+    requireIndexN(spark, indexPath, n, "appended")
     // ONE text scan feeds both append channels (persist seam, see
     // writeSignatureIndex)
     val keys = dedupKeys(newDocs, idCol, textCol, n)
@@ -459,13 +456,22 @@ object Dedup {
                                    indexPath: String, newDocs: DataFrame,
                                    idCol: String, textCol: String,
                                    n: Int = 3): DataFrame = {
-    val storedN = spark.read.parquet(s"$indexPath/meta")
-      .head().getAs[Int]("shingle_n")
-    require(storedN == n,
-      s"signature index at $indexPath was built with n=$storedN, probed with n=$n")
+    requireIndexN(spark, indexPath, n, "probed")
     incrementalDedupCore(newDocs,
       spark.read.parquet(s"$indexPath/hashes"),
       spark.read.parquet(s"$indexPath/bands"), idCol, textCol, n)
+  }
+
+  /** The shingle width is part of a signature index's identity: probing
+    * or appending with another `n` would match no band key and silently
+    * disable the near-dup channel. `verb` names the refused operation. */
+  private[graft] def requireIndexN(spark: org.apache.spark.sql.SparkSession,
+                                   indexPath: String, n: Int,
+                                   verb: String): Unit = {
+    val storedN = spark.read.parquet(s"$indexPath/meta")
+      .head().getAs[Int]("shingle_n")
+    require(storedN == n,
+      s"signature index at $indexPath was built with n=$storedN, $verb with n=$n")
   }
 
   /**
@@ -611,35 +617,24 @@ object Dedup {
 
   /**
    * Row-local MinHash LSH band keys — [[minhashSignatures]] +
-   * [[bucketsFromSignatures]] computed entirely WITHIN one row (array
-   * transforms over the doc's own shingle array, no explode, no shuffle):
-   * bit-identical to the groupBy form, since min over the same shingle
-   * set is order-free and the band md5s are built from the same longs.
+   * [[bucketsFromSignatures]] computed entirely WITHIN one row: the same
+   * signature kernel and the same band-key builder, no explode, no
+   * shuffle, so the 4 keys are bit-identical to the batch band table's.
    * This is what a STATELESS streaming ingest path needs — each arriving
    * doc carries its own 4 band keys, so probing a stored
    * [[writeSignatureIndex]] becomes a plain stream-static equi-join
    * ([[graft.streaming.StreamPipeline.incrementalDedupStream]]).
-   * NULL (not md5-of-empties) when the doc has no shingle, matching the
-   * batch path where shingle-less docs never enter the band table and so
-   * never match it.
+   * NULL (not md5-of-empties) exactly when the doc has no signature
+   * (fewer than n tokens), matching the batch path where such docs never
+   * enter the band table and so never match it.
    */
   def bandKeysLocal(text: Column, n: Int = 3): Column = {
-    val sh = shingleArray(text, n)
-    def bandsOf(hs: Column): Column = {
-      val ms = MinhashA.zip(MinhashB).map { case (a, b) =>
-        array_min(transform(hs, h => pmod(lit(a) * h + lit(b), lit(MinhashP))))
-      }
-      array(
-        md5(concat_ws("|", ms(0), ms(1))),
-        md5(concat_ws("|", ms(2), ms(3))),
-        md5(concat_ws("|", ms(4), ms(5))),
-        md5(concat_ws("|", ms(6), ms(7))))
-    }
-    // same lambda-binding trick as shingleArray: the base-hash array is
-    // bound once so the 8 permutation mins don't re-md5 every shingle
-    val hsCol = transform(sh, s => baseHash(s))
-    when(size(sh) > 0,
-      element_at(transform(array(hsCol), hs => bandsOf(hs)), 1))
+    val sig = sigOf(text, n)
+    // the null branch reads sig too: codegen shares a subexpression common
+    // to every CASE value, so the kernel runs once per row (a THEN without
+    // an ELSE would re-run it in each of the 8 element_at)
+    when(sig.isNull, sig.cast("array<string>"))
+      .otherwise(array(bandKeys(i => element_at(sig, i + 1)): _*))
   }
 
   /**

@@ -35,6 +35,29 @@ object Sketches {
   private def baseHash48(tok: Column): Column =
     conv(substring(md5(tok), 1, 12), 16, 10).cast("long") % Dedup.MinhashP
 
+  /** The k affine positions `((a_j·_h + b_j) mod P) mod width` (j < k)
+    * over the `_h` base-hash column — the one hash family of the CMS rows
+    * and the Bloom bits, so build, estimate and probe always agree. Holds
+    * both range checks: k beyond the 8 [[Dedup.MinhashA]] coefficients
+    * has no hash, k = 0 would emit no position (every key vanishes from an
+    * exploded output), and width < 2 sends every key to bucket 0. */
+  private def affinePositions(k: Int, width: Int, kName: String,
+                              widthName: String): Seq[Column] = {
+    require(k >= 1 && k <= Dedup.MinhashA.size,
+      s"$kName must be in [1, ${Dedup.MinhashA.size}]")
+    require(width >= 2, s"$widthName must be >= 2")
+    (0 until k).map { j =>
+      val (a, b) = (Dedup.MinhashA(j), Dedup.MinhashB(j))
+      ((lit(a) * col("_h") + lit(b)) % Dedup.MinhashP) % width
+    }
+  }
+
+  /** The CMS (depth, bucket) coordinate structs of one `_h` row. */
+  private def cmsRows(depth: Int, width: Int): Seq[Column] =
+    affinePositions(depth, width, "depth", "width").zipWithIndex.map {
+      case (bucket, j) => struct(lit(j.toLong).as("depth"), bucket.as("bucket"))
+    }
+
   /**
    * Count-Min sketch, build half: per group, d·w integer registers where
    * register (j, b) counts tokens with h_j(tok) = b; h_j = affine row
@@ -48,15 +71,7 @@ object Sketches {
    */
   def cmsSketch(docs: DataFrame, grpCol: String, textCol: String,
                 depth: Int = 4, width: Int = 64): DataFrame = {
-    require(depth >= 1 && depth <= Dedup.MinhashA.size,
-      s"depth must be in [1, ${Dedup.MinhashA.size}]")
-    require(width >= 2, "width must be >= 2")
-    val rows = (0 until depth).map { j =>
-      val (a, b) = (Dedup.MinhashA(j), Dedup.MinhashB(j))
-      struct(lit(j.toLong).as("depth"),
-        (((lit(a) * col("_h") + lit(b)) % Dedup.MinhashP) % width)
-          .as("bucket"))
-    }
+    val rows = cmsRows(depth, width)
     docs.select(col(grpCol),
         explode(TextAnalysis.toks(col(textCol))).as("tok"))
       .select(col(grpCol), baseHash48(col("tok")).as("_h"))
@@ -87,12 +102,7 @@ object Sketches {
    */
   def cmsEstimate(merged: DataFrame, probes: DataFrame, tokCol: String,
                   depth: Int = 4, width: Int = 64): DataFrame = {
-    val rows = (0 until depth).map { j =>
-      val (a, b) = (Dedup.MinhashA(j), Dedup.MinhashB(j))
-      struct(lit(j.toLong).as("depth"),
-        (((lit(a) * col("_h") + lit(b)) % Dedup.MinhashP) % width)
-          .as("bucket"))
-    }
+    val rows = cmsRows(depth, width)
     probes.select(col(tokCol), baseHash48(col(tokCol)).as("_h"))
       .select(col(tokCol), explode(array(rows: _*)).as("_rb"))
       .select(col(tokCol), col("_rb.depth").as("depth"),
@@ -103,12 +113,10 @@ object Sketches {
   }
 
   /** The kHashes affine bit positions for one key hash — shared by
-    * [[bloomBits]] and [[bloomProbe]] (they MUST agree). */
+    * [[bloomBits]], [[bloomBitsGrouped]] and [[bloomProbe]] (they MUST
+    * agree). */
   private def bloomPositions(mBits: Int, kHashes: Int): Seq[Column] =
-    (0 until kHashes).map { j =>
-      val (a, b) = (Dedup.MinhashA(j), Dedup.MinhashB(j))
-      ((lit(a) * col("_h") + lit(b)) % Dedup.MinhashP) % mBits
-    }
+    affinePositions(kHashes, mBits, "kHashes", "mBits")
 
   /**
    * Bloom filter, build half (Bloom 1970, "Space/time trade-offs in hash
@@ -128,14 +136,10 @@ object Sketches {
    * membership from RAM.
    */
   def bloomBits(keys: DataFrame, keyCol: String, mBits: Int = 8192,
-                kHashes: Int = 4): DataFrame = {
-    require(kHashes >= 1 && kHashes <= Dedup.MinhashA.size,
-      s"kHashes must be in [1, ${Dedup.MinhashA.size}]")
-    require(mBits >= 2, "mBits must be >= 2")
+                kHashes: Int = 4): DataFrame =
     keys.select(baseHash48(col(keyCol)).as("_h"))
       .select(explode(array(bloomPositions(mBits, kHashes): _*)).as("bit"))
       .distinct()
-  }
 
   /** Per-group Bloom bit tables (grp, bit) — one filter per shard/source;
     * [[bloomMerge]] folds them into the union's filter. */

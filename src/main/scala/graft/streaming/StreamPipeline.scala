@@ -258,10 +258,7 @@ object StreamPipeline {
                              docs: DataFrame, idCol: String, textCol: String,
                              n: Int = 3): DataFrame = {
     import graft.operators.Dedup
-    val storedN = spark.read.parquet(s"$indexPath/meta")
-      .head().getAs[Int]("shingle_n")
-    require(storedN == n,
-      s"signature index at $indexPath was built with n=$storedN, probed with n=$n")
+    Dedup.requireIndexN(spark, indexPath, n, "probed")
     val hashes = spark.read.parquet(s"$indexPath/hashes")
     val bands = spark.read.parquet(s"$indexPath/bands")
     val bk = "__graft_band_keys"

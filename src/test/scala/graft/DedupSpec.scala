@@ -345,6 +345,48 @@ class DedupSpec extends SparkSuite {
     assert(e.getMessage.contains("built with n=3"))
   }
 
+  test("row-local band keys equal the batch band table doc by doc, in " +
+    "band order; null exactly for docs without a signature row") {
+    val ds = Seq[(Long, String)](
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
+      (2L, "the quick brown fox jumps over the lazy dog near the river bend"),
+      (3L, "two tokens"),
+      (4L, ""),
+      (5L, "?! ... -- ;; ,,"),
+      (6L, null),
+      (7L, "Привет мир как дела сегодня утром"),
+      (8L, "naïve café résumé über straße façade déjà vu"))
+      .toDF("doc_id", "text")
+    val batch: Map[Long, Seq[String]] = Dedup.bucketsFromSignatures(
+        Dedup.minhashSignatures(ds, "doc_id", "text", n = 3), "doc_id")
+      .collect().toSeq
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Int]("band"),
+        r.getAs[String]("band_key")))
+      .groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2).map(_._3) }
+    // repartition: keep the projection off the local relation so it runs
+    // through whole-stage codegen, as on a stream
+    val local: Map[Long, Option[Seq[String]]] = ds.repartition(2)
+      .select($"doc_id", Dedup.bandKeysLocal($"text", 3).as("bk"))
+      .collect().map(r => r.getLong(0) ->
+        Option(r.getSeq[String](1)).map(_.toSeq)).toMap
+    assert(local.size == 8)
+    local.foreach { case (id, keys) =>
+      assert(keys == batch.get(id), s"doc $id: local $keys vs batch ${batch.get(id)}")
+    }
+    assert(batch.values.forall(_.size == 4))
+    assert(Set(1L, 2L, 8L).subsetOf(batch.keySet))
+    assert(Seq(3L, 4L, 5L, 6L).forall(id => local(id).isEmpty))
+  }
+
+  test("row-local band keys run the signature kernel once per row in " +
+    "the generated code, not once per band component") {
+    val plan = spark.range(4).select(
+      Dedup.bandKeysLocal(concat(lit("a b c "), $"id".cast("string")), 3))
+      .queryExecution.executedPlan
+    val code = org.apache.spark.sql.execution.debug.codegenString(plan)
+    assert("MinhashSig\\.build".r.findAllIn(code).length == 1)
+  }
+
   test("star CC under exhausted maxIters: output contract holds — exactly " +
     "one row per node, labels are smallest-reached") {
     // a 6-node chain needs >1 star round; cap at 1 round to force the

@@ -85,6 +85,31 @@ class SketchesSpec extends SparkSuite {
     assert(merged == direct, "bloom merge must equal rebuild")
   }
 
+  test("sketch geometry is range-checked on every entry point: grouped " +
+    "Bloom, Bloom probe and CMS estimate refuse what would silently drop " +
+    "keys, collapse them into one bucket, or index past the hash family") {
+    val keys = Seq("a", "b").toDF("k")
+    val grouped = Seq(("g", "a")).toDF("g", "k")
+    val bits = Sketches.bloomBits(keys, "k")
+    val merged = Sketches.cmsMerge(Sketches.cmsSketch(df, "source", "text"))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "bloomBitsGrouped kHashes=0" ->
+        (() => Sketches.bloomBitsGrouped(grouped, "g", "k", kHashes = 0)),
+      "bloomBitsGrouped mBits=1" ->
+        (() => Sketches.bloomBitsGrouped(grouped, "g", "k", mBits = 1)),
+      "bloomProbe kHashes=0" ->
+        (() => Sketches.bloomProbe(bits, keys, "k", kHashes = 0)),
+      "bloomProbe mBits=1" ->
+        (() => Sketches.bloomProbe(bits, keys, "k", mBits = 1)),
+      "cmsEstimate width=1" ->
+        (() => Sketches.cmsEstimate(merged, keys, "k", width = 1)),
+      "cmsEstimate depth=9" ->
+        (() => Sketches.cmsEstimate(merged, keys, "k", depth = 9)))
+    calls.foreach { case (name, call) =>
+      withClue(name) { intercept[IllegalArgumentException](call()) }
+    }
+  }
+
   test("HLL: registers match a Scala reference (md5 60-bit hash, low-p " +
     "bucket, bin-length rho); merge by max equals rebuild") {
     val p = 5; val m = 1 << p; val width = 60 - p
