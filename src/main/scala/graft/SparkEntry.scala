@@ -23,6 +23,12 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** The embeddings table as (vec_id, v: array<double>) — the similarity
+    * family's input. */
+  private def vecs(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings")
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
   /** Shared (doc_id, punct_ratio, stopword_ratio, quality) design matrix
     * for the OLS queries — mirrors the oracle's `qualityCtes` exactly. */
   private def qualityFeatures(docs: DataFrame): DataFrame =
@@ -207,10 +213,9 @@ object SparkEntry {
         .select(col("vec_id").as("doc_id"),
           col("embedding").cast("array<double>").as("v"))
       val q = e.filter(col("doc_id") === 0).select(col("v").as("qv"))
-      val cos = e.filter(col("doc_id") =!= 0).crossJoin(broadcast(q))
-        .select(col("doc_id"),
-          round(Similarity.cosine(col("v"), col("qv")), 4).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("doc_id")).limit(50)
+      val cos = Similarity.topKBy(
+        e.filter(col("doc_id") =!= 0).crossJoin(broadcast(q)), "doc_id",
+        Similarity.cosine(col("v"), col("qv")), "cos_sim", 50)
       Analytics.rrfFuse(
         Seq(Analytics.rankArm(bm25, "doc_id", "score"),
           Analytics.rankArm(cos, "doc_id", "cos_sim")),
@@ -742,21 +747,15 @@ object SparkEntry {
     // buckets of q_dedup_embedding); cluster granularity bounds the
     // within-cell quadratic; the cell is a scan-local argmax expression,
     // so the operator is ONE cell-keyed self-join
-    "q_semdedup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      Similarity.semDedupPairs(e, "vec_id", "v", eps = 0.40)
-        .orderBy("cell", "id1", "id2")
-    }),
+    "q_semdedup" -> ((s, dir) =>
+      Similarity.semDedupPairs(vecs(s, dir), "vec_id", "v", eps = 0.40)
+        .orderBy("cell", "id1", "id2")),
 
     // dedup: SemDeDup keeper list — the deduplicated corpus id set under
     // the lowest-id representative convention; the anti-join ships ids only
-    "q_semdedup_keep" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      Similarity.semDedupKeep(e, "vec_id", "v", eps = 0.40)
-        .orderBy("vec_id")
-    }),
+    "q_semdedup_keep" -> ((s, dir) =>
+      Similarity.semDedupKeep(vecs(s, dir), "vec_id", "v", eps = 0.40)
+        .orderBy("vec_id")),
 
     // dedup: recall harness for the bucketed near-dup — bucketed pair count
     // vs exact all-pairs at the same threshold, on a fixed bounded probe
@@ -781,21 +780,16 @@ object SparkEntry {
 
     // similarity: brute-force cosine top-k vs query vector (vec_id=0)
     "q_ann_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(Similarity.cosine(col("v"), col("qv")), 4).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      Similarity.topKBy(e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q)),
+        "vec_id", Similarity.cosine(col("v"), col("qv")), "cos_sim", 10)
     }),
 
     // similarity: two-stage Matryoshka retrieval — 16-dim prefix coarse
     // rank → 50-candidate pool → full 64-dim re-rank, top 10
     "q_ann_matryoshka" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       Similarity.matryoshkaTopK(
         e.filter(col("vec_id") =!= 0), "vec_id", "v",
         e.filter(col("vec_id") === 0), "v",
@@ -805,34 +799,27 @@ object SparkEntry {
     // similarity: int8 scalar-quantized ANN — corpus-range SQ8 round-trip
     // on both sides, rank by cosine of the reconstructions
     "q_ann_sq" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       Similarity.sqTopK(e.filter(col("vec_id") =!= 0), "vec_id", "v",
         e.filter(col("vec_id") === 0), "v", k = 10)
     }),
 
     // similarity: sign-LSH bucketed ANN top-k (the scale path)
     "q_ann_lsh" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val q = e.filter(col("vec_id") === 0)
         .select(col("v").as("qv"), Similarity.signBucket(col("v"), 4).as("qb"))
-      e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-        .filter(Similarity.signBucket(col("v"), 4) === col("qb"))
-        .select(col("vec_id"),
-          round(Similarity.cosine(col("v"), col("qv")), 4).as("cos_sim"))
-        .orderBy(col("cos_sim").desc, col("vec_id"))
-        .limit(10)
+      Similarity.topKBy(e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
+        .filter(Similarity.signBucket(col("v"), 4) === col("qb")),
+        "vec_id", Similarity.cosine(col("v"), col("qv")), "cos_sim", 10)
     }),
 
     // similarity: multi-probe sign-LSH ANN — query bucket + all flip-1-bit
     // buckets (nBits+1 of 2^nBits); recall lift vs probe-1 measured in
     // SimilaritySpec
     "q_ann_lsh_mp" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val qv = e.filter(col("vec_id") === 0) // 1 row — the query, model-sized
-        .collect()(0).getSeq[Double](1)
+      val e = vecs(s, dir)
+      val qv = Similarity.queryVector(e, "vec_id", "v", 0L)
       Similarity.lshTopKMultiProbe(e.filter(col("vec_id") =!= 0),
         "vec_id", "v", qv, k = 10, nBits = 4)
     }),
@@ -843,12 +830,10 @@ object SparkEntry {
     // the green row proves index write → prune → probe reproduces the
     // in-memory multi-probe result exactly
     "q_ann_lsh_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val path = scratchPath(s, "lsh_index")
       Similarity.writeLshIndex(e, "vec_id", "v", path, nBits = 4)
-      val qv = e.filter(col("vec_id") === 0)
-        .collect()(0).getSeq[Double](1) // 1 row — the query, model-sized
+      val qv = Similarity.queryVector(e, "vec_id", "v", 0L)
       Similarity.lshIndexTopK(s, path, "vec_id", "v", qv, k = 10,
         nBits = 4, excludeId = Some(0L))
     }),
@@ -856,11 +841,8 @@ object SparkEntry {
     // similarity: IVF ANN — deterministic sampled k-means centroids
     // (2 Lloyd iterations, DECIMAL-exact means) + multi-probe (nprobe=2)
     "q_ann_ivf" -> ((s, dir) =>
-      Similarity.ivfTopK(
-        t(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        "vec_id", "v", queryId = 0L, topK = 10, k = 8, nprobe = 2,
-        iters = 2, sampleN = 256)),
+      Similarity.ivfTopK(vecs(s, dir), "vec_id", "v", queryId = 0L,
+        topK = 10, k = 8, nprobe = 2, iters = 2, sampleN = 256)),
 
     // similarity: the STORED IVF index end to end — write the partitioned
     // index (vectors partitioned by cell + centroid table), then probe it
@@ -868,13 +850,11 @@ object SparkEntry {
     // q_ann_ivf, so the green row proves index write → prune → probe
     // reproduces the in-memory result exactly
     "q_ann_ivf_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val path = scratchPath(s, "ivf_index")
       Similarity.writeIvfIndex(e, "vec_id", "v", path, k = 8, iters = 2,
         sampleN = 256)
-      val qv = e.filter(col("vec_id") === 0)
-        .collect()(0).getSeq[Double](1) // 1 row — the query, model-sized
+      val qv = Similarity.queryVector(e, "vec_id", "v", 0L)
       Similarity.ivfIndexTopK(s, path, "vec_id", "v", qv, topK = 10,
         nprobe = 2, excludeId = Some(0L))
     }),
@@ -884,18 +864,14 @@ object SparkEntry {
     // rank by cos(exact query, reconstructed database vector); fully
     // scan-local scoring + ONE TakeOrdered, codebooks driver-held
     "q_ann_pq" -> ((s, dir) =>
-      Similarity.pqTopK(
-        t(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        "vec_id", "v", queryId = 0L, dim = 64, topK = 10, m = 4, k = 8,
-        iters = 2, sampleN = 256)),
+      Similarity.pqTopK(vecs(s, dir), "vec_id", "v", queryId = 0L, dim = 64,
+        topK = 10, m = 4, k = 8, iters = 2, sampleN = 256)),
 
     // similarity: the PQ CODES themselves — the stored representation
     // (64 floats → 4 small ints per vector); each code is a scan-local
     // argmax against its subspace codebook, no join, no shuffle
     "q_ann_pq_codes" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val cbs = Similarity.pqCodebooks(e, "vec_id", "v", dim = 64, m = 4,
         k = 8, iters = 2, sampleN = 256)
       val codes = Similarity.pqCodeColumns(col("v"), cbs, sub = 16)
@@ -909,11 +885,9 @@ object SparkEntry {
     // the survivors by cos(exact q, c(x) + r̂); all codebooks driver-held,
     // scoring scan-local over the probed rows + ONE TakeOrdered
     "q_ann_ivfadc" -> ((s, dir) =>
-      Similarity.ivfadcTopK(
-        t(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        "vec_id", "v", queryId = 0L, dim = 64, topK = 10, kCoarse = 8,
-        nprobe = 2, m = 4, k = 8, iters = 2, sampleN = 256)),
+      Similarity.ivfadcTopK(vecs(s, dir), "vec_id", "v", queryId = 0L,
+        dim = 64, topK = 10, kCoarse = 8, nprobe = 2, m = 4, k = 8, iters = 2,
+        sampleN = 256)),
 
     // similarity: IVFADC against the STORED codes-only index — cell
     // partition key + m int codes per vector (raw vectors never stored,
@@ -921,13 +895,11 @@ object SparkEntry {
     // partition dirs and scores from codes. Oracle identical to
     // q_ann_ivfadc: the store/score roundtrip must not change a row.
     "q_ann_ivfadc_index" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      val e = vecs(s, dir)
       val path = scratchPath(s, "ivfadc_index")
       Similarity.writeIvfadcIndex(e, "vec_id", "v", path, dim = 64,
         kCoarse = 8, m = 4, k = 8, iters = 2, sampleN = 256)
-      val qv = e.filter(col("vec_id") === 0)
-        .collect()(0).getSeq[Double](1) // 1 row — the query, model-sized
+      val qv = Similarity.queryVector(e, "vec_id", "v", 0L)
       Similarity.ivfadcIndexTopK(s, path, "vec_id", qv, topK = 10,
         nprobe = 2, excludeId = Some(0L))
     }),
@@ -2351,7 +2323,7 @@ object SparkEntry {
       |    FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY p))
       |  WHERE g IS NOT NULL)""".stripMargin
 
-  /** DuckDB twin of `Dedup.baseHash`: first 15 md5 hex chars mod P. */
+  /** DuckDB twin of `Dedup.baseHashOfDigest(md5(g))`: first 15 md5 hex chars mod P. */
   private def baseHashSql(g: String): String =
     s"('0x' || substr(md5($g), 1, 15))::UBIGINT % 2147483647"
 
@@ -3115,15 +3087,13 @@ object SparkEntry {
          |FROM bk, ex""".stripMargin,
 
     "q_ann_topk" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+      s"""WITH $annPreamble
         |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
         |FROM e, q WHERE e.vec_id <> 0
         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
     "q_ann_matryoshka" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0),
+      s"""WITH $annPreamble,
         |coarse AS (
         |  SELECT e.vec_id, e.v, q.qv,
         |         round(list_cosine_similarity(e.v[1:16], q.qv[1:16]), 4) AS cs
@@ -3133,7 +3103,7 @@ object SparkEntry {
         |FROM coarse ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
     "q_ann_sq" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      s"""WITH $eCte,
         |c AS (SELECT * FROM e WHERE vec_id <> 0),
         |dims AS (
         |  SELECT pos, min(x) AS lo, max(x) AS hi
@@ -3155,8 +3125,7 @@ object SparkEntry {
         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
     "q_ann_lsh" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
+      s"""WITH $annPreamble
         |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
         |FROM e, q
         |WHERE e.vec_id <> 0
@@ -3164,29 +3133,11 @@ object SparkEntry {
         |  AND (e.v[3] > 0) = (q.qv[3] > 0) AND (e.v[4] > 0) = (q.qv[4] > 0)
         |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
 
-    // candidates = rows with >= nBits-1 sign agreements == the bucket set
-    // {query bucket} ∪ {flip-1-bit buckets} that the Spark side probes
-    "q_ann_lsh_mp" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
-        |FROM e, q
-        |WHERE e.vec_id <> 0
-        |  AND (((e.v[1] > 0) = (q.qv[1] > 0))::INT + ((e.v[2] > 0) = (q.qv[2] > 0))::INT
-        |     + ((e.v[3] > 0) = (q.qv[3] > 0))::INT + ((e.v[4] > 0) = (q.qv[4] > 0))::INT) >= 3
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+    "q_ann_lsh_mp" -> lshMultiProbeOracleSql,
 
     // same oracle as q_ann_lsh_mp: the stored-index multi-probe must
     // reproduce the in-memory probe exactly (write → prune → scan → top-k)
-    "q_ann_lsh_index" ->
-      """WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |q AS (SELECT v AS qv FROM e WHERE vec_id = 0)
-        |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
-        |FROM e, q
-        |WHERE e.vec_id <> 0
-        |  AND (((e.v[1] > 0) = (q.qv[1] > 0))::INT + ((e.v[2] > 0) = (q.qv[2] > 0))::INT
-        |     + ((e.v[3] > 0) = (q.qv[3] > 0))::INT + ((e.v[4] > 0) = (q.qv[4] > 0))::INT) >= 3
-        |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin,
+    "q_ann_lsh_index" -> lshMultiProbeOracleSql,
 
     "q_ann_ivf" -> ivfOracleSql(k = 8, iters = 2, sampleN = 256, nprobe = 2,
       topK = 10),
@@ -5012,11 +4963,34 @@ object SparkEntry {
        |       count(*)::BIGINT AS n_tokens
        |FROM tok$iters GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
-  /** Shared k-means CTE chain (seeds = k smallest ids, `iters` Lloyd
-    * rounds over the id<sampleN sample, exact DECIMAL means): yields
-    * `e` (all vectors), `c$iters` (final centroids) and `cells` (every
-    * vector's argmax-cosine cell). Used by the IVF and SemDeDup oracles. */
-  private def kmeansCellsCtes(k: Int, iters: Int, sampleN: Long): Seq[String] = {
+  /** Every vector as array<double>, and `e` over it. */
+  private val embVecSql = "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"
+  private val eCte = s"e AS ($embVecSql)"
+
+  /** `q`, the query vector (vec_id 0), and the ANN oracles' `e`/`q`
+    * preamble. */
+  private val qCte = "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)"
+  private val annPreamble = s"$eCte,\n$qCte"
+
+  /** Multi-probe sign-LSH: candidates are rows with >= nBits-1 sign
+    * agreements, which is the bucket set {query bucket} ∪ {flip-1-bit
+    * buckets} that the Spark side probes (in memory and from the index). */
+  private val lshMultiProbeOracleSql: String =
+    s"""WITH $annPreamble
+       |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
+       |FROM e, q
+       |WHERE e.vec_id <> 0
+       |  AND (((e.v[1] > 0) = (q.qv[1] > 0))::INT + ((e.v[2] > 0) = (q.qv[2] > 0))::INT
+       |     + ((e.v[3] > 0) = (q.qv[3] > 0))::INT + ((e.v[4] > 0) = (q.qv[4] > 0))::INT) >= 3
+       |ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
+
+  /** One k-means CTE chain (seeds = k smallest ids, `iters` Lloyd rounds
+    * over the id<sampleN sample, exact DECIMAL means), every name prefixed
+    * `p`: `${p}e AS (eDef)` (the vectors), `${p}smp`, `${p}c0` … `${p}c$iters`
+    * (the centroids) and `${p}cells` (every vector's argmax-cosine cell,
+    * ties to the smaller cid). */
+  private def kmeansChain(p: String, eDef: String, k: Int, iters: Int,
+                          sampleN: Long): Seq[String] = {
     def assign(name: String, src: String, cents: String) =
       s"""$name AS (
          |  SELECT vec_id, cid AS cell FROM (
@@ -5029,18 +5003,24 @@ object SparkEntry {
          |  SELECT cid, list(m ORDER BY pos) AS cv FROM (
          |    SELECT a.cell AS cid, u.pos,
          |           CAST(sum(CAST(u.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-         |    FROM (SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM smp) u
+         |    FROM (SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM ${p}smp) u
          |    JOIN $asg a ON a.vec_id = u.vec_id
          |    GROUP BY a.cell, u.pos) GROUP BY cid)""".stripMargin
     val steps = (1 to iters).flatMap { i =>
-      Seq(assign(s"a$i", "smp", s"c${i - 1}"), means(s"c$i", s"a$i"))
+      Seq(assign(s"${p}a$i", s"${p}smp", s"${p}c${i - 1}"),
+        means(s"${p}c$i", s"${p}a$i"))
     }
     Seq(
-      "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-      s"smp AS (SELECT vec_id, v FROM e WHERE vec_id < $sampleN)",
-      s"c0 AS (SELECT vec_id::BIGINT AS cid, v AS cv FROM e WHERE vec_id < $k)") ++
-      steps :+ assign("cells", "e", s"c$iters")
+      s"${p}e AS ($eDef)",
+      s"${p}smp AS (SELECT vec_id, v FROM ${p}e WHERE vec_id < $sampleN)",
+      s"${p}c0 AS (SELECT vec_id::BIGINT AS cid, v AS cv FROM ${p}e WHERE vec_id < $k)") ++
+      steps :+ assign(s"${p}cells", s"${p}e", s"${p}c$iters")
   }
+
+  /** The k-means chain over all vectors: `e`, `c$iters`, `cells`. Used by
+    * the IVF, IVFADC and SemDeDup oracles. */
+  private def kmeansCellsCtes(k: Int, iters: Int, sampleN: Long): Seq[String] =
+    kmeansChain("", embVecSql, k, iters, sampleN)
 
   /** OLS moment + Cramer CTEs over `qual` (x1 = punct_ratio,
     * x2 = stopword_ratio, y = quality): DECIMAL-exact sums, then the
@@ -5074,86 +5054,69 @@ object SparkEntry {
    * nprobe-cell search for query vec_id=0.
    */
   private def ivfOracleSql(k: Int, iters: Int, sampleN: Long, nprobe: Int,
-                           topK: Int): String = {
-    val ctes = kmeansCellsCtes(k, iters, sampleN) ++ Seq(
-      "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-      s"""probe AS (SELECT cid FROM c$iters CROSS JOIN q
-         |  ORDER BY list_cosine_similarity(cv, qv) DESC, cid LIMIT $nprobe)""".stripMargin)
-    s"""WITH ${ctes.mkString(",\n")}
+                           topK: Int): String =
+    s"""WITH ${probeCtes(k, iters, sampleN, nprobe).mkString(",\n")}
        |SELECT e.vec_id AS vec_id, round(list_cosine_similarity(e.v, q.qv), 4) AS cos_sim
        |FROM e JOIN cells ON e.vec_id = cells.vec_id
        |JOIN probe ON cells.cell = probe.cid CROSS JOIN q
        |WHERE e.vec_id <> 0
        |ORDER BY cos_sim DESC, vec_id LIMIT $topK""".stripMargin
-  }
 
-  /** One PQ subspace's k-means CTE chain — [[kmeansCellsCtes]] with every
-    * name prefixed `p<s>` and vectors SLICED to the subspace ([lo:hi],
-    * 1-based inclusive, mirroring Spark's `slice(v, lo, len)`).
-    * `srcTable`/`vecExpr` select what gets sliced — the raw embeddings by
-    * default, the coarse-residual CTE for the IVFADC oracle. */
-  private def pqSubCtes(p: String, lo: Int, hi: Int, k: Int, iters: Int,
-                        sampleN: Long, srcTable: String = "embeddings",
-                        vecExpr: String = "embedding::DOUBLE[]"): Seq[String] = {
-    def assign(name: String, src: String, cents: String) =
-      s"""$name AS (
-         |  SELECT vec_id, cid AS cell FROM (
-         |    SELECT s.vec_id, c.cid,
-         |           row_number() OVER (PARTITION BY s.vec_id
-         |             ORDER BY list_cosine_similarity(s.v, c.cv) DESC, c.cid) AS rn
-         |    FROM $src s CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
-    def means(name: String, asg: String) =
-      s"""$name AS (
-         |  SELECT cid, list(m ORDER BY pos) AS cv FROM (
-         |    SELECT a.cell AS cid, u.pos,
-         |           CAST(sum(CAST(u.x AS DECIMAL(28,12))) AS DOUBLE) / count(*) AS m
-         |    FROM (SELECT vec_id, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM ${p}smp) u
-         |    JOIN $asg a ON a.vec_id = u.vec_id
-         |    GROUP BY a.cell, u.pos) GROUP BY cid)""".stripMargin
-    val steps = (1 to iters).flatMap { i =>
-      Seq(assign(s"${p}a$i", s"${p}smp", s"${p}c${i - 1}"),
-        means(s"${p}c$i", s"${p}a$i"))
-    }
-    Seq(
-      s"${p}e AS (SELECT vec_id, ($vecExpr)[$lo:$hi] AS v FROM $srcTable)",
-      s"${p}smp AS (SELECT vec_id, v FROM ${p}e WHERE vec_id < $sampleN)",
-      s"${p}c0 AS (SELECT vec_id::BIGINT AS cid, v AS cv FROM ${p}e WHERE vec_id < $k)") ++
-      steps :+ assign(s"${p}cells", s"${p}e", s"${p}c$iters")
+  /** The coarse k-means chain, `q`, and `probe`: the `nprobe` centroids
+    * nearest the query (cosine desc, smaller cid on ties). Shared by the
+    * IVF and IVFADC oracles. */
+  private def probeCtes(k: Int, iters: Int, sampleN: Long,
+                        nprobe: Int): Seq[String] =
+    kmeansCellsCtes(k, iters, sampleN) ++ Seq(qCte,
+      s"""probe AS (SELECT cid FROM c$iters CROSS JOIN q
+         |  ORDER BY list_cosine_similarity(cv, qv) DESC, cid LIMIT $nprobe)""".stripMargin)
+
+  /** The m PQ subspace k-means chains, subspace s named `p<s>` over
+    * vectors SLICED to it ([lo:hi], 1-based inclusive, mirroring Spark's
+    * `slice(v, lo, len)`). `srcTable`/`vecExpr` select what gets sliced —
+    * the raw embeddings by default, the coarse-residual CTE for IVFADC. */
+  private def pqChains(m: Int, sub: Int, k: Int, iters: Int, sampleN: Long,
+                       srcTable: String = "embeddings",
+                       vecExpr: String = "embedding::DOUBLE[]"): Seq[String] =
+    (0 until m).flatMap(s => kmeansChain(s"p$s",
+      s"SELECT vec_id, ($vecExpr)[${s * sub + 1}:${(s + 1) * sub}] AS v FROM $srcTable",
+      k, iters, sampleN))
+
+  /** PQ reconstruction CTE `name`: each `base` vector's m assigned
+    * codewords ([[pqChains]]) concatenated with `||` as `out`. */
+  private def pqReconCte(name: String, base: String, out: String, m: Int,
+                         iters: Int): String = {
+    val joins = (0 until m).map(s =>
+      s"JOIN p${s}cells ON p${s}cells.vec_id = $base.vec_id JOIN p${s}c$iters cc$s ON cc$s.cid = p${s}cells.cell")
+      .mkString("\n  ")
+    val recon = (0 until m).map(s => s"cc$s.cv").mkString(" || ")
+    s"""$name AS (
+       |  SELECT $base.vec_id, ($recon) AS $out
+       |  FROM $base
+       |  $joins)""".stripMargin
   }
 
   /** PQ/ADC oracle: per-subspace k-means cells, reconstruction by
     * concatenating assigned centroids, rank by cos(exact query, x̂). */
   private def pqOracleSql(m: Int, sub: Int, k: Int, iters: Int,
-                          sampleN: Long, topK: Int): String = {
-    val subCtes = (0 until m).flatMap(s =>
-      pqSubCtes(s"p$s", s * sub + 1, (s + 1) * sub, k, iters, sampleN))
-    val joins = (0 until m).map(s =>
-      s"JOIN p${s}cells ON p${s}cells.vec_id = fe.vec_id JOIN p${s}c$iters cc$s ON cc$s.cid = p${s}cells.cell")
-      .mkString("\n  ")
-    val recon = (0 until m).map(s => s"cc$s.cv").mkString(" || ")
-    s"""WITH fe AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-       |${subCtes.mkString(",\n")},
+                          sampleN: Long, topK: Int): String =
+    s"""WITH fe AS ($embVecSql),
+       |${pqChains(m, sub, k, iters, sampleN).mkString(",\n")},
        |q AS (SELECT v AS qv FROM fe WHERE vec_id = 0),
-       |recon AS (
-       |  SELECT fe.vec_id, ($recon) AS rv
-       |  FROM fe
-       |  $joins)
+       |${pqReconCte("recon", "fe", "rv", m, iters)}
        |SELECT recon.vec_id AS vec_id, round(list_cosine_similarity(q.qv, recon.rv), 4) AS pq_sim
        |FROM recon CROSS JOIN q
        |WHERE recon.vec_id <> 0
        |ORDER BY pq_sim DESC, vec_id LIMIT $topK""".stripMargin
-  }
 
   /** PQ code-table oracle: each vector's per-subspace cell id. */
   private def pqCodesOracleSql(m: Int, sub: Int, k: Int, iters: Int,
                                sampleN: Long): String = {
-    val subCtes = (0 until m).flatMap(s =>
-      pqSubCtes(s"p$s", s * sub + 1, (s + 1) * sub, k, iters, sampleN))
     val joins = (0 until m).map(s =>
       s"JOIN p${s}cells ON p${s}cells.vec_id = fe.vec_id").mkString("\n  ")
     val codes = (0 until m).map(s => s"p${s}cells.cell AS code$s").mkString(", ")
     s"""WITH fe AS (SELECT vec_id FROM embeddings),
-       |${subCtes.mkString(",\n")}
+       |${pqChains(m, sub, k, iters, sampleN).mkString(",\n")}
        |SELECT fe.vec_id AS vec_id, $codes
        |FROM fe
        |  $joins
@@ -5162,37 +5125,24 @@ object SparkEntry {
 
   /** IVFADC oracle: coarse k-means cells ([[kmeansCellsCtes]]) give the
     * probe set AND the residuals x − c(x); per-subspace k-means chains
-    * ([[pqSubCtes]] over the residual CTE) quantize the residuals; rank
+    * ([[pqChains]] over the residual CTE) quantize the residuals; rank
     * the probed cells by cos(exact q, c(x) + r̂). */
   private def ivfadcOracleSql(dim: Int, kCoarse: Int, iters: Int,
                               sampleN: Long, nprobe: Int, m: Int, sub: Int,
                               k: Int, topK: Int): String = {
-    val subCtes = (0 until m).flatMap(s =>
-      pqSubCtes(s"p$s", s * sub + 1, (s + 1) * sub, k, iters, sampleN,
-        srcTable = "re", vecExpr = "rv"))
-    val joins = (0 until m).map(s =>
-      s"JOIN p${s}cells ON p${s}cells.vec_id = re.vec_id JOIN p${s}c$iters cc$s ON cc$s.cid = p${s}cells.cell")
-      .mkString("\n  ")
-    val recon = (0 until m).map(s => s"cc$s.cv").mkString(" || ")
-    val ctes = kmeansCellsCtes(kCoarse, iters, sampleN) ++ Seq(
-      "q AS (SELECT v AS qv FROM e WHERE vec_id = 0)",
-      s"""probe AS (SELECT cid FROM c$iters CROSS JOIN q
-         |  ORDER BY list_cosine_similarity(cv, qv) DESC, cid LIMIT $nprobe)""".stripMargin,
+    val ctes = probeCtes(kCoarse, iters, sampleN, nprobe) ++ Seq(
       s"""re AS (
          |  SELECT e.vec_id, cells.cell,
          |         list_transform(range(1, $dim + 1), i -> e.v[i] - cc.cv[i]) AS rv
          |  FROM e JOIN cells ON cells.vec_id = e.vec_id
          |       JOIN c$iters cc ON cc.cid = cells.cell)""".stripMargin) ++
-      subCtes ++ Seq(
-      s"""rhat AS (
-         |  SELECT re.vec_id, ($recon) AS rr
-         |  FROM re
-         |  $joins)""".stripMargin,
-      s"""xhat AS (
-         |  SELECT re.vec_id, re.cell,
-         |         list_transform(range(1, $dim + 1), i -> cc.cv[i] + rhat.rr[i]) AS xv
-         |  FROM re JOIN rhat ON rhat.vec_id = re.vec_id
-         |       JOIN c$iters cc ON cc.cid = re.cell)""".stripMargin)
+      pqChains(m, sub, k, iters, sampleN, srcTable = "re", vecExpr = "rv") ++
+      Seq(pqReconCte("rhat", "re", "rr", m, iters),
+        s"""xhat AS (
+           |  SELECT re.vec_id, re.cell,
+           |         list_transform(range(1, $dim + 1), i -> cc.cv[i] + rhat.rr[i]) AS xv
+           |  FROM re JOIN rhat ON rhat.vec_id = re.vec_id
+           |       JOIN c$iters cc ON cc.cid = re.cell)""".stripMargin)
     s"""WITH ${ctes.mkString(",\n")}
        |SELECT xhat.vec_id AS vec_id,
        |       round(list_cosine_similarity(q.qv, xhat.xv), 4) AS adc_sim

@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
@@ -65,13 +67,17 @@ object CentroidOps {
     dot / (Math.sqrt(na) * Math.sqrt(nb))
   }
 
-  /** Index of the argmax-(cosine, −cid) centroid; −1 on an empty table. */
+  /** Index of the argmax-(cosine, −cid) centroid; −1 on an empty table.
+    * A null vector scores NaN against every centroid — all ties — so the
+    * smallest cid wins, as in `assignCells`' struct max over null cosines
+    * and the oracle's row_number. */
   def nearestIdx(v: ArrayData, t: CentroidTable): Int = {
     var best = -1; var bestCos = 0.0; var bestNc = 0L
     var i = 0
     val k = t.size
     while (i < k) {
-      val c = cosine(v, t.cents(i)); val nc = -t.cids(i)
+      val c = if (v == null) Double.NaN else cosine(v, t.cents(i))
+      val nc = -t.cids(i)
       if (best < 0 || {
         val cc = cmpDouble(c, bestCos); cc > 0 || (cc == 0 && nc > bestNc)
       }) { best = i; bestCos = c; bestNc = nc }
@@ -123,8 +129,13 @@ object CentroidOps {
   }
 }
 
-private[functions] trait CentroidCodebook { self: Expression =>
+private[functions] trait CentroidCodebook extends Expression {
   def codebook: Seq[(Long, Seq[Double])]
+  /** Plans print the input plus the codebook's shape, not its k·dim
+    * doubles. */
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ Iterator(s"k=${codebook.size}",
+      s"dim=${codebook.headOption.fold(0)(_._2.size)}")
   @transient protected lazy val table: CentroidOps.CentroidTable =
     CentroidOps.compile(codebook)
   protected def tableRef(ctx: CodegenContext): String =
@@ -139,20 +150,26 @@ private[functions] trait CentroidCodebook { self: Expression =>
 }
 
 /** Scan-local cell id: argmax-cosine centroid id for a vector (smaller id
-  * wins ties) — `cellColumn`'s semantics at depth O(1) in k. */
+  * wins ties) — `cellColumn`'s semantics at depth O(1) in k. Total: a
+  * null vector gets the smallest cid, so the column is non-nullable and
+  * a join on it infers no `isnotnull` filter that would run it again. */
 case class NearestCentroidId(child: Expression,
                              codebook: Seq[(Long, Seq[Double])])
     extends UnaryExpression with CentroidCodebook {
   override def checkInputDataTypes(): TypeCheckResult =
     checkVec(child.dataType, prettyName)
   override def dataType: DataType = LongType
+  override def nullable: Boolean = false
   override def prettyName: String = "nearest_centroid_id"
-  override def nullSafeEval(v: Any): Any =
-    CentroidOps.nearestId(v.asInstanceOf[ArrayData], table)
+  override def eval(input: InternalRow): Any =
+    CentroidOps.nearestId(child.eval(input).asInstanceOf[ArrayData], table)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = tableRef(ctx)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.CentroidOps.nearestId($c, $ref);")
+    val v = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      long ${ev.value} = graft.functions.CentroidOps.nearestId(
+        ${v.isNull} ? null : ${v.value}, $ref);""", isNull = FalseLiteral)
   }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -252,14 +269,21 @@ case class VecAdd(left: Expression, right: Expression)
 }
 
 object CentroidExprs {
+  /** An argmax over no centroids has no answer: refuse it on the driver. */
+  private def nonEmpty(cb: Seq[(Long, Seq[Double])], name: String): Unit =
+    require(cb.nonEmpty, s"$name needs a non-empty codebook")
   /** argmax-cosine centroid id (codebook driver-held, task-broadcast). */
-  def nearestCentroidId(vec: Column, cb: Seq[(Long, Seq[Double])]): Column =
+  def nearestCentroidId(vec: Column, cb: Seq[(Long, Seq[Double])]): Column = {
+    nonEmpty(cb, "nearest_centroid_id")
     GraftBridge.column(NearestCentroidId(
       GraftBridge.expression(vec.cast("array<double>")), cb))
+  }
   /** argmax-cosine centroid vector. */
-  def nearestCentroidVec(vec: Column, cb: Seq[(Long, Seq[Double])]): Column =
+  def nearestCentroidVec(vec: Column, cb: Seq[(Long, Seq[Double])]): Column = {
+    nonEmpty(cb, "nearest_centroid_vec")
     GraftBridge.column(NearestCentroidVec(
       GraftBridge.expression(vec.cast("array<double>")), cb))
+  }
   /** centroid vector by stored code (null when unknown). */
   def centroidLookupVec(code: Column, cb: Seq[(Long, Seq[Double])]): Column =
     GraftBridge.column(CentroidLookupVec(

@@ -182,7 +182,7 @@ object Curation {
   /**
    * Deterministic stratified sampling: keep a row iff
    * hash(stratum|id) mod 100 < rate(stratum). The hash is the same
-   * md5-prefix→bigint construction as MinHash ([[Dedup.baseHash]] idea) so
+   * md5-prefix→bigint construction as MinHash ([[Dedup.baseHashOfDigest]]) so
    * the sample is reproducible across engines, partitionings, and re-runs —
    * no `rand()`, which would break resume idempotence and oracle checks.
    *

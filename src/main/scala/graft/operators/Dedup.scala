@@ -39,12 +39,11 @@ object Dedup {
   val MinhashB: Seq[Long] = Seq(12345L, 23456L, 34567L, 45678L,
     56789L, 67890L, 78901L, 89012L)
 
-  /** Base hash of a shingle: first 15 hex chars of md5 → bigint mod P
-    * (engine-portable: DuckDB `('0x'||substr(md5(g),1,15))::UBIGINT`). */
-  def baseHash(g: Column): Column = baseHashOfDigest(md5(g))
-
-  /** [[baseHash]] from an ALREADY-COMPUTED md5 hex digest — lets a caller
-    * that stages (id, digest) rows derive signatures without re-hashing. */
+  /** Base hash of a shingle from its md5 hex digest: the first 15 hex
+    * chars → bigint mod P (engine-portable: DuckDB
+    * `('0x'||substr(md5(g),1,15))::UBIGINT`). Taking the digest lets a
+    * caller that stages (id, digest) rows derive signatures without
+    * re-hashing. */
   def baseHashOfDigest(dig: Column): Column =
     pmod(conv(substring(dig, 1, 15), 16, 10).cast("long"), lit(MinhashP))
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorExprs
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import graft.functions.{CentroidExprs, VectorExprs}
 
 /**
  * Similarity search over an embedding column (`Array[Float]`) — brute-force
@@ -39,17 +40,47 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = VectorExprs.cosineSim(a, b)
 
   /**
+   * The ranked tail of every single-stage top-k: (id, `score` rounded to
+   * 4 dp as `name`), score desc with id tiebreak, first k — plans as
+   * TakeOrderedAndProject (per-partition k then merge, no global sort).
+   * Rounding makes the order engine-portable: the DuckDB oracles rank the
+   * same rounded value.
+   */
+  def topKBy(df: DataFrame, idCol: String, score: Column, name: String,
+             k: Int): DataFrame =
+    df.select(col(idCol), round(score, 4).as(name))
+      .orderBy(col(name).desc, col(idCol).asc)
+      .limit(k)
+
+  /** The vector of row `id` (one row — the query, model-sized). */
+  def queryVector(emb: DataFrame, idCol: String, vecCol: String,
+                  id: Long): Seq[Double] =
+    emb.filter(col(idCol) === id).select(col(vecCol))
+      .collect()(0).getSeq[Double](0)
+
+  /** `df` without row `excludeId` (when given) — the stored-index probes'
+    * way to leave the query itself out. */
+  private def excluding(df: DataFrame, idCol: String,
+                        excludeId: Option[Long]): DataFrame =
+    excludeId.fold(df)(id => df.filter(col(idCol) =!= id))
+
+  /**
    * Brute-force top-k neighbors of one query vector: O(n·d) scan, ranked
    * by cosine desc with id tiebreak → TakeOrderedAndProject.
    */
   def bruteForceTopK(emb: DataFrame, idCol: String, vecCol: String,
-                     query: Seq[Float], k: Int): DataFrame = {
-    val q = array(query.map(v => lit(v.toDouble)): _*)
-    emb.select(col(idCol),
-      round(cosine(col(vecCol), q), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
+                     query: Seq[Float], k: Int): DataFrame =
+    topKBy(emb, idCol,
+      cosine(col(vecCol), array(query.map(v => lit(v.toDouble)): _*)),
+      "cos_sim", k)
+
+  /** Component i's sign bit (1-based) as "1"/"0", never null. */
+  private def signBit(vec: Column, i: Int): Column =
+    when(element_at(vec, i) > 0, "1").otherwise("0")
+
+  /** [[signBucket]] of a driver-held query vector. */
+  private def queryBucket(query: Seq[Double], nBits: Int): String =
+    query.take(nBits).map(v => if (v > 0) "1" else "0").mkString
 
   /**
    * Sign-LSH bucket key: the sign pattern of `nBits` fixed components —
@@ -63,8 +94,7 @@ object Similarity {
     // sequence...)): each bit is always "1"/"0", never null). The HOF
     // form was CodegenFallback and broke the surrounding projection out
     // of whole-stage codegen on every ANN/embedding scan that buckets.
-    concat((1 to nBits).map(i =>
-      when(element_at(vec, i) > 0, "1").otherwise("0")): _*)
+    concat((1 to nBits).map(signBit(vec, _)): _*)
 
   /**
    * ANN top-k: search only the query's sign bucket (probe-1 scale path).
@@ -72,13 +102,11 @@ object Similarity {
    * brute-force baseline.
    */
   def lshTopK(emb: DataFrame, idCol: String, vecCol: String,
-              query: Seq[Float], k: Int, nBits: Int = 4): DataFrame = {
-    val qBucket = query.take(nBits).map(v => if (v > 0) "1" else "0").mkString
-    emb.filter(signBucket(col(vecCol), nBits) === qBucket)
-      .select(col(idCol), round(cosine(col(vecCol), array(query.map(v => lit(v.toDouble)): _*)), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
-  }
+              query: Seq[Float], k: Int, nBits: Int = 4): DataFrame =
+    topKBy(emb.filter(signBucket(col(vecCol), nBits) ===
+        queryBucket(query.map(_.toDouble), nBits)), idCol,
+      cosine(col(vecCol), array(query.map(v => lit(v.toDouble)): _*)),
+      "cos_sim", k)
 
   /**
    * Two-stage Matryoshka retrieval: rank the corpus by cosine over the
@@ -104,10 +132,7 @@ object Similarity {
         slice(col("_qv"), 1, prefixDim)), 4).as("_coarse"))
       .orderBy(col("_coarse").desc, col(idCol).asc)
       .limit(pool)
-    coarse.select(col(idCol),
-      round(cosine(col(vecCol), col("_qv")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(coarse, idCol, cosine(col(vecCol), col("_qv")), "cos_sim", k)
   }
 
   /**
@@ -182,11 +207,8 @@ object Similarity {
       sqCodes(queryDf.select(col(qCol), lit(0L).as("_qid")), "_qid", qCol,
         params), "_qid", params)
       .select(col("vhat").as("_qhat"))
-    corpus.crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosine(col("vhat"), col("_qhat")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(corpus.crossJoin(broadcast(q)), idCol,
+      cosine(col("vhat"), col("_qhat")), "cos_sim", k)
   }
 
   /**
@@ -196,7 +218,7 @@ object Similarity {
    * equivalently, candidates are rows with ≥ nBits−1 sign agreements.
    */
   def multiProbeBuckets(query: Seq[Double], nBits: Int): Seq[String] = {
-    val qb = query.take(nBits).map(v => if (v > 0) "1" else "0").mkString
+    val qb = queryBucket(query, nBits)
     qb +: (0 until nBits).map(i =>
       qb.updated(i, if (qb(i) == '1') '0' else '1'))
   }
@@ -212,11 +234,8 @@ object Similarity {
   def lshTopKMultiProbe(emb: DataFrame, idCol: String, vecCol: String,
                         query: Seq[Double], k: Int, nBits: Int = 4): DataFrame = {
     val probes: Seq[Any] = multiProbeBuckets(query, nBits)
-    emb.filter(signBucket(col(vecCol), nBits).isin(probes: _*))
-      .select(col(idCol),
-        round(cosine(col(vecCol), array(query.map(lit): _*)), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(emb.filter(signBucket(col(vecCol), nBits).isin(probes: _*)), idCol,
+      cosine(col(vecCol), array(query.map(lit): _*)), "cos_sim", k)
   }
 
   /**
@@ -246,37 +265,36 @@ object Similarity {
    */
   def kmeansCentroids(emb: DataFrame, idCol: String, vecCol: String,
                       k: Int = 8, iters: Int = 2, sampleN: Long = 256): DataFrame = {
-    val spark = emb.sparkSession
-    // the sample is bounded (≤ sampleN rows) — one task beats 32 empty ones
-    val sample = collectSample(emb, idCol, vecCol, sampleN)
-    val seeds =
-      if (k <= sampleN) sample.filter(_._1 < k)
-      else collectSample(emb, idCol, vecCol, k)
-    val cents = kmeansLocal(sample, seeds, iters)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cid",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType))))
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      java.util.Arrays.asList(cents.map { case (cid, cv) =>
-        org.apache.spark.sql.Row(cid, cv.toSeq): org.apache.spark.sql.Row
-      }: _*)
-    spark.createDataFrame(rows, schema)
+    val (sample, seeds) = sampleAndSeeds(emb, idCol, vecCol, k, sampleN)
+    val rows = kmeansLocal(sample, seeds, iters)
+      .map { case (cid, cv) => Row(cid, cv.toSeq) }
+    emb.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("cid", LongType),
+        StructField("cv", ArrayType(DoubleType)))))
   }
 
-  /** Collect the bounded k-means sample (id < bound) as driver-side rows,
-    * widening float vectors to double exactly as the cosine cast does. */
-  private def collectSample(emb: DataFrame, idCol: String, vecCol: String,
-                            bound: Long): Array[(Long, Array[Double])] =
-    emb.filter(col(idCol) < bound)
+  /** The k-means sample (id < sampleN) and its seeds (id < k) as
+    * driver-side rows, float vectors widened to double exactly as the
+    * cosine cast does. Refuses a sample with no seed: Lloyd iterations
+    * from zero centroids would invent a cell the relational twin
+    * ([[assignCells]]) and the oracle never produce. */
+  private def sampleAndSeeds(emb: DataFrame, idCol: String, vecCol: String,
+                             k: Int, sampleN: Long)
+      : (Array[(Long, Array[Double])], Array[(Long, Array[Double])]) = {
+    // the sample is bounded (≤ sampleN rows) — one task beats 32 empty ones
+    def below(bound: Long) = emb.filter(col(idCol) < bound)
       .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
       .coalesce(1)
       .collect()
       .map(r => (r.getLong(0),
         if (r.isNullAt(1)) null
         else r.getSeq[Double](1).toArray))
+    val sample = below(sampleN)
+    val seeds = if (k <= sampleN) sample.filter(_._1 < k) else below(k)
+    require(seeds.nonEmpty,
+      s"k-means has no seed: no id below k=$k (sampleN=$sampleN)")
+    (sample, seeds)
+  }
 
   /** Spark SQL's total order for doubles (SQLOrderingUtil.compareDoubles):
     * -0.0 == 0.0, NaN equal to itself and greater than everything else —
@@ -316,7 +334,7 @@ object Similarity {
    * Output sorted by cid (the former collect order was partition-hash
    * order; every consumer is order-independent or sorts — documented).
    */
-  def kmeansLocal(sample: Array[(Long, Array[Double])],
+  private def kmeansLocal(sample: Array[(Long, Array[Double])],
                   seeds: Array[(Long, Array[Double])],
                   iters: Int): Seq[(Long, Array[Double])] = {
     var cents: Seq[(Long, Array[Double])] =
@@ -387,25 +405,25 @@ object Similarity {
         (-col("cid")).as("nc"))).as("m"))
       .select(col(idCol), (-col("m.nc")).cast("long").as("cell"))
 
-  /**
-   * Centroids as a MATERIALIZED literal table: the k-means plan is executed
-   * once and its k rows (bounded by k, never by corpus size — the same
-   * driver-side step MLlib's KMeans takes) become a local DataFrame, so
-   * downstream consumers (probe + full assignment) don't re-run the
-   * iterative lineage per branch.
-   */
-  def materializedCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                            k: Int = 8, iters: Int = 2,
-                            sampleN: Long = 256): DataFrame =
-    // kmeansCentroids now trains driver-side on the collected sample and
-    // already returns a k-row LOCAL DataFrame — nothing left to re-collect
-    kmeansCentroids(emb, idCol, vecCol, k, iters, sampleN)
-
   /** IVF cell table for the whole corpus (k-means centroids). */
   def ivfCells(emb: DataFrame, idCol: String, vecCol: String,
                k: Int = 8, iters: Int = 2, sampleN: Long = 256): DataFrame =
     assignCells(emb, idCol, vecCol,
-      materializedCentroids(emb, idCol, vecCol, k, iters, sampleN))
+      kmeansCentroids(emb, idCol, vecCol, k, iters, sampleN))
+
+  /** A (cid, cv) centroid table as a driver-held codebook, sorted by cid —
+    * k rows, the model. */
+  private def codebookOf(cents: DataFrame): Seq[(Long, Seq[Double])] =
+    cents.collect().map(r => (r.getLong(0), r.getSeq[Double](1).toSeq))
+      .sortBy(_._1).toSeq
+
+  /** The `nprobe` cells nearest the query `q` (cosine desc, smaller cid on
+    * ties) — the ranked probe set, nprobe ids, model-sized. */
+  private def nearestCells(cents: DataFrame, q: Column,
+                           nprobe: Int): Seq[Long] =
+    cents.orderBy(cosine(col("cv"), q).desc, col("cid"))
+      .limit(nprobe)
+      .collect().map(_.getAs[Long]("cid")).toSeq
 
   /**
    * Cell assignment as a SCAN-LOCAL column: with the k centroids collected
@@ -424,7 +442,11 @@ object Similarity {
    * (SimilaritySpec pins equality against the literal form).
    */
   def cellColumn(vecCol: Column, cents: Seq[(Long, Seq[Double])]): Column =
-    graft.functions.CentroidExprs.nearestCentroidId(vecCol, cents)
+    CentroidExprs.nearestCentroidId(vecCol, cents)
+
+  /** A candidate pair's rounded cosine over its (v1, v2) vectors — the
+    * score both near-dup self-joins filter on. */
+  private def pairCosine: Column = round(cosine(col("v1"), col("v2")), 4)
 
   /**
    * SemDeDup (Abbas et al. 2023, public — "SemDeDup: Data-efficient
@@ -444,8 +466,8 @@ object Similarity {
   def semDedupPairs(emb: DataFrame, idCol: String, vecCol: String,
                     eps: Double, k: Int = 8, iters: Int = 2,
                     sampleN: Long = 256): DataFrame = {
-    val cents = materializedCentroids(emb, idCol, vecCol, k, iters, sampleN)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val cents = codebookOf(kmeansCentroids(emb, idCol, vecCol, k, iters,
+      sampleN))
     val withCell = emb.select(col(idCol), col(vecCol),
       cellColumn(col(vecCol), cents).as("cell"))
     val a = withCell.select(col("cell"), col(idCol).as("id1"),
@@ -455,7 +477,7 @@ object Similarity {
     a.join(b, Seq("cell"))
       .filter(col("id1") < col("id2"))
       .select(col("cell"), col("id1"), col("id2"),
-        round(cosine(col("v1"), col("v2")), 4).as("cos_sim"))
+        pairCosine.as("cos_sim"))
       .filter(col("cos_sim") >= eps)
   }
 
@@ -484,23 +506,17 @@ object Similarity {
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               queryId: Long, topK: Int, k: Int = 8, nprobe: Int = 2,
               iters: Int = 2, sampleN: Long = 256): DataFrame = {
-    val cents = materializedCentroids(emb, idCol, vecCol, k, iters, sampleN)
-    val centsSeq = cents.collect() // k rows — the model
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    val cents = kmeansCentroids(emb, idCol, vecCol, k, iters, sampleN)
     val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("qv"))
-    val probed = cents.crossJoin(broadcast(q))
-      .orderBy(cosine(col("cv"), col("qv")).desc, col("cid"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0)).toSeq // nprobe ids — model-sized
+    val probed = nearestCells(cents.crossJoin(broadcast(q)), col("qv"), nprobe)
     // cell is a scan-local cellColumn predicate (the stored-index probe's
     // shape) — the former corpus-wide assignCells crossjoin+groupBy+join
     // shuffled the corpus twice to attach a column the scan can compute
-    emb.filter(cellColumn(col(vecCol), centsSeq).isin(probed: _*))
+    topKBy(emb.filter(cellColumn(col(vecCol), codebookOf(cents))
+        .isin(probed: _*))
       .crossJoin(broadcast(q))
-      .filter(col(idCol) =!= queryId)
-      .select(col(idCol), round(cosine(col(vecCol), col("qv")), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(topK)
+      .filter(col(idCol) =!= queryId), idCol,
+      cosine(col(vecCol), col("qv")), "cos_sim", topK)
   }
 
   /**
@@ -513,13 +529,11 @@ object Similarity {
   def writeIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
                     path: String, k: Int = 8, iters: Int = 2,
                     sampleN: Long = 256): Unit = {
-    val cents = materializedCentroids(emb, idCol, vecCol, k, iters, sampleN)
-    val centsSeq = cents.collect() // k rows — the model
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).toSeq
+    val cents = kmeansCentroids(emb, idCol, vecCol, k, iters, sampleN)
     // cell computed IN the scan (cellColumn — same argmax as assignCells);
     // the former assignCells+join shuffled the corpus twice for a column
     // that is a pure function of the vector
-    emb.withColumn("cell", cellColumn(col(vecCol), centsSeq))
+    emb.withColumn("cell", cellColumn(col(vecCol), codebookOf(cents)))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
     // model-sized table (k rows by construction): one task, one file —
     // a LocalTableScan write otherwise fans rows across default
@@ -538,16 +552,11 @@ object Similarity {
                    topK: Int, nprobe: Int = 2,
                    excludeId: Option[Long] = None): DataFrame = {
     val q = array(query.map(lit): _*)
-    val probed = spark.read.parquet(s"$path/centroids")
-      .orderBy(cosine(col("cv"), q).desc, col("cid"))
-      .limit(nprobe)
-      .collect().map(_.getAs[Long]("cid")).toSeq // nprobe ids — model-sized
+    val probed = nearestCells(spark.read.parquet(s"$path/centroids"), q, nprobe)
     val scan = spark.read.parquet(s"$path/vectors")
       .filter(col("cell").isin(probed: _*))
-    val base = excludeId.fold(scan)(id => scan.filter(col(idCol) =!= id))
-    base.select(col(idCol), round(cosine(col(vecCol), q), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol))
-      .limit(topK)
+    topKBy(excluding(scan, idCol, excludeId), idCol,
+      cosine(col(vecCol), q), "cos_sim", topK)
   }
 
   /**
@@ -560,7 +569,7 @@ object Similarity {
    * floats (k ≤ 256 → m bytes) — the standard way a 100 TB embedding
    * corpus keeps its index in RAM, and the effective codebook is kᵐ
    * cells for m·k trained centroids. Driver-held return (model-sized:
-   * m·k·(dim/m) doubles — the same seam as [[materializedCentroids]]),
+   * m·k·(dim/m) doubles — the same seam as [[kmeansCentroids]]),
    * sorted by centroid id for determinism.
    */
   def pqCodebooks(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
@@ -571,10 +580,7 @@ object Similarity {
     // ONE sample collect feeds all m subspace trainings (the slice is a
     // local subarray — Spark's slice(start, len) on the same rows); the
     // former per-subspace plan re-scanned the corpus m times
-    val sample = collectSample(emb, idCol, vecCol, sampleN)
-    val seeds =
-      if (k <= sampleN) sample.filter(_._1 < k)
-      else collectSample(emb, idCol, vecCol, k)
+    val (sample, seeds) = sampleAndSeeds(emb, idCol, vecCol, k, sampleN)
     def sl(v: Array[Double], s: Int): Array[Double] =
       if (v == null) null
       else v.slice(s * sub, math.min(v.length, s * sub + sub))
@@ -585,15 +591,6 @@ object Similarity {
     }
   }
 
-  /** Scan-local nearest-codebook-centroid VECTOR for one subspace slice:
-    * the [[cellColumn]] argmax carrying the centroid itself as payload —
-    * native [[graft.functions.NearestCentroidVec]] kernel (codebook as a
-    * reference object, depth O(1) in k; the former k-struct-literal
-    * `array_max` grew linearly in k). */
-  private def nearestCentroidVec(sl: Column,
-                                 cb: Seq[(Long, Seq[Double])]): Column =
-    graft.functions.CentroidExprs.nearestCentroidVec(sl, cb)
-
   /** PQ code per subspace (the stored representation): [[cellColumn]]'s
     * argmax on each slice — scan-local, no join, no shuffle. */
   def pqCodeColumns(vecCol: Column, codebooks: Seq[Seq[(Long, Seq[Double])]],
@@ -602,12 +599,14 @@ object Similarity {
       cellColumn(slice(vecCol, s * sub + 1, sub), cb)
     }
 
-  /** PQ reconstruction x̂: each subspace's assigned centroid, concatenated
-    * back to a dim-length vector — pure scan-local expression. */
+  /** PQ reconstruction x̂: each subspace's assigned centroid (the
+    * [[cellColumn]] argmax carrying the centroid itself, native
+    * [[graft.functions.NearestCentroidVec]] kernel), concatenated back to
+    * a dim-length vector — pure scan-local expression. */
   def pqReconstruct(vecCol: Column, codebooks: Seq[Seq[(Long, Seq[Double])]],
                     sub: Int): Column =
     concat(codebooks.zipWithIndex.map { case (cb, s) =>
-      nearestCentroidVec(slice(vecCol, s * sub + 1, sub), cb)
+      CentroidExprs.nearestCentroidVec(slice(vecCol, s * sub + 1, sub), cb)
     }: _*)
 
   /**
@@ -626,15 +625,31 @@ object Similarity {
              dim: Int, topK: Int = 10, m: Int = 4, k: Int = 8,
              iters: Int = 2, sampleN: Long = 256): DataFrame = {
     val cbs = pqCodebooks(emb, idCol, vecCol, dim, m, k, iters, sampleN)
-    val sub = dim / m
-    val qv = emb.filter(col(idCol) === queryId) // 1 row — the query
-      .select(col(vecCol)).collect()(0).getSeq[Double](0)
-    emb.filter(col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine(typedlit(qv), pqReconstruct(col(vecCol), cbs, sub)), 4)
-          .as("pq_sim"))
-      .orderBy(col("pq_sim").desc, col(idCol))
-      .limit(topK)
+    val qv = queryVector(emb, idCol, vecCol, queryId)
+    topKBy(emb.filter(col(idCol) =!= queryId), idCol,
+      cosine(typedlit(qv), pqReconstruct(col(vecCol), cbs, dim / m)),
+      "pq_sim", topK)
+  }
+
+  /**
+   * The IVFADC model: the coarse k-means table and its codebook, the
+   * residual column x − c(x) (native vec_sub over the nearest coarse
+   * centroid — zip_with is CodegenFallback, interpreted per row) and the
+   * m PQ codebooks trained on that residual. Shared by [[ivfadcTopK]]
+   * and [[writeIvfadcIndex]].
+   */
+  private def ivfadcModel(emb: DataFrame, idCol: String, vecCol: String,
+                          dim: Int, kCoarse: Int, m: Int, k: Int, iters: Int,
+                          sampleN: Long)
+      : (DataFrame, Seq[(Long, Seq[Double])], Column,
+         Seq[Seq[(Long, Seq[Double])]]) = {
+    val coarseDf = kmeansCentroids(emb, idCol, vecCol, kCoarse, iters, sampleN)
+    val coarse = codebookOf(coarseDf)
+    val resid = CentroidExprs.vecSub(col(vecCol),
+      CentroidExprs.nearestCentroidVec(col(vecCol), coarse))
+    val cbs = pqCodebooks(emb.select(col(idCol), resid.as("_r")),
+      idCol, "_r", dim, m, k, iters, sampleN)
+    (coarseDf, coarse, resid, cbs)
   }
 
   /**
@@ -650,53 +665,28 @@ object Similarity {
    * in SimilaritySpec.
    *
    * Plan contract: the coarse codebook and the m residual codebooks are
-   * driver-held literals (model-sized — the [[materializedCentroids]]
+   * driver-held literals (model-sized — the [[kmeansCentroids]]
    * seam); cell assignment, residual, reconstruction and cosine are all
    * scan-local expressions over ONLY the probed cells' rows (with the
    * stored [[writeIvfIndex]] layout the probe reads nprobe partition
    * directories), followed by ONE TakeOrdered. No join, no shuffle beyond
-   * the top-k merge. The residual arithmetic uses `zip_with` (interpreted
-   * HOF) — acceptable because it runs on the probed subset only, never
-   * the corpus.
+   * the top-k merge.
    */
   def ivfadcTopK(emb: DataFrame, idCol: String, vecCol: String,
                  queryId: Long, dim: Int, topK: Int = 10, kCoarse: Int = 8,
                  nprobe: Int = 2, m: Int = 4, k: Int = 8, iters: Int = 2,
                  sampleN: Long = 256): DataFrame = {
-    val sub = dim / m
-    val coarseDf = materializedCentroids(emb, idCol, vecCol, kCoarse,
-      iters, sampleN)
-    val coarse = coarseDf.collect() // kCoarse rows — the coarse model
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
-    // residual/reconstruction arithmetic via the native vec_sub/vec_add
-    // kernels (zip_with is CodegenFallback — interpreted per row)
-    val resid = graft.functions.CentroidExprs.vecSub(col(vecCol),
-      nearestCentroidVec(col(vecCol), coarse))
-    val cbs = pqCodebooks(emb.select(col(idCol), resid.as("_r")),
-      idCol, "_r", dim, m, k, iters, sampleN)
-    val qv = emb.filter(col(idCol) === queryId) // 1 row — the query
-      .select(col(vecCol)).collect()(0).getSeq[Double](0)
-    val probed = coarseDf // probe ranking via the SAME codegen cosine
-      .orderBy(cosine(col("cv"), typedlit(qv)).desc, col("cid"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0)).toSeq // nprobe ids — model-sized
-    val xhat = graft.functions.CentroidExprs.vecAdd(
-      nearestCentroidVec(col(vecCol), coarse),
-      pqReconstruct(resid, cbs, sub))
-    emb.filter(col(idCol) =!= queryId)
-      .filter(cellColumn(col(vecCol), coarse).isin(probed: _*))
-      .select(col(idCol),
-        round(cosine(typedlit(qv), xhat), 4).as("adc_sim"))
-      .orderBy(col("adc_sim").desc, col(idCol))
-      .limit(topK)
+    val (coarseDf, coarse, resid, cbs) =
+      ivfadcModel(emb, idCol, vecCol, dim, kCoarse, m, k, iters, sampleN)
+    val qv = queryVector(emb, idCol, vecCol, queryId)
+    val probed = nearestCells(coarseDf, typedlit(qv), nprobe)
+    val xhat = CentroidExprs.vecAdd(
+      CentroidExprs.nearestCentroidVec(col(vecCol), coarse),
+      pqReconstruct(resid, cbs, dim / m))
+    topKBy(emb.filter(col(idCol) =!= queryId)
+        .filter(cellColumn(col(vecCol), coarse).isin(probed: _*)), idCol,
+      cosine(typedlit(qv), xhat), "adc_sim", topK)
   }
-
-  /** Scan-local centroid lookup by stored code — no join, stays in the
-    * scan. Native [[graft.functions.CentroidLookupVec]] kernel (the former
-    * chained `when` was one expression node per codeword — O(k) depth). */
-  private def centroidLookup(code: Column,
-                             cb: Seq[(Long, Seq[Double])]): Column =
-    graft.functions.CentroidExprs.centroidLookupVec(code, cb)
 
   /**
    * Persist the IVFADC index in its scale layout (Jégou et al. 2011 §IV /
@@ -714,16 +704,9 @@ object Similarity {
                        path: String, dim: Int, kCoarse: Int = 8,
                        m: Int = 4, k: Int = 8, iters: Int = 2,
                        sampleN: Long = 256): Unit = {
-    val sub = dim / m
-    val coarseDf = materializedCentroids(emb, idCol, vecCol, kCoarse,
-      iters, sampleN)
-    val coarse = coarseDf.collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
-    val resid = graft.functions.CentroidExprs.vecSub(col(vecCol),
-      nearestCentroidVec(col(vecCol), coarse))
-    val cbs = pqCodebooks(emb.select(col(idCol), resid.as("_r")),
-      idCol, "_r", dim, m, k, iters, sampleN)
-    val codeCols = pqCodeColumns(resid, cbs, sub).zipWithIndex
+    val (coarseDf, coarse, resid, cbs) =
+      ivfadcModel(emb, idCol, vecCol, dim, kCoarse, m, k, iters, sampleN)
+    val codeCols = pqCodeColumns(resid, cbs, dim / m).zipWithIndex
       .map { case (c, s) => c.cast("int").as(s"code$s") }
     emb.select(col(idCol) +: cellColumn(col(vecCol), coarse).as("cell") +:
         codeCols: _*)
@@ -749,8 +732,8 @@ object Similarity {
    * table ranks the probe cells (model-sized read), the scan touches
    * ONLY the nprobe `cell=` partition directories (PartitionFilters
    * asserted in SimilaritySpec), and each survivor is scored from its m
-   * stored CODES — reconstruction is a chained-`when` centroid lookup
-   * plus one `zip_with` add, entirely scan-local, the raw vector never
+   * stored CODES — reconstruction is a centroid lookup per code plus one
+   * native vec_add, entirely scan-local, the raw vector never
    * read because it was never stored. Scores are identical to the
    * in-memory [[ivfadcTopK]] (same argmax semantics for cell and codes),
    * so both sit under the same oracle. Refuses a dim that differs from
@@ -764,28 +747,22 @@ object Similarity {
     val (dim, m) = (meta.getAs[Int]("dim"), meta.getAs[Int]("m"))
     require(dim == query.length,
       s"index at $path holds dim=$dim vectors, probed with dim=${query.length}")
-    val sub = dim / m
-    val coarse = spark.read.parquet(s"$path/coarse").collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toSeq)).sortBy(_._1).toSeq
+    val coarseDf = spark.read.parquet(s"$path/coarse")
+    val coarse = codebookOf(coarseDf)
     val cbs = spark.read.parquet(s"$path/codebooks").collect()
       .map(r => (r.getAs[Int]("subspace"), r.getLong(1), r.getSeq[Double](2).toSeq))
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(t => (t._2, t._3)).sortBy(_._1).toSeq)
     val q = typedlit(query)
-    val probed = spark.read.parquet(s"$path/coarse")
-      .orderBy(cosine(col("cv"), q).desc, col("cid"))
-      .limit(nprobe)
-      .collect().map(_.getLong(0)).toSeq // nprobe ids — model-sized
+    val probed = nearestCells(coarseDf, q, nprobe)
     val scan = spark.read.parquet(s"$path/codes")
       .filter(col("cell").isin(probed: _*))
-    val base = excludeId.fold(scan)(id => scan.filter(col(idCol) =!= id))
     val rhat = concat((0 until m).map(s =>
-      centroidLookup(col(s"code$s").cast("long"), cbs(s))): _*)
-    val xhat = graft.functions.CentroidExprs.vecAdd(
-      centroidLookup(col("cell"), coarse), rhat)
-    base.select(col(idCol), round(cosine(q, xhat), 4).as("adc_sim"))
-      .orderBy(col("adc_sim").desc, col(idCol))
-      .limit(topK)
+      CentroidExprs.centroidLookupVec(col(s"code$s"), cbs(s))): _*)
+    val xhat = CentroidExprs.vecAdd(
+      CentroidExprs.centroidLookupVec(col("cell"), coarse), rhat)
+    topKBy(excluding(scan, idCol, excludeId), idCol, cosine(q, xhat),
+      "adc_sim", topK)
   }
 
   /**
@@ -827,11 +804,8 @@ object Similarity {
     val probes: Seq[Any] = multiProbeBuckets(query, nBits)
     val scan = spark.read.parquet(s"$path/vectors")
       .filter(col("bucket").isin(probes: _*))
-    val base = excludeId.fold(scan)(id => scan.filter(col(idCol) =!= id))
-    base.select(col(idCol),
-        round(cosine(col(vecCol), array(query.map(lit): _*)), 4).as("cos_sim"))
-      .orderBy(col("cos_sim").desc, col(idCol).asc)
-      .limit(k)
+    topKBy(excluding(scan, idCol, excludeId), idCol,
+      cosine(col(vecCol), array(query.map(lit): _*)), "cos_sim", k)
   }
 
   /**
@@ -852,8 +826,8 @@ object Similarity {
     // constant band ranges — unrolled concat of per-bit when()s (see
     // signBucket: value-identical to the former HOF, fully codegen)
     val bandBuckets = (0 until bands).map { i =>
-      concat((i * bitsPerBand + 1 to (i + 1) * bitsPerBand).map(j =>
-        when(element_at(col(vecCol), j) > 0, "1").otherwise("0")): _*)
+      concat((i * bitsPerBand + 1 to (i + 1) * bitsPerBand)
+        .map(signBit(col(vecCol), _)): _*)
     }
     val withB = emb.select(col(blockCol).as("blk"), col(idCol), col(vecCol),
       posexplode(array(bandBuckets: _*)))
@@ -865,7 +839,7 @@ object Similarity {
       col(idCol).as("id2"), col(vecCol).as("v2"))
     l.join(r, Seq("blk", "band", "bucket"))
       .filter(col("id1") < col("id2"))
-      .withColumn("cos_sim", round(cosine(col("v1"), col("v2")), 4))
+      .withColumn("cos_sim", pairCosine)
       .filter(col("cos_sim") >= threshold)
       .select(col("id1"), col("id2"), col("cos_sim"))
       .distinct() // a pair may agree on several bands

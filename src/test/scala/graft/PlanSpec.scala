@@ -206,6 +206,87 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("Exchange hashpartitioning"), p)
   }
 
+  /** `emb` as a parquet scan: a local Seq is folded into a LocalRelation,
+    * which hides the scan-local filters and projections under test. */
+  private lazy val embScan = {
+    val path = tmpDir("plan-emb")
+    emb.select($"vec_id", $"v").write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
+  test("ANN ranked tail: every single-stage top-k plans as " +
+    "TakeOrderedAndProject — no global sort, no window") {
+    val qv = emb.filter($"vec_id" === 1).select($"v").as[Array[Double]]
+      .head().toSeq
+    val rest = embScan.filter($"vec_id" =!= 1)
+    val (ivf, adc, lsh) =
+      (tmpDir("plan-ivf"), tmpDir("plan-ivfadc"), tmpDir("plan-lsh"))
+    Similarity.writeIvfIndex(embScan, "vec_id", "v", ivf, k = 4, sampleN = 64)
+    Similarity.writeIvfadcIndex(embScan, "vec_id", "v", adc, dim = 8,
+      kCoarse = 4, m = 4, k = 4, sampleN = 64)
+    Similarity.writeLshIndex(embScan, "vec_id", "v", lsh)
+    val tops = Seq(
+      "brute" -> Similarity.bruteForceTopK(rest, "vec_id", "v",
+        qv.map(_.toFloat), 5),
+      "lsh" -> Similarity.lshTopK(rest, "vec_id", "v", qv.map(_.toFloat), 5),
+      "lsh multi-probe" -> Similarity.lshTopKMultiProbe(rest, "vec_id", "v",
+        qv, 5),
+      "sq" -> Similarity.sqTopK(rest, "vec_id", "v",
+        embScan.filter($"vec_id" === 1), "v", 5),
+      "ivf" -> Similarity.ivfTopK(embScan, "vec_id", "v", 1L, 5, k = 4,
+        sampleN = 64),
+      "pq" -> Similarity.pqTopK(embScan, "vec_id", "v", 1L, dim = 8,
+        topK = 5, k = 4, sampleN = 64),
+      "ivfadc" -> Similarity.ivfadcTopK(embScan, "vec_id", "v", 1L, dim = 8,
+        topK = 5, kCoarse = 4, k = 4, sampleN = 64),
+      "ivf index" -> Similarity.ivfIndexTopK(spark, ivf, "vec_id", "v", qv, 5,
+        excludeId = Some(1L)),
+      "ivfadc index" -> Similarity.ivfadcIndexTopK(spark, adc, "vec_id", qv,
+        5, excludeId = Some(1L)),
+      "lsh index" -> Similarity.lshIndexTopK(spark, lsh, "vec_id", "v", qv, 5,
+        excludeId = Some(1L)))
+    tops.foreach { case (name, df) =>
+      val p = planOf(df)
+      assert(p.contains("TakeOrderedAndProject"), s"$name:\n$p")
+      assert("""\bSort \[""".r.findFirstIn(p).isEmpty, s"$name sorts:\n$p")
+      assert(!p.contains("Window"), s"$name:\n$p")
+    }
+  }
+
+  test("centroid kernels: SemDeDup's cell runs in no Filter (it is total, " +
+    "so no null check re-runs it), and no ANN plan prints a codebook") {
+    val sem = planOf(Similarity.semDedupPairs(embScan, "vec_id", "v",
+      eps = 0.5, k = 4, sampleN = 64))
+    val filters = sem.linesIterator
+      .filter(l => l.contains("Filter") && l.contains("nearest_centroid_id"))
+    assert(filters.isEmpty, s"the cell kernel re-runs in a filter:\n$sem")
+    val coarse = Similarity.kmeansCentroids(embScan, "vec_id", "v", k = 4,
+      sampleN = 64).as[(Long, Array[Double])].collect().map(_._2.toSeq).toSeq
+    val pq = Similarity.pqCodebooks(embScan, "vec_id", "v", dim = 8, m = 4,
+      k = 4, sampleN = 64).flatten.map(_._2)
+    val adc = tmpDir("plan-ivfadc-cb")
+    Similarity.writeIvfadcIndex(embScan, "vec_id", "v", adc, dim = 8,
+      kCoarse = 4, m = 4, k = 4, sampleN = 64)
+    val qv = emb.filter($"vec_id" === 1).select($"v").as[Array[Double]]
+      .head().toSeq
+    Seq(
+      "semdedup" -> (sem, coarse),
+      "ivf" -> (planOf(Similarity.ivfTopK(embScan, "vec_id", "v", 1L, 5,
+        k = 4, sampleN = 64)), coarse),
+      "pq" -> (planOf(Similarity.pqTopK(embScan, "vec_id", "v", 1L, dim = 8,
+        topK = 5, k = 4, sampleN = 64)), pq),
+      "ivfadc" -> (planOf(Similarity.ivfadcTopK(embScan, "vec_id", "v", 1L,
+        dim = 8, topK = 5, kCoarse = 4, k = 4, sampleN = 64)), coarse),
+      "ivfadc index" -> (planOf(Similarity.ivfadcIndexTopK(spark, adc,
+        "vec_id", qv, 5)), coarse)
+    ).foreach { case (name, (p, cb)) =>
+      assert(p.contains("_centroid_") || p.contains("centroid_lookup"),
+        s"$name runs no centroid kernel:\n$p")
+      cb.foreach(cv => assert(!p.contains(cv.mkString(", ")),
+        s"$name prints its codebook:\n$p"))
+    }
+  }
+
   test("cosine expression runs inside whole-stage codegen") {
     // spark.range source: a local Seq would be pre-evaluated by
     // ConvertToLocalRelation and show no physical operators at all

@@ -435,9 +435,11 @@ class PropertySpec extends SparkSuite {
         struct(graft.functions.VectorExprs.cosineSim($"v", typedlit(cv))
           .as("c"), lit(-cid).as("nc"))
       }: _*)).getField("nc").cast("long")
-      // random vectors, every centroid itself, and the all-zero vector
-      // (NaN cosine against every centroid)
-      val vs = Seq.fill(300)(vec()) ++ cb.map(_._2) :+ Seq.fill(dim)(0.0)
+      // random vectors, every centroid itself, the all-zero vector (NaN
+      // cosine against every centroid) and a null vector (null cosine
+      // against every centroid: the smaller id wins, as in assignCells)
+      val vs = Seq.fill(300)(vec()) ++ cb.map(_._2) :+ Seq.fill(dim)(0.0) :+
+        null
       val rows = vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("id", "v").repartition(2)
         .select($"id",

@@ -427,7 +427,7 @@ class SimilaritySpec extends SparkSuite {
     assert(keep.contains(0L) && !keep.contains(1L) && !keep.contains(2L),
       s"lowest-id keeper in the +x cluster: $keep")
     // the scan-local cell expression is the same argmax as assignCells
-    val cents = Similarity.materializedCentroids(e, "vec_id", "v",
+    val cents = Similarity.kmeansCentroids(e, "vec_id", "v",
       k = 2, iters = 2, sampleN = 256)
     val centRows = cents.collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
@@ -492,6 +492,20 @@ class SimilaritySpec extends SparkSuite {
     assert(a.map(_._2) == a.map(_._2).sorted.reverse, "scores descend")
   }
 
+  test("k-means refuses a sample with no seed id below k, and the centroid " +
+    "kernels refuse an empty codebook") {
+    val far = (100 to 109).map(i => (i.toLong, vec(i))).toDF("vec_id", "v")
+    val noSeed = intercept[IllegalArgumentException] {
+      Similarity.kmeansCentroids(far, "vec_id", "v", k = 8)
+    }
+    assert(noSeed.getMessage.contains("k=8") &&
+      noSeed.getMessage.contains("sampleN=256"), noSeed.getMessage)
+    intercept[IllegalArgumentException] {
+      Similarity.pqCodebooks(far, "vec_id", "v", dim = dim, m = 4, k = 8)
+    }
+    intercept[IllegalArgumentException] { Similarity.cellColumn($"v", Nil) }
+  }
+
   test("IVFADC: results come only from probed cells; residual reconstruction " +
     "is coarse centroid + residual codeword; deterministic") {
     val e = emb.select($"vec_id", $"v")
@@ -503,7 +517,7 @@ class SimilaritySpec extends SparkSuite {
     assert(a == b, "IVFADC must be deterministic")
     assert(a.length == 10 && a.map(_._2) == a.map(_._2).sorted.reverse)
     // subset contract: every hit lives in one of the 2 probed coarse cells
-    val cents = Similarity.materializedCentroids(e, "vec_id", "v", k = 4,
+    val cents = Similarity.kmeansCentroids(e, "vec_id", "v", k = 4,
       iters = 2, sampleN = 64)
     val qv = base.find(_._1 == 1L).get._2.toSeq
     val probed = cents
