@@ -5,7 +5,8 @@ Every `<name>.plan.txt` present in either directory is compared after
 masking what differs between two runs of the same plan: expression ids
 (`#123`), plan ids (`plan_id=7`), RDD ids (`MapPartitionsRDD[42]`), source
 line numbers (`SparkEntry.scala:2188`) and the run-scoped scratch path
-(`/tmp/graft_<tag>_local-<app id>`). Prints `identical` or `differs` per
+(`/tmp/graft_<tag>_local-<app id>`, and the `_local_<app id>` suffix of
+run-scoped table names such as q_bucketed_join's). Prints `identical` or `differs` per
 query (`missing` when one side has no plan) and exits 1 on any difference,
 printing the first differing masked lines.
 
@@ -21,7 +22,7 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"\.scala:\d+"), ".scala:N"),
-    (re.compile(r"local-\d+"), "local-N"),
+    (re.compile(r"local([-_])\d+"), r"local\1N"),
 ]
 
 

@@ -725,7 +725,7 @@ object SparkEntry {
       val sfx = s.sparkContext.applicationId.replaceAll("\\W", "_")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
       val stats = t(s, dir, "documents").select(col("doc_id"),
-        size(TextAnalysis.toks(col("text"))).cast("long").as("n_tokens"))
+        TextAnalysis.wordCount(col("text")).as("n_tokens"))
       val (ta, tb) = (s"bj_docs_$sfx", s"bj_stats_$sfx")
       Exports.writeBucketed(docs, ta, "doc_id", 8)
       Exports.writeBucketed(stats, tb, "doc_id", 8)
@@ -2302,6 +2302,46 @@ object SparkEntry {
 
   // ---- DuckDB oracles -----------------------------------------------------
 
+  /** Oracle twin of `TextAnalysis.words`: the raw lower-cased `\W+` split. */
+  private def wordsSql(e: String): String = s"regexp_split_to_array(lower($e), '\\W+')"
+
+  /** Oracle twin of `TextAnalysis.toks`: [[wordsSql]] with empties dropped. */
+  private def toksSql(e: String): String = s"list_filter(${wordsSql(e)}, x -> x <> '')"
+
+  /** Oracle twin of `TextAnalysis.wsToks`: whitespace tokens, empties dropped. */
+  private def wsToksSql(e: String): String =
+    raw"list_filter(regexp_split_to_array($e, '\s+'), x -> x <> '')"
+
+  /** Oracle twin of `TextAnalysis.md5Mod`: the content-hash coin of an md5
+    * hex `digest` expression, mod `m`. */
+  private def md5ModSql(digest: String, m: Long): String =
+    s"('0x' || substr($digest, 1, 15))::UBIGINT % $m"
+
+  /** The per-doc token table `tokf(doc_id, toks)` over the documents. */
+  private val tokfCte: String =
+    s"""tokf AS (
+      |  SELECT doc_id, ${toksSql("text")} AS toks
+      |  FROM documents)""".stripMargin
+
+  /** The corpus unigram LM of `Curation.unigramLmScore` (minCount 2):
+    * [[tokfCte]], token rows `tok`, counts `freq`, total `tot`, and the
+    * kept vocabulary under the caller's name `kept`. */
+  private def unigramLmCtes(kept: String): String =
+    s"""$tokfCte,
+      |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
+      |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
+      |tot AS (SELECT sum(c)::DOUBLE AS s FROM freq),
+      |$kept AS (SELECT tok, c FROM freq WHERE c >= 2)""".stripMargin
+
+  /** CTE `name` over `from(doc_id, grp, n_tokens)`: each doc's running
+    * token prefix within its `grp` in doc_id order — the oracle twin of
+    * `Curation.tokenPrefix`. */
+  private def prefixCte(name: String, grp: String, from: String): String =
+    s"""$name AS (
+      |  SELECT doc_id, $grp, n_tokens,
+      |         sum(n_tokens) OVER (PARTITION BY $grp ORDER BY doc_id) - n_tokens AS prefix
+      |  FROM $from)""".stripMargin
+
   /** OR-of-bands sign-agreement condition mirroring Similarity.nearDupPairs. */
   private def bandCondSql(bands: Int, bitsPerBand: Int): String =
     (0 until bands).map { i =>
@@ -2312,8 +2352,8 @@ object SparkEntry {
     }.mkString("(", " OR ", ")")
 
   private val shinglesCte =
-    """WITH tokf AS (
-      |  SELECT doc_id, source, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+    s"""WITH tokf AS (
+      |  SELECT doc_id, source, ${toksSql("text")} AS toks
       |  FROM documents),
       |tok AS (
       |  SELECT doc_id, source, unnest(toks) AS tok, generate_subscripts(toks, 1) AS p FROM tokf),
@@ -2325,7 +2365,7 @@ object SparkEntry {
 
   /** DuckDB twin of `Dedup.baseHashOfDigest(md5(g))`: first 15 md5 hex chars mod P. */
   private def baseHashSql(g: String): String =
-    s"('0x' || substr(md5($g), 1, 15))::UBIGINT % 2147483647"
+    md5ModSql(s"md5($g)", 2147483647L)
 
   /** The MinHash-LSH band preamble, mirroring `Dedup.minhashSignatures` +
     * `bucketsFromSignatures`: per-shingle base hash `hh`, the 8
@@ -2429,9 +2469,7 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
 
     "q_text_phrase" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |pos AS (
         |  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS p
         |  FROM tokf WHERE len(toks) >= 2),
@@ -2479,9 +2517,7 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
 
     "q_text_rank_idf" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok WHERE tok IN ('spark', 'window') GROUP BY 1, 2),
         |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1)
@@ -2491,9 +2527,7 @@ object SparkEntry {
         |GROUP BY 1 ORDER BY score DESC, doc_id""".stripMargin,
 
     "q_text_rank_bm25" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
         |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok WHERE tok IN ('spark', 'window') GROUP BY 1, 2),
         |df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1)
@@ -2507,9 +2541,7 @@ object SparkEntry {
     // different double than the literal would in a near-tie; avgdl is an
     // exact integer-sum average, bit-identical cross-engine
     "q_text_rank_bm25_full" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM tokf),
         |ad AS (SELECT avg(dl) AS avgdl FROM dl),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
@@ -2524,9 +2556,7 @@ object SparkEntry {
 
     // the stored-index roundtrip must reproduce the in-memory BM25
     "q_text_index" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM tokf),
         |ad AS (SELECT avg(dl) AS avgdl FROM dl),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
@@ -2544,9 +2574,7 @@ object SparkEntry {
     // Σ 1/(60+rank) — a single commutative two-term double add, so the
     // pround4 mirror is exact
     "q_hybrid_rrf" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM tokf),
         |ad AS (SELECT avg(dl) AS avgdl FROM dl),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
@@ -2575,12 +2603,12 @@ object SparkEntry {
         |ORDER BY rrf_score DESC, doc_id LIMIT 10""".stripMargin,
 
     "q_curation_pipeline" ->
-      """WITH b AS (
+      raw"""WITH b AS (
         |  SELECT doc_id, source, text, md5(text) AS h,
         |         CASE WHEN length(text) = 0 THEN 0.0
         |              ELSE floor(length(regexp_replace(text, '[\w\s]', '', 'g'))::DOUBLE / length(text) * 10000.0 + 0.5) / 10000.0 END AS punct_ratio,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS ntok,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'),
+        |         len(${toksSql("text")}) AS ntok,
+        |         len(list_filter(${wordsSql("text")},
         |             x -> x <> '' AND list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'], x))) AS nstop
         |  FROM documents),
         |r AS (
@@ -2598,8 +2626,8 @@ object SparkEntry {
         |keep AS (SELECT h, min(doc_id) AS doc_id FROM qf GROUP BY 1),
         |dd AS (SELECT qf.* FROM qf JOIN keep USING (h, doc_id)),
         |smp AS (SELECT * FROM dd
-        |        WHERE ('0x' || substr(md5(source || '|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100
-        |              < (CASE WHEN regexp_matches(source, '^src1\d$') THEN 50 ELSE 20 END))
+        |        WHERE ${md5ModSql("md5(source || '|' || doc_id::VARCHAR)", 100)}
+        |              < (CASE WHEN regexp_matches(source, '^src1\d$$') THEN 50 ELSE 20 END))
         |SELECT source, count(*) AS kept,
         |       CAST(sum(CAST(quality AS DECIMAL(18,4))) AS DOUBLE) AS sum_quality
         |FROM smp GROUP BY 1 ORDER BY source""".stripMargin,
@@ -2974,8 +3002,8 @@ object SparkEntry {
     },
 
     "q_dedup_simhash" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_distinct(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, list_distinct(${toksSql("text")}) AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
         |bits AS (
@@ -2994,7 +3022,7 @@ object SparkEntry {
         s"(CASE WHEN s$j > 0 THEN ${1L << (j - 1)} ELSE 0 END)").mkString(" + ")
       // 3-chunk split mirroring Dedup.simhashPairs: widths 11/11/10
       s"""WITH tokf AS (
-         |  SELECT doc_id, list_distinct(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')) AS toks
+         |  SELECT doc_id, list_distinct(${toksSql("text")}) AS toks
          |  FROM documents),
          |tok AS (SELECT doc_id, md5(unnest(toks)) AS h FROM tokf),
          |sums AS (SELECT doc_id, $weights FROM tok GROUP BY doc_id),
@@ -3034,13 +3062,13 @@ object SparkEntry {
          |ORDER BY id1, id2""".stripMargin,
 
     "q_bucketed_join" ->
-      """SELECT doc_id, source,
-        |       len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS n_tokens
+      s"""SELECT doc_id, source,
+        |       len(${toksSql("text")})::BIGINT AS n_tokens
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_tfidf_pairs" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, source, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, source, ${toksSql("text")} AS toks
         |  FROM documents),
         |tok AS (SELECT doc_id, source, unnest(toks) AS tok FROM tokf),
         |tf AS (SELECT doc_id, source, tok, count(*)::DOUBLE AS tf FROM tok GROUP BY 1, 2, 3),
@@ -3211,11 +3239,11 @@ object SparkEntry {
          |  SELECT d.doc_id, d.source, d.text
          |  FROM documents d JOIN cal ON cal.doc_id = d.doc_id WHERE cal.c >= 0.5),
          |tokf2 AS (
-         |  SELECT doc_id, source, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
+         |  SELECT doc_id, source, ${wsToksSql("text")} AS toks
          |  FROM sv),
          |anch2 AS (
          |  SELECT doc_id, toks, unnest(list_filter(range(1, len(toks) - 14),
-         |    p -> ('0x' || substr(md5(toks[p]), 1, 15))::UBIGINT % 4 = 0)) AS p
+         |    p -> ${md5ModSql("md5(toks[p])", 4)} = 0)) AS p
          |  FROM tokf2 WHERE len(toks) >= 16),
          |win2 AS (
          |  SELECT doc_id, p, md5(array_to_string(list_slice(toks, p, p + 15), ' ')) AS h
@@ -3250,8 +3278,8 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
 
     "q_token_count" ->
-      """SELECT doc_id,
-        |       len(list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '')) AS ws_tokens,
+      raw"""SELECT doc_id,
+        |       len(${wsToksSql("text")}) AS ws_tokens,
         |       len(list_filter(regexp_split_to_array(text, '\W+'), x -> x <> ''))
         |         + length(regexp_replace(text, '[\w\s]', '', 'g')) AS bpeish_tokens
         |FROM documents ORDER BY doc_id""".stripMargin,
@@ -3288,16 +3316,14 @@ object SparkEntry {
         |FROM hh ORDER BY doc_id""".stripMargin,
 
     "q_repetition" ->
-      """WITH lines AS (
+      raw"""WITH lines AS (
         |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\n'), x -> trim(x) <> '') AS ls
         |  FROM documents),
         |lf AS (
         |  SELECT doc_id, CASE WHEN len(ls) = 0 THEN 0.0
         |         ELSE floor((1.0 - len(list_distinct(ls))::DOUBLE / len(ls)) * 10000.0 + 0.5) / 10000.0 END AS dup_line_frac
         |  FROM lines),
-        |tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+        |$tokfCte,
         |tok AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS p FROM tokf),
         |bg AS (
         |  SELECT doc_id, g, count(*) AS c FROM (
@@ -3338,14 +3364,14 @@ object SparkEntry {
         |FROM f ORDER BY doc_id, cand""".stripMargin,
 
     "q_stratified_sample" ->
-      """SELECT doc_id, source FROM documents
-        |WHERE ('0x' || substr(md5(source || '|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100
-        |      < (CASE WHEN regexp_matches(source, '^src1\d$') THEN 50 ELSE 20 END)
+      raw"""SELECT doc_id, source FROM documents
+        |WHERE ${md5ModSql("md5(source || '|' || doc_id::VARCHAR)", 100)}
+        |      < (CASE WHEN regexp_matches(source, '^src1\d$$') THEN 50 ELSE 20 END)
         |ORDER BY doc_id""".stripMargin,
 
     "q_chunking" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |st AS (
         |  SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks) - 16, 1), 48)) AS s
@@ -3359,9 +3385,7 @@ object SparkEntry {
 
     "q_contamination" -> {
       val leads = (1 to 4).map(i => s"lead(tok,$i) OVER w").mkString(" || ' ' || ")
-      s"""WITH tokf AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '') AS toks
-         |  FROM documents),
+      s"""WITH $tokfCte,
          |tok AS (SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS p FROM tokf),
          |sh AS (SELECT DISTINCT doc_id, g FROM (
          |  SELECT doc_id, tok || ' ' || $leads AS g FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY p))
@@ -3373,8 +3397,8 @@ object SparkEntry {
     },
 
     "q_dedup_paragraph" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |st AS (
         |  SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks), 1), 8)) AS s
@@ -3411,13 +3435,13 @@ object SparkEntry {
     },
 
     "q_gopher_rules" ->
-      """WITH p AS (
+      s"""WITH p AS (
         |  SELECT doc_id,
         |         text || (CASE WHEN doc_id % 3 = 0 THEN ' ### flag ... end' ELSE ' plain end' END) AS payload
         |  FROM documents),
         |tk AS (
         |  SELECT doc_id, payload,
-        |         list_filter(regexp_split_to_array(lower(payload), '\W+'), x -> x <> '') AS toks
+        |         ${toksSql("payload")} AS toks
         |  FROM p),
         |m AS (
         |  SELECT doc_id, len(toks) AS ntok,
@@ -3440,9 +3464,7 @@ object SparkEntry {
         |FROM r ORDER BY doc_id""".stripMargin,
 
     "q_gopher_repetition" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |g AS (
         |  SELECT doc_id, 2 AS n, unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS gram
         |  FROM tokf WHERE len(toks) >= 2
@@ -3473,22 +3495,14 @@ object SparkEntry {
          |GROUP BY g ORDER BY df DESC, shingle LIMIT 50""".stripMargin,
 
     "q_unigram_lm" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
-        |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(c)::DOUBLE AS s FROM freq),
-        |kept AS (SELECT tok, c FROM freq WHERE c >= 2)
+      s"""WITH ${unigramLmCtes("kept")}
         |SELECT t.doc_id, count(*) AS n_tokens,
         |       floor(avg(-ln(coalesce(k.c, 1)::DOUBLE / (SELECT s FROM tot))) * 10000.0 + 0.5) / 10000.0 AS lm_score
         |FROM tok t LEFT JOIN kept k USING (tok)
         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "q_bpe_pairs" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |pairs AS (
         |  SELECT unnest(list_transform(range(1, len(toks)),
         |                               i -> toks[i] || ' ' || toks[i + 1])) AS pair
@@ -3506,7 +3520,7 @@ object SparkEntry {
          |enc AS (SELECT doc_id, count(*) AS nt FROM tok3 GROUP BY 1),
          |w AS (
          |  SELECT doc_id, source,
-         |         len(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')) AS nw
+         |         len(${toksSql("text")}) AS nw
          |  FROM documents)
          |SELECT source, count(*)::BIGINT AS n_docs, sum(nt)::BIGINT AS bpe_tokens,
          |       sum(nw)::BIGINT AS words,
@@ -3515,12 +3529,12 @@ object SparkEntry {
          |GROUP BY source ORDER BY source""".stripMargin,
 
     "q_dedup_remove" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |anch AS (
         |  SELECT doc_id, toks, unnest(list_filter(range(1, len(toks) - 14),
-        |    p -> ('0x' || substr(md5(toks[p]), 1, 15))::UBIGINT % 4 = 0)) AS p
+        |    p -> ${md5ModSql("md5(toks[p])", 4)} = 0)) AS p
         |  FROM tokf WHERE len(toks) >= 16),
         |win AS (
         |  SELECT doc_id, p, md5(array_to_string(list_slice(toks, p, p + 15), ' ')) AS h
@@ -3547,8 +3561,8 @@ object SparkEntry {
         |ORDER BY f.doc_id""".stripMargin,
 
     "q_dedup_winnow" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |hsx AS (
         |  SELECT doc_id,
@@ -3574,7 +3588,7 @@ object SparkEntry {
     // base hashes (both engines execute the same accumulator sequence)
     "q_dedup_winnow_fast" ->
       raw"""WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |thx AS (
         |  SELECT doc_id,
@@ -3601,13 +3615,13 @@ object SparkEntry {
         |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "q_dedup_substring" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\s+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT doc_id, ${wsToksSql("text")} AS toks
         |  FROM documents),
         |anch AS (
         |  SELECT doc_id, toks,
         |         list_filter(range(1, len(toks) - 14),
-        |                     p -> ('0x' || substr(md5(toks[p]), 1, 15))::UBIGINT % 4 = 0) AS ps
+        |                     p -> ${md5ModSql("md5(toks[p])", 4)} = 0) AS ps
         |  FROM tokf WHERE len(toks) >= 16),
         |fullw AS (
         |  SELECT doc_id,
@@ -3665,7 +3679,7 @@ object SparkEntry {
         |t2 AS (
         |  SELECT source AS src_domain,
         |         lower(regexp_extract(href, '^(?:https?://)?([^/:?#]+)', 1)) AS dst_domain,
-        |         unnest(list_filter(regexp_split_to_array(lower(anchor), '\\W+'), x -> x <> '')) AS term
+        |         unnest(${toksSql("anchor")}) AS term
         |  FROM l)
         |SELECT dst_domain, term, count(*) AS n FROM t2
         |WHERE dst_domain <> '' AND dst_domain <> src_domain
@@ -3725,13 +3739,7 @@ object SparkEntry {
         |ORDER BY domain""".stripMargin,
 
     "q_curation_v3" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
-        |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(c)::DOUBLE AS s FROM freq),
-        |keptv AS (SELECT tok, c FROM freq WHERE c >= 2),
+      raw"""WITH ${unigramLmCtes("keptv")},
         |lm AS (
         |  SELECT t.doc_id, count(*) AS n_tokens,
         |         floor(avg(-ln(coalesce(k.c, 1)::DOUBLE / (SELECT s FROM tot))) * 10000.0 + 0.5) / 10000.0 AS lm_score
@@ -3748,8 +3756,8 @@ object SparkEntry {
         |GROUP BY 1 ORDER BY source""".stripMargin,
 
     "q_source_kl" ->
-      """WITH tokf AS (
-        |  SELECT source, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+      s"""WITH tokf AS (
+        |  SELECT source, ${toksSql("text")} AS toks
         |  FROM documents),
         |tok AS (SELECT source, unnest(toks) AS tok FROM tokf),
         |st AS (SELECT source, tok, count(*) AS sc FROM tok GROUP BY 1, 2),
@@ -3762,9 +3770,7 @@ object SparkEntry {
         |GROUP BY 1 ORDER BY source""".stripMargin,
 
     "q_bigram_lm" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
         |uni AS (SELECT tok, count(*) AS uc FROM tok GROUP BY 1),
         |tot AS (SELECT sum(uc)::DOUBLE AS s FROM uni),
@@ -3793,20 +3799,21 @@ object SparkEntry {
         |FROM scored GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     // a_s = (n_min/n_s)^(1-alpha) in basis points (round-half floor as
-    // everywhere); the accept coin is weightedSampleFilter's md5 recipe
+    // everywhere); the accept coin is weightedSampleFilter's md5 recipe;
+    // a token-less source has weight 0 and is dropped before n_min
     "q_temperature_sample" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, source,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS nt
+        |         len(${toksSql("text")}) AS nt
         |  FROM documents),
-        |c AS (SELECT source, sum(nt) AS ns FROM w GROUP BY 1),
+        |c AS (SELECT source, sum(nt) AS ns FROM w GROUP BY 1 HAVING sum(nt) > 0),
         |m AS (SELECT min(ns) AS nmin FROM c),
         |r AS (
         |  SELECT source, floor(pow(nmin::DOUBLE / ns, 0.5) * 10000 + 0.5)::BIGINT AS rate_bp
         |  FROM c CROSS JOIN m)
         |SELECT d.doc_id, d.source, r.rate_bp
         |FROM documents d JOIN r USING (source)
-        |WHERE (('0x' || substr(md5('w|' || d.doc_id::VARCHAR), 1, 15))::UBIGINT % 10000) < rate_bp
+        |WHERE (${md5ModSql("md5('w|' || d.doc_id::VARCHAR)", 10000)}) < rate_bp
         |ORDER BY doc_id""".stripMargin,
 
     // suffix set per host (every dot-suffix), semi-join against the list
@@ -3833,13 +3840,7 @@ object SparkEntry {
     // the q_unigram_lm model chain + per-source percent_rank terciles;
     // the rank is pround4'd on both engines before the CASE thresholds
     "q_ccnet_buckets" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
-        |tok AS (SELECT doc_id, unnest(toks) AS tok FROM tokf),
-        |freq AS (SELECT tok, count(*) AS c FROM tok GROUP BY 1),
-        |tot AS (SELECT sum(c)::DOUBLE AS s FROM freq),
-        |kept AS (SELECT tok, c FROM freq WHERE c >= 2),
+      s"""WITH ${unigramLmCtes("kept")},
         |lm AS (
         |  SELECT t.doc_id,
         |         floor(avg(-ln(coalesce(k.c, 1)::DOUBLE / (SELECT s FROM tot))) * 10000.0 + 0.5) / 10000.0 AS lm_score
@@ -3857,12 +3858,12 @@ object SparkEntry {
     // same model CTEs as dsirWeightsSql, emitted at bucket level; lr0 is
     // the smoothed unseen-bucket log-ratio (cr=0, ct=0 under +1 Laplace)
     "q_dsir_model" ->
-      """WITH tokf AS (
+      s"""WITH tokf AS (
         |  SELECT doc_id, source = 'src0' AS is_target,
-        |         list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents),
         |h AS (SELECT doc_id, is_target, md5(unnest(toks)) AS hx FROM tokf),
-        |b AS (SELECT is_target, (('0x' || substr(hx, 1, 15))::UBIGINT % 64)::BIGINT AS bucket FROM h),
+        |b AS (SELECT is_target, (${md5ModSql("hx", 64)})::BIGINT AS bucket FROM h),
         |m AS (
         |  SELECT bucket, count(*) AS cr,
         |         sum(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct
@@ -3878,7 +3879,7 @@ object SparkEntry {
          |$dsirWeightsSql)
          |SELECT doc_id, dsir_weight,
          |       floor((dsir_weight - ln(-ln(
-         |         ((('0x' || substr(md5('dsir|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 1000000)::DOUBLE + 0.5) / 1000000.0
+         |         ((${md5ModSql("md5('dsir|' || doc_id::VARCHAR)", 1000000)})::DOUBLE + 0.5) / 1000000.0
          |       ))) * 10000.0 + 0.5) / 10000.0 AS gumbel_score
          |FROM w
          |ORDER BY gumbel_score DESC, doc_id LIMIT 100""".stripMargin,
@@ -4018,7 +4019,7 @@ object SparkEntry {
     },
 
     "q_crawl_pipeline" ->
-      """WITH o AS (
+      s"""WITH o AS (
         |  SELECT doc_id AS url_id, md5(text) AS h_old
         |  FROM documents WHERE doc_id % 5 <> 0),
         |n AS (
@@ -4055,7 +4056,7 @@ object SparkEntry {
         |  WHERE coalesce(b.is_allow, true)),
         |tk AS (
         |  SELECT source, url_id,
-        |         list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM gated),
         |stats AS (
         |  SELECT source, count(*)::BIGINT AS n_docs, sum(len(toks))::BIGINT AS total_tokens
@@ -4074,9 +4075,7 @@ object SparkEntry {
         |FROM stats s JOIN est USING (source) ORDER BY source""".stripMargin,
 
     "q_novel_ngrams" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |ng AS (
         |  SELECT DISTINCT doc_id, toks[p] || ' ' || toks[p + 1] || ' ' || toks[p + 2] AS g
         |  FROM (SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 2)) AS p
@@ -4090,9 +4089,7 @@ object SparkEntry {
         |GROUP BY n.doc_id ORDER BY n.doc_id""".stripMargin,
 
     "q_pmi_collocations" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |pos AS (
         |  SELECT doc_id, toks, unnest(generate_series(1, len(toks) - 1)) AS p
         |  FROM tokf WHERE len(toks) >= 2),
@@ -4156,8 +4153,8 @@ object SparkEntry {
     // the class), so a plain (c desc, tok) ordering is parity-exact with
     // the Spark side's offset+within-class scheme
     "q_zipf_slope" ->
-      """WITH t AS (
-        |  SELECT unnest(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS tok
+      s"""WITH t AS (
+        |  SELECT unnest(${toksSql("text")}) AS tok
         |  FROM documents),
         |v AS (SELECT tok, count(*)::BIGINT AS c FROM t GROUP BY 1),
         |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS rank FROM v),
@@ -4209,19 +4206,17 @@ object SparkEntry {
         |FROM l ORDER BY doc_id""".stripMargin,
 
     "q_hash_features" ->
-      """WITH tokf AS (
-        |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
-        |  FROM documents),
+      s"""WITH $tokfCte,
         |h AS (SELECT doc_id, md5(unnest(toks)) AS hx FROM tokf)
         |SELECT doc_id,
-        |       (('0x' || substr(hx, 1, 15))::UBIGINT % 64)::BIGINT AS bucket,
+        |       (${md5ModSql("hx", 64)})::BIGINT AS bucket,
         |       sum(CASE WHEN substr(hx, 16, 1) >= '8' THEN -1 ELSE 1 END)::BIGINT AS weight
         |FROM h GROUP BY 1, 2 ORDER BY doc_id, bucket""".stripMargin,
 
     "q_domain_stats" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT source, count(*) AS n_docs,
-        |         sum(len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')))::BIGINT AS total_tokens,
+        |         sum(len(${toksSql("text")}))::BIGINT AS total_tokens,
         |         sum(length(text))::BIGINT AS total_chars
         |  FROM documents GROUP BY source)
         |SELECT source, n_docs, total_tokens, total_chars,
@@ -4231,7 +4226,7 @@ object SparkEntry {
     "q_weighted_sample" ->
       s"""WITH $qualityCtes
          |SELECT doc_id, quality FROM qual
-         |WHERE ('0x' || substr(md5('w|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 10000
+         |WHERE ${md5ModSql("md5('w|' || doc_id::VARCHAR)", 10000)}
          |      < floor(quality * 10000)::BIGINT
          |ORDER BY doc_id""".stripMargin,
 
@@ -4297,23 +4292,20 @@ object SparkEntry {
         |FROM x GROUP BY 1, 2 ORDER BY source, dim""".stripMargin,
 
     "q_seq_packing" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id, source,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS n_tokens
+        |         len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS prefix
-        |  FROM n)
+        |${prefixCte("c", "source", "n")}
         |SELECT source, doc_id, n_tokens,
         |       floor(prefix / 256)::BIGINT AS bin_idx,
         |       (prefix % 256)::BIGINT AS bin_offset
         |FROM c ORDER BY doc_id""".stripMargin,
 
     "q_pack_bins" ->
-      """WITH tk AS (
+      s"""WITH tk AS (
         |  SELECT source, doc_id,
-        |         list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+        |         ${toksSql("text")} AS toks
         |  FROM documents),
         |d AS (SELECT source, doc_id, toks, len(toks)::BIGINT AS n FROM tk WHERE len(toks) > 0),
         |p AS (
@@ -4332,8 +4324,8 @@ object SparkEntry {
         |ORDER BY source, bin_idx""".stripMargin,
 
     "q_length_histogram" ->
-      """WITH n AS (
-        |  SELECT len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS ntok
+      s"""WITH n AS (
+        |  SELECT len(${toksSql("text")})::BIGINT AS ntok
         |  FROM documents)
         |SELECT length(bin(ntok))::BIGINT AS log2_bucket, count(*) AS n_docs,
         |       min(ntok) AS min_tokens, max(ntok) AS max_tokens, sum(ntok)::BIGINT AS total_tokens
@@ -4369,50 +4361,45 @@ object SparkEntry {
         |FROM s5 ORDER BY doc_id""".stripMargin,
 
     "q_shard_manifest" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id,
-        |         CASE WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 98 THEN 'train'
-        |              WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 99 THEN 'val'
+        |         CASE WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 98 THEN 'train'
+        |              WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 99 THEN 'val'
         |              ELSE 'test' END AS split,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS n_tokens
+        |         len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, split, n_tokens,
-        |         sum(n_tokens) OVER (PARTITION BY split ORDER BY doc_id) - n_tokens AS prefix
-        |  FROM n)
+        |${prefixCte("c", "split", "n")}
         |SELECT split, doc_id, n_tokens,
         |       floor(prefix / 512)::BIGINT AS bin_idx,
         |       (prefix % 512)::BIGINT AS bin_offset
         |FROM c ORDER BY split, doc_id""".stripMargin,
 
     "q_split_assign" ->
-      """SELECT doc_id,
-        |       CASE WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 98 THEN 'train'
-        |            WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 99 THEN 'val'
+      s"""SELECT doc_id,
+        |       CASE WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 98 THEN 'train'
+        |            WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 99 THEN 'val'
         |            ELSE 'test' END AS split
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "q_token_budget" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT doc_id, source,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS n_tokens
+        |         len(${toksSql("text")})::BIGINT AS n_tokens
         |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS prefix
-        |  FROM n)
+        |${prefixCte("c", "source", "n")}
         |SELECT source, doc_id, n_tokens FROM c
         |WHERE prefix < 800 ORDER BY doc_id""".stripMargin,
 
+    // a token-less source has weight 0 and is dropped before the ranking
     "q_unimax" ->
-      """WITH tk AS (
+      s"""WITH tk AS (
         |  SELECT source,
-        |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> ''))::BIGINT AS nt
+        |         len(${toksSql("text")})::BIGINT AS nt
         |  FROM documents),
         |sz AS (
         |  SELECT source, sum(nt)::BIGINT AS n_tokens,
         |         (sum(nt) * 2)::BIGINT AS cap
-        |  FROM tk GROUP BY 1),
+        |  FROM tk GROUP BY 1 HAVING sum(nt) > 0),
         |rk AS (
         |  SELECT source, n_tokens, cap,
         |         row_number() OVER (ORDER BY n_tokens, source)::BIGINT AS rn,
@@ -4451,7 +4438,7 @@ object SparkEntry {
     "q_curation_v2" ->
       s"""WITH $qualityCtes,
          |gtk AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '') AS toks
+         |  SELECT doc_id, ${toksSql("text")} AS toks
          |  FROM documents),
          |gm AS (
          |  SELECT doc_id, len(toks) AS ntok,
@@ -4475,7 +4462,7 @@ object SparkEntry {
          |    AND gm.alpha_word_frac > 0.8
          |    AND qual.quality >= 0.45),
          |ptok AS (
-         |  SELECT doc_id, list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '') AS toks
+         |  SELECT doc_id, ${wsToksSql("text")} AS toks
          |  FROM gated),
          |pst AS (
          |  SELECT doc_id, toks, unnest(generate_series(1, greatest(len(toks), 1), 8)) AS s
@@ -4496,14 +4483,11 @@ object SparkEntry {
          |  JOIN pfrac p ON p.doc_id = g.doc_id WHERE p.kept_frac >= 0.5),
          |ctok AS (
          |  SELECT doc_id, source,
-         |         len(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> ''))::BIGINT AS n_tokens
+         |         len(${toksSql("text")})::BIGINT AS n_tokens
          |  FROM clean),
-         |budg AS (
-         |  SELECT doc_id, source, n_tokens,
-         |         sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id) - n_tokens AS prefix
-         |  FROM ctok)
-         |SELECT CASE WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 98 THEN 'train'
-         |            WHEN ('0x' || substr(md5('split|' || doc_id::VARCHAR), 1, 15))::UBIGINT % 100 < 99 THEN 'val'
+         |${prefixCte("budg", "source", "ctok")}
+         |SELECT CASE WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 98 THEN 'train'
+         |            WHEN ${md5ModSql("md5('split|' || doc_id::VARCHAR)", 100)} < 99 THEN 'val'
          |            ELSE 'test' END AS split,
          |       count(*) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
          |FROM budg WHERE prefix < 800
@@ -4747,7 +4731,7 @@ object SparkEntry {
     val rows = affineHashRows(depth, width, "bucket", "h",
       cols = j => s"source, $j::BIGINT AS depth, ")
     s"""tok AS (
-       |  SELECT source, unnest(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')) AS tok
+       |  SELECT source, unnest(${toksSql("text")}) AS tok
        |  FROM documents),
        |h AS (
        |  SELECT source, ('0x' || substr(md5(tok), 1, 12))::UBIGINT::BIGINT % 2147483647 AS h
@@ -4776,7 +4760,7 @@ object SparkEntry {
     val m = 1 << p
     val width = 60 - p
     s"""tok AS (
-       |  SELECT source, unnest(list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')) AS tok
+       |  SELECT source, unnest(${toksSql("text")}) AS tok
        |  FROM documents),
        |hh AS (
        |  SELECT source, ('0x' || substr(md5(tok), 1, 15))::UBIGINT::BIGINT AS hv
@@ -4821,8 +4805,8 @@ object SparkEntry {
   /** Shared CTE chain for the KMV-sketch oracles: distinct (source,
     * 48-bit token hash) pairs, then the per-source bottom-32 sketch. */
   private val kmvCtes: String =
-    """WITH tok AS (
-      |  SELECT source, unnest(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS tok
+    s"""WITH tok AS (
+      |  SELECT source, unnest(${toksSql("text")}) AS tok
       |  FROM documents),
       |dv AS (
       |  SELECT DISTINCT source, ('0x' || substr(md5(tok), 1, 12))::UBIGINT::BIGINT AS hv
@@ -4837,14 +4821,14 @@ object SparkEntry {
     * prior → DECIMAL-exact doc scores (mirrors Curation.nbcScore verbatim;
     * labels = lang='en', dim=64). */
   private val nbcCtes: String =
-    """WITH tokf AS (
+    s"""WITH tokf AS (
       |  SELECT doc_id, lang = 'en' AS y,
-      |         list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+      |         ${toksSql("text")} AS toks
       |  FROM documents),
       |h AS (SELECT doc_id, y, md5(unnest(toks)) AS hx FROM tokf),
       |db AS (
       |  SELECT doc_id, y,
-      |         (('0x' || substr(hx, 1, 15))::UBIGINT % 64)::BIGINT AS bucket,
+      |         (${md5ModSql("hx", 64)})::BIGINT AS bucket,
       |         count(*) AS n
       |  FROM h GROUP BY 1, 2, 3),
       |cls AS (
@@ -4867,14 +4851,14 @@ object SparkEntry {
   /** DSIR hashed-unigram importance weights (no final ORDER BY so the
     * block can nest as a CTE body in the Gumbel-selection oracle). */
   private val dsirWeightsSql: String =
-    """WITH tokf AS (
+    s"""WITH tokf AS (
       |  SELECT doc_id, source = 'src0' AS is_target,
-      |         list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '') AS toks
+      |         ${toksSql("text")} AS toks
       |  FROM documents),
       |h AS (SELECT doc_id, is_target, md5(unnest(toks)) AS hx FROM tokf),
       |db AS (
       |  SELECT doc_id, is_target,
-      |         (('0x' || substr(hx, 1, 15))::UBIGINT % 64)::BIGINT AS bucket,
+      |         (${md5ModSql("hx", 64)})::BIGINT AS bucket,
       |         count(*) AS n
       |  FROM h GROUP BY 1, 2, 3),
       |raw AS (SELECT bucket, sum(n) AS cr FROM db GROUP BY 1),
@@ -4925,9 +4909,7 @@ object SparkEntry {
          |    LEFT JOIN mrg$r pm ON pm.doc_id = k.doc_id AND pm.p = k.p - 1
          |    WHERE pm.p IS NULL))""".stripMargin
     }.mkString(",\n")
-    s"""tokf AS (
-       |  SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '') AS toks
-       |  FROM documents),
+    s"""$tokfCte,
        |tok0 AS (
        |  SELECT doc_id, generate_subscripts(toks, 1) AS p, unnest(toks) AS t
        |  FROM tokf WHERE len(toks) >= $minToks),
@@ -5207,12 +5189,12 @@ object SparkEntry {
     * stopword_ratio, quality)` — shared by q_quality, q_cluster_keeper and
     * q_weighted_sample so the formula cannot drift between oracles. */
   private val qualityCtes: String =
-    """qb AS (
+    raw"""qb AS (
       |  SELECT doc_id, text,
       |         CASE WHEN length(text) = 0 THEN 0.0
       |              ELSE floor(length(regexp_replace(text, '[\w\s]', '', 'g'))::DOUBLE / length(text) * 10000.0 + 0.5) / 10000.0 END AS punct_ratio,
-      |         len(list_filter(regexp_split_to_array(lower(text), '\W+'), x -> x <> '')) AS ntok,
-      |         len(list_filter(regexp_split_to_array(lower(text), '\W+'),
+      |         len(${toksSql("text")}) AS ntok,
+      |         len(list_filter(${wordsSql("text")},
       |             x -> x <> '' AND list_contains(['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as'], x))) AS nstop
       |  FROM documents),
       |qr AS (

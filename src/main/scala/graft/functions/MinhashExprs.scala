@@ -10,9 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The first 15 hex chars of an md5 digest as a non-negative 60-bit long —
   * bit-identical to `conv(substring(md5(x), 1, 15), 16, 10)::long` (DuckDB
-  * `('0x' || substr(md5(x), 1, 15))::UBIGINT`). Every kernel that hashes a
-  * token or shingle by md5 prefix shares it and applies its own modulus. */
-private[functions] object Md5Prefix {
+  * `('0x' || substr(md5(x), 1, 15))::UBIGINT`) — the driver-side twin of
+  * `TextAnalysis.md5Mod`. Every kernel that hashes a token or shingle by
+  * md5 prefix, and the stored text index's query-term bucketing, share it
+  * and apply their own modulus. */
+private[graft] object Md5Prefix {
   def of(d: Array[Byte]): Long = {
     var v = 0L
     var j = 0

@@ -23,10 +23,8 @@ object Analytics {
    * so boolean semantics suffice (SURVEY.md §2.E divergence note).
    */
   def textMatch(message: Column, queryText: String): Column = {
-    val tokens = queryText.toLowerCase.split("\\W+").filter(_.nonEmpty)
-    arrays_overlap(
-      split(lower(message), "\\W+"),
-      array(tokens.map(lit).toIndexedSeq: _*))
+    arrays_overlap(TextAnalysis.words(message),
+      array(TextAnalysis.queryToks(queryText).map(lit): _*))
   }
 
   /**
@@ -36,7 +34,7 @@ object Analytics {
    * `regexp_count`; cast to long for engine-portable aggregation.
    */
   def textMatchScore(message: Column, queryText: String): Column = {
-    val tokens = queryText.toLowerCase.split("\\W+").filter(_.nonEmpty)
+    val tokens = TextAnalysis.queryToks(queryText)
     regexp_count(lower(message),
       lit("\\b(" + tokens.mkString("|") + ")\\b")).cast("long")
   }
@@ -57,8 +55,7 @@ object Analytics {
     // size(toks) − size(array_remove(toks, t)) variant SLOWER: it copies
     // the token array per query token, while the explode's isin filter
     // drops non-query tokens before the tiny (id, gram) count)
-    val tokens: Seq[Any] =
-      queryText.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq
+    val tokens: Seq[Any] = TextAnalysis.queryToks(queryText)
     val toks = Curation.gramRows(docs, idCol, textCol, n = 1)
       .filter(col("gram").isin(tokens: _*))
     val tf = toks.groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("tf"))
@@ -84,7 +81,7 @@ object Analytics {
    * out of scope (documented divergence).
    */
   def textMatchStemmed(message: Column, queryText: String): Column = {
-    val tokens = queryText.toLowerCase.split("\\W+").filter(_.nonEmpty)
+    val tokens = TextAnalysis.queryToks(queryText)
     lower(message).rlike(
       "\\b(" + tokens.mkString("|") + ")(s|es|ed|ing)?\\b")
   }
@@ -105,8 +102,7 @@ object Analytics {
    */
   def textRankBm25(docs: DataFrame, idCol: String, textCol: String,
                    queryText: String): DataFrame = {
-    val tokens: Seq[Any] =
-      queryText.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq
+    val tokens: Seq[Any] = TextAnalysis.queryToks(queryText)
     val toks = Curation.gramRows(docs, idCol, textCol, n = 1)
       .filter(col("gram").isin(tokens: _*))
     val tf = toks.groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("tf"))
@@ -165,8 +161,8 @@ object Analytics {
    * common stem — "sparks" in the query hits "sparking" in the doc.
    */
   def textMatchPorter(message: Column, queryText: String): Column = {
-    val stemmedQuery = queryText.toLowerCase.split("\\W+")
-      .filter(_.nonEmpty).map(porterLightStem).mkString(" ")
+    val stemmedQuery =
+      TextAnalysis.queryToks(queryText).map(porterLightStem).mkString(" ")
     textMatch(porterLightStemText(message), stemmedQuery)
   }
 
@@ -188,10 +184,8 @@ object Analytics {
   def textRankBm25Full(docs: DataFrame, idCol: String, textCol: String,
                        queryText: String, k1: Double = 1.2,
                        b: Double = 0.75): DataFrame = {
-    val tokens: Seq[Any] =
-      queryText.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq
-    val dlCol = size(TextAnalysis.toks(col(textCol))).cast("long")
-    val dls = docs.select(col(idCol), dlCol.as("dl"))
+    val tokens: Seq[Any] = TextAnalysis.queryToks(queryText)
+    val dls = docs.select(col(idCol), TextAnalysis.wordCount(col(textCol)).as("dl"))
     val toks = Curation.gramRows(docs, idCol, textCol, n = 1)
       .filter(col("gram").isin(tokens: _*))
     val tf = toks.groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("tf"))
@@ -261,18 +255,16 @@ object Analytics {
                      path: String, nBuckets: Int = 16): Unit = {
     require(nBuckets > 0, "nBuckets must be positive")
     val withDl = docs.select(col(idCol), col(textCol),
-      size(TextAnalysis.toks(col(textCol))).cast("long").as("dl"))
+      TextAnalysis.wordCount(col(textCol)).as("dl"))
     // per-row (gram, tf) kernel (graft.functions.GramCounts): a doc's
     // term counts are a per-row function, so the former corpus-sized
     // (id, gram) count exchange is gone — the exploded rows are already
     // unique per (id, gram)
     withDl.select(col(idCol),
         explode(graft.functions.NgramExprs.gramCounts(
-          split(lower(col(textCol)), "\\W+"), 1)).as("_g"))
+          TextAnalysis.words(col(textCol)), 1)).as("_g"))
       .select(col(idCol), col("_g.gram").as("gram"), col("_g.tf").as("tf"))
-      .withColumn("tbucket",
-        pmod(conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long"),
-          lit(nBuckets.toLong)))
+      .withColumn("tbucket", TextAnalysis.md5Mod(md5(col("gram")), nBuckets))
       .write.mode("overwrite").partitionBy("tbucket")
       .parquet(s"$path/postings")
     // ONE tokenize scan feeds the doclen write AND the meta aggregate
@@ -303,13 +295,9 @@ object Analytics {
     val nB = meta.getAs[Int]("n_buckets")
     val nDocs = meta.getAs[Long]("n_docs")
     val avgdl = meta.getAs[Double]("avgdl")
-    val tokens: Seq[String] =
-      queryText.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq.distinct
-    def bucketOf(t: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.substring(0, 15), 16) % nB
-    }
+    val tokens = TextAnalysis.queryToks(queryText).distinct
+    def bucketOf(t: String): Long = graft.functions.Md5Prefix.of(
+      java.security.MessageDigest.getInstance("MD5").digest(t.getBytes("UTF-8"))) % nB
     val buckets: Seq[Any] = tokens.map(bucketOf).distinct
     val terms: Seq[Any] = tokens
     val postings = spark.read.parquet(s"$path/postings")

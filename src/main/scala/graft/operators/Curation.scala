@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.TextAnalysis.pround4
+import graft.operators.TextAnalysis.{md5Mod, pround4, wordCount, words, wsToks}
 
 /**
  * Training-data curation operators beyond the reference's surface (builder
@@ -26,7 +26,7 @@ object Curation {
     // native fused kernel (graft.functions.WordNgrams, distinct = false):
     // the former interpreted HOF chain ran CodegenFallback per row
     docs.select(col(idCol), explode(graft.functions.NgramExprs.gramTokens(
-      split(lower(col(textCol)), "\\W+"), n)).as("gram"))
+      words(col(textCol)), n)).as("gram"))
 
   /**
    * Gopher-style duplicate-line fraction: 1 − distinct(lines)/lines over
@@ -74,8 +74,7 @@ object Curation {
     // native one-pass tagged gram kernel (graft.functions.WordNgramsTagged)
     // — the former per-n interpreted transforms under a flatten were
     // CodegenFallback per row
-    val all = graft.functions.NgramExprs.gramsTagged(
-      split(lower(col(textCol)), "\\W+"), ns)
+    val all = graft.functions.NgramExprs.gramsTagged(words(col(textCol)), ns)
     val counts = docs
       .select(col(idCol), explode(all).as("g"))
       .groupBy(col(idCol), col("g.n").as("n"), col("g.gram").as("gram"))
@@ -195,10 +194,7 @@ object Curation {
    */
   def stratifiedSampleFilter(stratum: Column, id: Column,
                              ratePct: Column): Column = {
-    val h = pmod(conv(substring(
-      md5(concat(stratum, lit("|"), id.cast("string"))),
-      1, 15), 16, 10).cast("long"), lit(100L))
-    h < ratePct
+    md5Mod(md5(concat(stratum, lit("|"), id.cast("string"))), 100L) < ratePct
   }
 
   /**
@@ -211,13 +207,13 @@ object Curation {
   def tokenChunks(docs: DataFrame, idCol: String, textCol: String,
                   chunkSize: Int = 64, overlap: Int = 16): DataFrame = {
     require(overlap < chunkSize, "overlap must be < chunkSize")
-    val toks = array_remove(split(col(textCol), "\\s+"), "")
+    val ts = wsToks(col(textCol))
     // native fused kernel (graft.functions.TokenChunks): the former
     // transform(sequence(…), slice + concat_ws) chain under the array()
     // binding trick was CodegenFallback — one interpreted slice + lambda
     // frame per chunk; the kernel joins each window in one codegen pass
-    val cs = graft.functions.NgramExprs.tokenChunks(toks, chunkSize, overlap)
-    docs.filter(size(toks) > 0)
+    val cs = graft.functions.NgramExprs.tokenChunks(ts, chunkSize, overlap)
+    docs.filter(size(ts) > 0)
       .select(col(idCol), posexplode(cs))
       .select(col(idCol), (col("pos") + 1).cast("long").as("chunk_idx"),
         col("col.start_tok"), col("col.chunk"), col("col.n_tokens"))
@@ -255,12 +251,12 @@ object Curation {
    * the projected column — each signal tree then evaluates once per row.
    */
   def gopherStruct(text: Column): Column = {
-    val toks = array_remove(split(lower(text), "\\W+"), "")
-    val ntok = size(toks)
+    val ts = TextAnalysis.toks(text)
+    val ntok = size(ts)
     // Σ|token| == |concat of tokens| (numChars is additive) — ArrayJoin is
     // codegen'd; the former aggregate() fold was CodegenFallback per row
     val meanLen = when(ntok === 0, 0.0).otherwise(pround4(
-      length(array_join(toks, "")).cast("long")
+      length(array_join(ts, "")).cast("long")
         .cast("double") / ntok))
     // occurrence counts via regexp_count — equal by construction to the
     // former length-difference-after-replace (greedy leftmost
@@ -326,10 +322,7 @@ object Curation {
    * resume-stable; zero shuffle.
    */
   def weightedSampleFilter(id: Column, weightBp: Column): Column = {
-    val h = pmod(conv(substring(
-      md5(concat(lit("w|"), id.cast("string"))), 1, 15), 16, 10)
-      .cast("long"), lit(10000L))
-    h < weightBp
+    md5Mod(md5(concat(lit("w|"), id.cast("string"))), 10000L) < weightBp
   }
 
   /**
@@ -358,9 +351,8 @@ object Curation {
   def domainStats(docs: DataFrame, srcCol: String,
                   textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = array_remove(split(lower(col(textCol)), "\\W+"), "")
     val agg = docs
-      .select(col(srcCol), size(toks).cast("long").as("ntok"),
+      .select(col(srcCol), wordCount(col(textCol)).as("ntok"),
         length(col(textCol)).cast("long").as("nchar"))
       .groupBy(col(srcCol))
       .agg(count(lit(1)).as("n_docs"), sum(col("ntok")).as("total_tokens"),
@@ -387,18 +379,24 @@ object Curation {
    */
   def sequencePack(docs: DataFrame, idCol: String, textCol: String,
                    grpCol: String, capacity: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(capacity > 0, "capacity must be positive")
-    val toks = array_remove(split(lower(col(textCol)), "\\W+"), "")
-    val w = Window.partitionBy(col(grpCol)).orderBy(col(idCol))
-    docs.select(col(grpCol), col(idCol),
-      size(toks).cast("long").as("n_tokens"))
-      .withColumn("prefix", sum(col("n_tokens")).over(w) - col("n_tokens"))
+    tokenPrefix(docs, idCol, textCol, grpCol)
       .select(col(grpCol), col(idCol), col("n_tokens"),
         // floor, not a double→long cast: Spark's cast truncates but
         // DuckDB's rounds — floor is the portable integer division
         floor(col("prefix") / capacity).cast("long").as("bin_idx"),
         (col("prefix") % capacity).as("bin_offset"))
+  }
+
+  /** (group, id, n_tokens, prefix): each doc's word count and the tokens
+    * of its group's docs before it in id order — the ONE per-group
+    * prefix-sum window of [[sequencePack]] and [[tokenBudgetFilter]]. */
+  private def tokenPrefix(docs: DataFrame, idCol: String, textCol: String,
+                          grpCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col(grpCol)).orderBy(col(idCol))
+    docs.select(col(grpCol), col(idCol), wordCount(col(textCol)).as("n_tokens"))
+      .withColumn("prefix", sum(col("n_tokens")).over(w) - col("n_tokens"))
   }
 
   /**
@@ -425,9 +423,9 @@ object Curation {
                grpCol: String, capacity: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(capacity > 0, "capacity must be positive")
-    val toksC = array_remove(split(lower(col(textCol)), "\\W+"), "")
     val w = Window.partitionBy(col(grpCol)).orderBy(col(idCol))
-    val based = docs.select(col(grpCol), col(idCol), toksC.as("toks"))
+    val based = docs
+      .select(col(grpCol), col(idCol), TextAnalysis.toks(col(textCol)).as("toks"))
       .withColumn("n", size(col("toks")).cast("long"))
       .filter(col("n") > 0)
       .withColumn("prefix", sum(col("n")).over(w) - col("n"))
@@ -462,10 +460,8 @@ object Curation {
    * shuffle; output rows = O(log max-length).
    */
   def lengthHistogram(docs: DataFrame, textCol: String): DataFrame = {
-    val toks = array_remove(split(lower(col(textCol)), "\\W+"), "")
-    docs.select(length(bin(size(toks).cast("long"))).cast("long")
-        .as("log2_bucket"),
-      size(toks).cast("long").as("ntok"))
+    val ntok = wordCount(col(textCol))
+    docs.select(length(bin(ntok)).cast("long").as("log2_bucket"), ntok.as("ntok"))
       .groupBy(col("log2_bucket"))
       .agg(count(lit(1)).as("n_docs"), min(col("ntok")).as("min_tokens"),
         max(col("ntok")).as("max_tokens"), sum(col("ntok")).as("total_tokens"))
@@ -514,9 +510,7 @@ object Curation {
    */
   def splitAssign(id: Column, trainPct: Int = 98, valPct: Int = 1): Column = {
     require(trainPct + valPct < 100, "test band must be non-empty")
-    val h = pmod(conv(substring(
-      md5(concat(lit("split|"), id.cast("string"))), 1, 15), 16, 10)
-      .cast("long"), lit(100L))
+    val h = md5Mod(md5(concat(lit("split|"), id.cast("string"))), 100L)
     // null id → null split (caller filters), NOT the otherwise() branch —
     // a bare otherwise("test") would concentrate every malformed record
     // into the 1% eval band; matches the family's null-drops convention
@@ -565,17 +559,24 @@ object Curation {
     val tok = docs.select(col(idCol), explode(toks).as("tok"))
     val freq = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = freq.agg(sum(col("c")).cast("double").as("s"))
-    val cut = freq.filter(col("c") >= minCount)
-    // topK → bounded by construction → broadcast hint justified;
-    // otherwise AQE sizes the join (Heaps' law: minCount alone is no bound)
-    val kept = topK.fold(cut)(k =>
-      broadcast(cut.orderBy(col("c").desc, col("tok").asc).limit(k)))
-    tok.join(kept, Seq("tok"), "left")
+    tok.join(vocabCut(freq, "tok", "c", minCount, topK), Seq("tok"), "left")
       .crossJoin(broadcast(total))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),
         pround4(avg(-log(coalesce(col("c"), lit(1L)).cast("double")
           / col("s")))).as("lm_score"))
+  }
+
+  /** An LM's model table: the `cnt >= minCount` cut of a (key, cnt) count
+    * table, then with `topK` its K most frequent entries (count desc, key
+    * asc — a total order, so the boundary is deterministic) broadcast, as
+    * bounded by construction; without `topK` the join is left to AQE
+    * (Heaps' law: minCount alone is no bound). */
+  private def vocabCut(counts: DataFrame, key: String, cnt: String,
+                       minCount: Long, topK: Option[Int]): DataFrame = {
+    val cut = counts.filter(col(cnt) >= minCount)
+    topK.fold(cut)(k =>
+      broadcast(cut.orderBy(col(cnt).desc, col(key).asc).limit(k)))
   }
 
   /**
@@ -609,14 +610,10 @@ object Curation {
     val tok = docs.select(col(idCol), explode(toks).as("tok"))
     val uni = tok.groupBy(col("tok")).agg(count(lit(1)).as("uc"))
     val total = uni.agg(sum(col("uc")).cast("double").as("s"))
-    val uniCut = uni.filter(col("uc") >= minCount)
-    val uniKept = topK.fold(uniCut)(k =>
-      broadcast(uniCut.orderBy(col("uc").desc, col("tok").asc).limit(k)))
-    val pairs = gramRows(docs, idCol, textCol, n = 2)
-    val biCut = pairs.groupBy(col("gram")).agg(count(lit(1)).as("bc"))
-      .filter(col("bc") >= minCount)
-    val bi = topK.fold(biCut)(k =>
-      broadcast(biCut.orderBy(col("bc").desc, col("gram").asc).limit(k)))
+    val uniKept = vocabCut(uni, "tok", "uc", minCount, topK)
+    val bi = vocabCut(gramRows(docs, idCol, textCol, n = 2)
+      .groupBy(col("gram")).agg(count(lit(1)).as("bc")),
+      "gram", "bc", minCount, topK)
     // per-position rows with the previous token attached array-locally
     // (no lag window): posexplode yields 0-based p, so the 1-based
     // element_at(ts, p) IS the predecessor; p=0 → null history. A
@@ -837,7 +834,7 @@ object Curation {
     // would evict the whole projection from whole-stage codegen
     docs.select(col(idCol) +: cc :+
       graft.functions.BpeExprs.bpeEncodeTokens(
-        split(lower(col(textCol)), "\\W+"), merges).as("toks"): _*)
+        words(col(textCol)), merges).as("toks"): _*)
       .select(col(idCol) +: cc :+
         concat_ws("|", col("toks")).as("toks_str") :+
         (size(col("toks")).cast("long").as("n_tokens"): Column): _*)
@@ -874,8 +871,7 @@ object Curation {
       .orderBy("round").collect() // model-sized: `iters` merge rows
       .map(r => (r.getString(1), r.getString(2))).toSeq
     bpeEncode(
-      docs.withColumn("_nw",
-        size(TextAnalysis.toks(col(textCol))).cast("long")),
+      docs.withColumn("_nw", wordCount(col(textCol))),
       idCol, textCol, merges, carry = Seq(srcCol, "_nw"))
       .filter(col("_nw") > 0)
       .groupBy(col(srcCol))
@@ -986,8 +982,7 @@ object Curation {
     * twin; unsigned weights are token counts. */
   private[graft] def bagOf(text: Column, dim: Int,
                            signed: Boolean = false): Column =
-    graft.functions.MinhashExprs.hashedBagFeatures(
-      split(lower(text), "\\W+"), dim, signed)
+    graft.functions.MinhashExprs.hashedBagFeatures(words(text), dim, signed)
 
   /** Unsigned bag rows (keep…, bucket, n): one row per bucket a doc's
     * tokens touched, n = how many did — no shuffle. */
@@ -1033,16 +1028,10 @@ object Curation {
    * scale shape as [[sequencePack]].
    */
   def tokenBudgetFilter(docs: DataFrame, idCol: String, textCol: String,
-                        grpCol: String, budget: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = array_remove(split(lower(col(textCol)), "\\W+"), "")
-    val w = Window.partitionBy(col(grpCol)).orderBy(col(idCol))
-    docs.select(col(grpCol), col(idCol),
-      size(toks).cast("long").as("n_tokens"))
-      .withColumn("prefix", sum(col("n_tokens")).over(w) - col("n_tokens"))
+                        grpCol: String, budget: Long): DataFrame =
+    tokenPrefix(docs, idCol, textCol, grpCol)
       .filter(col("prefix") < budget)
       .select(col(grpCol), col(idCol), col("n_tokens"))
-  }
 
   /**
    * UniMax per-source token budgets (Chung et al. 2023, "UniMax: Fairer
@@ -1068,15 +1057,18 @@ object Curation {
    * here are documented bounded cases, same class as the ntile in
    * [[ccnetBuckets]]); the (k, prefix_k, n) scalars crossJoin back
    * broadcast-sized. Emits (group, n_tokens, budget_tokens, epochs 4dp).
+   * A source with no word tokens has mixture weight 0 and is absent: it
+   * would rank first and cap at 0, so dropping it shifts `rn` and `n`
+   * together and leaves every other source's allocation unchanged.
    */
   def unimaxAllocation(docs: DataFrame, grpCol: String, textCol: String,
                        budget: Long, epochCap: Long = 2L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(budget > 0 && epochCap > 0, "budget and epochCap must be > 0")
     val sizes = docs
-      .select(col(grpCol),
-        size(TextAnalysis.toks(col(textCol))).cast("long").as("_nt"))
+      .select(col(grpCol), wordCount(col(textCol)).as("_nt"))
       .groupBy(col(grpCol)).agg(sum(col("_nt")).as("n_tokens"))
+      .filter(col("n_tokens") > 0) // weight 0: no allocation, no 0/0 epochs
       .select(col(grpCol), col("n_tokens"),
         (col("n_tokens") * epochCap).as("cap"))
     // source-table windows: one row per source — bounded by construction
@@ -1141,8 +1133,7 @@ object Curation {
     require(salt >= 1, "salt must be >= 1")
     val sc_ = "__graft_topk_salt"
     val rk = "__graft_topk_rk"
-    val bucket = pmod(conv(substring(md5(saltKey.cast("string")), 1, 15),
-      16, 10).cast("long"), lit(salt.toLong))
+    val bucket = md5Mod(md5(saltKey.cast("string")), salt.toLong)
     val w1 = Window.partitionBy(col(grpCol), col(sc_)).orderBy(order: _*)
     val w2 = Window.partitionBy(col(grpCol)).orderBy(order: _*)
     df.withColumn(sc_, bucket)
@@ -1273,10 +1264,8 @@ object Curation {
    */
   def dsirSample(weights: DataFrame, idCol: String, k: Int,
                  salt: String = "dsir"): DataFrame = {
-    val u = (pmod(conv(substring(
-      md5(concat(lit(salt), lit("|"), col(idCol).cast("string"))),
-      1, 15), 16, 10).cast("long"), lit(1000000L)).cast("double") + 0.5) /
-      1000000.0
+    val u = (md5Mod(md5(concat(lit(salt), lit("|"), col(idCol).cast("string"))),
+      1000000L).cast("double") + 0.5) / 1000000.0
     weights.select(col(idCol), col("dsir_weight"),
         pround4(col("dsir_weight") - log(-log(u))).as("gumbel_score"))
       .orderBy(col("gumbel_score").desc, col(idCol))
@@ -1342,15 +1331,18 @@ object Curation {
    * (resume-stable, engine-portable). Scale: ONE source-keyed token
    * aggregate + one single-row min — the rates table is bounded by the
    * source count, so the join back is broadcast-sized and the filter is
-   * scan-local. Output: the kept docs (id, source, rate_bp).
+   * scan-local. Output: the kept docs (id, source, rate_bp). A source
+   * with no word tokens has mixture weight 0: it is dropped before n_min
+   * (else n_min = 0 and n_min/n_s divides by zero), so its docs leave the
+   * sample and the other sources' rates are unchanged.
    */
   def temperatureSample(docs: DataFrame, idCol: String, textCol: String,
                         srcCol: String, alpha: Double = 0.5): DataFrame = {
     require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
     val counts = docs
-      .select(col(srcCol), size(TextAnalysis.toks(col(textCol)))
-        .cast("long").as("nt"))
+      .select(col(srcCol), wordCount(col(textCol)).as("nt"))
       .groupBy(col(srcCol)).agg(sum(col("nt")).as("ns"))
+      .filter(col("ns") > 0) // weight 0: out of n_min, its docs unsampled
     val nmin = counts.agg(min(col("ns")).as("nmin"))
     val rates = counts.crossJoin(broadcast(nmin))
       .select(col(srcCol),

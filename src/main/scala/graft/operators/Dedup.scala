@@ -39,13 +39,13 @@ object Dedup {
   val MinhashB: Seq[Long] = Seq(12345L, 23456L, 34567L, 45678L,
     56789L, 67890L, 78901L, 89012L)
 
-  /** Base hash of a shingle from its md5 hex digest: the first 15 hex
-    * chars → bigint mod P (engine-portable: DuckDB
-    * `('0x'||substr(md5(g),1,15))::UBIGINT`). Taking the digest lets a
+  /** Base hash of a shingle from its md5 hex digest: the
+    * [[TextAnalysis.md5Mod]] coin mod P (first 15 hex chars → bigint;
+    * oracle twin `SparkEntry.baseHashSql`). Taking the digest lets a
     * caller that stages (id, digest) rows derive signatures without
     * re-hashing. */
   def baseHashOfDigest(dig: Column): Column =
-    pmod(conv(substring(dig, 1, 15), 16, 10).cast("long"), lit(MinhashP))
+    TextAnalysis.md5Mod(dig, MinhashP)
 
   /** MinHash signature table: (id, m0..m7), one row per doc — ZERO
     * shuffle: the 8 permutation minima are a pure per-row function of the
@@ -66,7 +66,7 @@ object Dedup {
     * one signature column behind every MinHash path in this object. */
   private def sigOf(text: Column, n: Int): Column =
     graft.functions.MinhashExprs.minhashSig(
-      split(lower(text), "\\W+"), n, MinhashA, MinhashB, MinhashP)
+      TextAnalysis.words(text), n, MinhashA, MinhashB, MinhashP)
 
   /** The 4 LSH band keys (2 rows each) over signature component `m(i)` —
     * shared by the band table and the row-local band keys. */
@@ -538,7 +538,7 @@ object Dedup {
     // exploded form never produced.
     docs.select(col(idCol),
         graft.functions.MinhashExprs.simhashInt(
-          split(lower(col(textCol)), "\\W+"), bits).as("simhash_int"))
+          TextAnalysis.words(col(textCol)), bits).as("simhash_int"))
       .filter(col("simhash_int").isNotNull)
 
   /**
@@ -611,8 +611,7 @@ object Dedup {
     // whole-stage codegen. The former HOF chain (transform/sequence/
     // element_at under the array()/element_at lambda-binding trick) was
     // CodegenFallback — interpreted per row in EVERY shingle scan.
-    graft.functions.NgramExprs.shingleTokens(
-      split(lower(text), "\\W+"), n)
+    graft.functions.NgramExprs.shingleTokens(TextAnalysis.words(text), n)
 
   /**
    * Row-local MinHash LSH band keys — [[minhashSignatures]] +
@@ -744,7 +743,7 @@ object Dedup {
   def winnowedDupSpans(docs: DataFrame, idCol: String, textCol: String,
                        k: Int = 16, w: Int = 8): DataFrame = {
     require(k >= 1 && w >= 1, "need k >= 1 and w >= 1")
-    val toks = array_remove(split(col(textCol), "\\s+"), "")
+    val toks = TextAnalysis.wsToks(col(textCol))
     // native fused kernel (graft.functions.WinnowMd5Windows) producing
     // the IDENTICAL md5-window fingerprint sequence the relational
     // recipe built — `md5(concat_ws(" ", slice(ts, p, k)))` per hash
@@ -790,7 +789,7 @@ object Dedup {
   def winnowedDupSpansFast(docs: DataFrame, idCol: String, textCol: String,
                            k: Int = 16, w: Int = 8): DataFrame = {
     require(k >= 1 && w >= 1, "need k >= 1 and w >= 1")
-    val toks = array_remove(split(col(textCol), "\\s+"), "")
+    val toks = TextAnalysis.wsToks(col(textCol))
     dupRollup(docs, idCol,
       graft.functions.WinnowExprs.winnowFingerprints(toks, k, w))
   }
@@ -818,7 +817,7 @@ object Dedup {
   def removeDupSpans(docs: DataFrame, idCol: String, textCol: String,
                      window: Int = 32, stride: Int = 8): DataFrame = {
     require(stride >= 1, "stride must be >= 1")
-    val toks = array_remove(split(col(textCol), "\\s+"), "")
+    val toks = TextAnalysis.wsToks(col(textCol))
     def anchorsOf(ts: Column): Column =
       when(size(ts) >= window,
         filter(sequence(lit(1), size(ts) - (window - 1)), p =>

@@ -23,12 +23,6 @@ import graft.functions.{CentroidExprs, VectorExprs}
  */
 object Similarity {
 
-  /** dot(a,b) as a fold — reference formulation (interpreted; tests only). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /**
    * cosine(a,b) ∈ [-1,1] — codegen'd single-pass kernel; accepts
    * `array<float>` or `array<double>` (floats widened to double). For
@@ -895,7 +889,7 @@ object Similarity {
     // per-row value — the kernel's rows are already unique per key
     val tf = docs.select(col(idCol), col(blockCol),
         explode(graft.functions.NgramExprs.gramCounts(
-          split(lower(col(textCol)), "\\W+"), 1)).as("_g"))
+          TextAnalysis.words(col(textCol)), 1)).as("_g"))
       .select(col(idCol), col(blockCol), col("_g.gram").as("tok"),
         col("_g.tf").cast("double").as("tf"))
     val n = docs.agg(count(lit(1)).as("n_docs"))

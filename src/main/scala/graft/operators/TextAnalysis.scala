@@ -19,13 +19,17 @@ object TextAnalysis {
    */
   def pround4(c: Column): Column = floor(c * 10000.0 + 0.5) / 10000.0
 
+  /** The analyzer's raw word split: case-folded, split on non-word runs,
+    * "" boundary artifacts kept — what the native kernels take (they drop
+    * the empties themselves). Every tokenizer below starts here. */
+  def words(c: Column): Column = split(lower(c), "\\W+")
+
   /**
-   * THE parity-critical word tokenizer: case-folded split on non-word
-   * runs, empties dropped — mirrored by every oracle's
-   * `list_filter(regexp_split_to_array(lower(text), '\\W+'), x -> x <> '')`.
-   * Operators that deliberately tokenize differently (e.g. the
-   * whitespace-preserving [[Curation.tokenChunks]] family) do NOT use
-   * this helper, which is what makes the variant visible.
+   * THE parity-critical word tokenizer: [[words]] with empties dropped —
+   * mirrored by every oracle's `SparkEntry.toksSql`. Operators that
+   * deliberately tokenize differently (the whitespace [[wsToks]] family,
+   * e.g. [[Curation.tokenChunks]]) do NOT use this helper, which is what
+   * makes the variant visible.
    *
    * Implemented as `array_remove(..., "")` rather than the equivalent
    * `filter(..., t => t =!= "")`: split emits no null elements, so the two
@@ -34,8 +38,25 @@ object TextAnalysis {
    * whole-stage codegen in EVERY tokenize scan) while ArrayRemove compiles
    * into the stage (guide §4.1: prefer built-ins with codegen).
    */
-  def toks(c: Column): Column =
-    array_remove(split(lower(c), "\\W+"), "")
+  def toks(c: Column): Column = array_remove(words(c), "")
+
+  /** Word-token count of [[toks]] as a long (0 for token-less text). */
+  def wordCount(c: Column): Column = size(toks(c)).cast("long")
+
+  /** Whitespace tokens, empties dropped (oracle twin `SparkEntry.wsToksSql`). */
+  def wsToks(c: Column): Column = array_remove(split(c, "\\s+"), "")
+
+  /** The driver-side twin of [[toks]] for query text: the same analyzer
+    * applied to a literal, so query and document meet in one token space. */
+  def queryToks(q: String): Seq[String] =
+    q.toLowerCase.split("\\W+").filter(_.nonEmpty).toSeq
+
+  /** The content-hash coin: the first 15 hex chars of an md5 hex `digest`
+    * as a non-negative long, mod `m` — deterministic, partitioning-free and
+    * engine-portable (oracle twin `SparkEntry.md5ModSql`; driver twin
+    * `graft.functions.Md5Prefix`). Callers build their own salted key. */
+  def md5Mod(digest: Column, m: Long): Column =
+    pmod(conv(substring(digest, 1, 15), 16, 10).cast("long"), lit(m))
 
   /**
    * Heuristic language ID: presence of high-frequency function words per
@@ -55,8 +76,7 @@ object TextAnalysis {
   }
 
   /** Whitespace token count (0 for empty/blank). */
-  def tokenCount(text: Column): Column =
-    size(array_remove(split(text, "\\s+"), ""))
+  def tokenCount(text: Column): Column = size(wsToks(text))
 
   /**
    * BPE-ish subword-precursor token count: word chunks and single
@@ -83,10 +103,10 @@ object TextAnalysis {
   def stopwordRatio(text: Column): Column = {
     val stopRe =
       "\\b(the|a|an|and|or|of|to|in|is|it|that|for|on|with|as)\\b"
-    val toks = array_remove(split(lower(text), "\\W+"), "")
-    when(size(toks) === 0, 0.0).otherwise(
+    val ts = toks(text)
+    when(size(ts) === 0, 0.0).otherwise(
       pround4(regexp_count(lower(text), lit(stopRe)).cast("double")
-        / size(toks)))
+        / size(ts)))
   }
 
   /**

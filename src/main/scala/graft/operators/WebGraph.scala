@@ -109,8 +109,7 @@ object WebGraph {
                       htmlCol: String): DataFrame =
     extractLinks(pages, idCol, htmlCol, srcCol)
       .select(col(srcCol).as("src_domain"), hostOf(col("href")).as("dst_domain"),
-        explode(array_remove(split(lower(col("anchor")), "\\W+"), ""))
-          .as("term"))
+        explode(TextAnalysis.toks(col("anchor"))).as("term"))
       .filter(col("dst_domain").isNotNull &&
         col("dst_domain") =!= col("src_domain"))
       .groupBy(col("dst_domain"), col("term"))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Curation
 
@@ -1030,6 +1031,65 @@ class CurationSpec extends SparkSuite {
       budget = 50L, epochCap = 2L)
       .as[(String, Long, Double, Double)].collect()
     assert(none.forall(r => r._3 == 10.0), none.mkString(","))
+  }
+
+  test("zero-token source: temperature sampling and UniMax drop it as " +
+    "weight 0 instead of dividing by zero; every other row is unchanged") {
+    val docs = Seq((1L, "a", "alpha beta gamma"), (2L, "a", "delta epsilon"),
+      (3L, "b", "!!! ..."), (4L, "b", ""),
+      (5L, "c", "zeta eta theta iota kappa lambda mu nu xi omicron"))
+      .toDF("doc_id", "source", "text")
+    val withoutB = docs.filter($"source" =!= "b")
+    def temp(d: DataFrame) =
+      Curation.temperatureSample(d, "doc_id", "text", "source", alpha = 0.5)
+        .as[(Long, String, Long)].collect().sorted.toSeq
+    val ts = temp(docs)
+    assert(!ts.exists(_._2 == "b"), s"token-less source sampled: $ts")
+    assert(ts == temp(withoutB))
+    assert(ts.map(_._1).contains(1L), "the rarest source keeps every doc")
+    // a: 5 tokens (cap 10, capped), c: 10 tokens (uncapped, share 15)
+    def unimax(d: DataFrame) =
+      Curation.unimaxAllocation(d, "source", "text", budget = 25L,
+        epochCap = 2L).as[(String, Long, Double, Double)].collect()
+        .sortBy(_._1).toSeq
+    val um = unimax(docs)
+    assert(!um.exists(_._1 == "b"), s"token-less source allocated: $um")
+    assert(um == unimax(withoutB))
+    assert(um == Seq(("a", 5L, 10.0, 2.0), ("c", 10L, 15.0, 1.5)), um.toString)
+  }
+
+  test("content-hash coins equal the driver-side md5 reference: split " +
+    "bands, weighted and stratified keep sets, text-index buckets") {
+    // the coin's definition: first 15 md5 hex chars as a long, mod m
+    def coin(key: String, m: Long): Long = {
+      val d = java.security.MessageDigest.getInstance("MD5")
+        .digest(key.getBytes("UTF-8"))
+      java.lang.Long.parseLong(d.map("%02x".format(_)).mkString.take(15), 16) % m
+    }
+    val rows = (0L until 500L).map(i => (i, if (i % 2 == 0) "a" else "b"))
+    val d = rows.toDF("doc_id", "source")
+    val split = d.select($"doc_id", Curation.splitAssign($"doc_id"))
+      .as[(Long, String)].collect().toMap
+    rows.foreach { case (i, _) =>
+      val h = coin(s"split|$i", 100L)
+      assert(split(i) == (if (h < 98) "train" else if (h < 99) "val" else "test"),
+        s"split of $i")
+    }
+    def keptIds(f: Column) =
+      d.filter(f).select($"doc_id").as[Long].collect().toSet
+    assert(keptIds(Curation.weightedSampleFilter($"doc_id", lit(5000L))) ==
+      rows.collect { case (i, _) if coin(s"w|$i", 10000L) < 5000 => i }.toSet)
+    assert(keptIds(Curation.stratifiedSampleFilter($"source", $"doc_id",
+      lit(50L))) ==
+      rows.collect { case (i, s) if coin(s"$s|$i", 100L) < 50 => i }.toSet)
+    val path = tmpDir("coin-idx")
+    graft.operators.Analytics.writeTextIndex(
+      d.select($"doc_id", concat(lit("term"), $"doc_id", lit(" common"))
+        .as("text")), "doc_id", "text", path, nBuckets = 16)
+    val buckets = spark.read.parquet(s"$path/postings")
+      .select($"gram", $"tbucket").distinct().as[(String, Int)].collect()
+    assert(buckets.length == 501)
+    buckets.foreach { case (g, b) => assert(b == coin(g, 16L), s"tbucket of $g") }
   }
 
   test("OLS closed-form fit: exact recovery of a noiseless linear target; " +
