@@ -22,12 +22,13 @@ object Inspect {
 
     val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
+    // one Staging scope per query: its stages are released once it is written
+    names.foreach { name => Staging.scope {
       val df = SparkEntry.queries(name)(spark, sfDir)
       Files.writeString(Paths.get(s"$outDir/$name.plan.txt"),
         df.queryExecution.explainString(FormattedMode))
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-    }
+    }}
     // JSON string escape: backslash, quote and every control char (< 0x20)
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""

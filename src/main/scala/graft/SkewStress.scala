@@ -40,11 +40,10 @@ object SkewStress {
       "spark.sql.autoBroadcastJoinThreshold" -> "-1" // force SMJ
     ).foreach { case (k, v) => spark.conf.set(k, v) }
 
-    val pages = Synth.pages(spark, n, parts = 32)
+    val pages = Staging(Synth.pages(spark, n, parts = 32)
       .select(graft.operators.Parse.hostOf(col("url")).as("host"),
         col("url"), length(col("text")).as("len"))
-      .filter(col("host").isNotNull)
-      .localCheckpoint()
+      .filter(col("host").isNotNull))
     val total = pages.count()
 
     def histo(df: DataFrame, tag: String): (Long, Long) = {
@@ -71,9 +70,8 @@ object SkewStress {
 
     // 2. AQE skew-join: per-host join against a host-keyed side big enough
     // to shuffle (forced SMJ), skewed partitions must SPLIT at runtime
-    val hostDim = pages.groupBy(col("host"))
-      .agg(count(lit(1)).as("host_docs"), sum(col("len")).as("host_bytes"))
-      .localCheckpoint()
+    val hostDim = Staging(pages.groupBy(col("host"))
+      .agg(count(lit(1)).as("host_docs"), sum(col("len")).as("host_bytes")))
     // max(length(url)) keeps the url PAYLOAD crossing the join shuffle
     // (column pruning otherwise strips the probe side down to `host`
     // alone — a partition of identical strings compresses below any

@@ -259,11 +259,10 @@ object SparkEntry {
       // checkpoint also keeps qualityScore out of FilterExec (no
       // subexpression elimination there — the pushed-down predicate
       // re-evaluated the score ahead of the projection's own copy)
-      val q = t(s, dir, "documents")
+      val q = Staging(t(s, dir, "documents")
         .select(col("doc_id"), col("source"),
           TextAnalysis.qualityScore(col("text")).as("quality"),
-          md5(col("text")).as("h"))
-        .localCheckpoint()
+          md5(col("text")).as("h")))
         .filter(col("quality") >= 0.5)
       val keep = q.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
       val sampled = q.join(keep, Seq("h", "doc_id"))
@@ -357,11 +356,10 @@ object SparkEntry {
       // and FilterExec does no subexpression elimination — the feature
       // CASE chain ran ~5x per row (the q_curation_v2 gate pattern; the
       // staged table is three narrow columns)
-      t(s, dir, "events").select(
+      Staging(t(s, dir, "events").select(
         col("event_id"),
         Score.anomalyScore(synthMsg, level).as("anomaly_score"))
-        .withColumn("confidence", Score.confidence(col("anomaly_score")))
-        .localCheckpoint()
+        .withColumn("confidence", Score.confidence(col("anomaly_score"))))
         .filter(Score.alertGate(Score.isAnomaly(col("anomaly_score")), col("confidence")))
         .select(col("event_id"), col("anomaly_score"), col("confidence"))
         .orderBy("event_id")),
@@ -727,6 +725,8 @@ object SparkEntry {
       val stats = t(s, dir, "documents").select(col("doc_id"),
         TextAnalysis.wordCount(col("text")).as("n_tokens"))
       val (ta, tb) = (s"bj_docs_$sfx", s"bj_stats_$sfx")
+      Staging.onRelease( // the enclosing scope drops both; outside one they stay
+        Seq(ta, tb).foreach(x => s.sql(s"DROP TABLE IF EXISTS $x")))
       Exports.writeBucketed(docs, ta, "doc_id", 8)
       Exports.writeBucketed(stats, tb, "doc_id", 8)
       s.table(ta).join(s.table(tb), Seq("doc_id")).orderBy("doc_id")
@@ -1517,8 +1517,8 @@ object SparkEntry {
       // ONE staged extraction feeds the seen-set derivation AND the
       // frontier composition (the former shape ran the anchor regex twice:
       // once here for cand/seen, once inside frontierRank)
-      val links = WebGraph.extractLinks(pages, "doc_id", "html", "source")
-        .localCheckpoint()
+      val links = Staging(
+        WebGraph.extractLinks(pages, "doc_id", "html", "source"))
       // host-filtered like the oracle's cand CTE (regexp_extract <> '') —
       // a host-less/relative href must not set extra Bloom bits Spark-side
       val cand = links.select(col("href").as("url")).distinct()
@@ -2040,9 +2040,8 @@ object SparkEntry {
       // unmaterialized diamond re-ran the LM corpus aggregate + band join
       // + fingerprint chain twice (different join keys, so exchange reuse
       // never applied)
-      val fp = g.select(col("doc_id"), col("source"), col("n_tokens"),
-          col("lm_score"), TextAnalysis.fingerprint(col("text")).as("f"))
-        .localCheckpoint()
+      val fp = Staging(g.select(col("doc_id"), col("source"), col("n_tokens"),
+          col("lm_score"), TextAnalysis.fingerprint(col("text")).as("f")))
       val keep = fp.groupBy(col("f")).agg(min(col("doc_id")).as("doc_id"))
       fp.join(keep, Seq("f", "doc_id"))
         .groupBy(col("source"))
@@ -2059,8 +2058,8 @@ object SparkEntry {
     // individually oracled above; this row proves the COMPOSITION (gates
     // applied in order, each over the previous stage's survivor set)
     // matches the same chain in SQL. One plan with a single staged seam:
-    // the gated set is materialized once (eager localCheckpoint) for its
-    // two consumers.
+    // the gated set is staged once (eager [[Staging]]) for its two
+    // consumers.
     "q_curation_v2" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val keep = Curation.gopherStruct(col("text")).getField("gopher_keep")
@@ -2074,10 +2073,9 @@ object SparkEntry {
       // so filtering on the raw predicate re-ran the shared
       // split(lower(text)) subtrees ~6x per row (CurationProbe: 2.6 s
       // filter vs 0.9 s projection for the identical gate at sf0.1)
-      val gatedIds = d.select(col("doc_id"),
+      val gatedIds = Staging(d.select(col("doc_id"),
           (keep && TextAnalysis.qualityScore(col("text")) >= 0.45)
-            .as("_keep"))
-        .localCheckpoint()
+            .as("_keep")))
         .filter(col("_keep")).select(col("doc_id"))
       val gated = d.join(gatedIds, Seq("doc_id"))
       val para = Curation.paragraphDedup(gated, "doc_id", "text", 8)

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Staging
 
 /**
  * Analytics / search surface (SURVEY.md §2 D, E, F, I; §3.2-3.3) — the
@@ -252,7 +253,7 @@ object Analytics {
    * bit with the in-memory [[textRankBm25Full]].
    */
   def writeTextIndex(docs: DataFrame, idCol: String, textCol: String,
-                     path: String, nBuckets: Int = 16): Unit = {
+                     path: String, nBuckets: Int = 16): Unit = Staging.scope {
     require(nBuckets > 0, "nBuckets must be positive")
     val withDl = docs.select(col(idCol), col(textCol),
       TextAnalysis.wordCount(col(textCol)).as("dl"))
@@ -271,7 +272,7 @@ object Analytics {
     // (each formerly re-scanned + re-tokenized the corpus); doclen keeps
     // every doc — zero-token rows included — so n_docs/avgdl are exactly
     // the corpus stats the in-memory scorer uses
-    val dl = withDl.select(col(idCol), col("dl")).localCheckpoint()
+    val dl = Staging(withDl.select(col(idCol), col("dl")))
     dl.write.mode("overwrite").parquet(s"$path/doclen")
     dl.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
       .withColumn("n_buckets", lit(nBuckets))
@@ -436,22 +437,23 @@ object Analytics {
   /**
    * F3 — date histogram, fixed 1-hour buckets, minDocCount(0): empty
    * buckets between the first and last hour ARE emitted
-   * (`ElasticsearchService.java:436-498`). Gap-fill via
-   * sequence→explode→left-join (SURVEY.md §2.F3). Returns empty for an
-   * empty input (zero-logs guard, `ElasticsearchServiceTest.java:452-472`).
+   * (`ElasticsearchService.java:436-498`). Gap-fill in ONE scan, no join:
+   * the hourly counts fold into one row (bounds, hour → count map) whose
+   * hour `sequence` explodes, a missing hour reading 0 (SURVEY.md §2.F3);
+   * zero logs → no rows (`ElasticsearchServiceTest.java:452-472`).
    */
-  def logVolume(logs: DataFrame, tsCol: String = "ts"): DataFrame = {
-    val counts = logs
-      .groupBy(date_trunc("hour", col(tsCol)).as("bucket"))
+  def logVolume(logs: DataFrame, tsCol: String = "ts"): DataFrame =
+    logs.groupBy(date_trunc("hour", col(tsCol)).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
-    val bounds = counts.agg(min("bucket").as("lo"), max("bucket").as("hi"))
+      .agg(min("bucket").as("lo"), max("bucket").as("hi"),
+        map_from_entries(collect_list(struct(col("bucket"), col("cnt"))))
+          .as("m"))
       .filter(col("lo").isNotNull)
-    val hours = bounds.select(
-      explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("bucket"))
-    hours.join(counts, Seq("bucket"), "left")
-      .select(col("bucket"), coalesce(col("cnt"), lit(0L)).as("cnt"))
+      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour")))
+        .as("bucket"), col("m"))
+      .select(col("bucket"),
+        coalesce(element_at(col("m"), col("bucket")), lit(0L)).as("cnt"))
       .orderBy("bucket")
-  }
 
   /**
    * F4 — terms agg over level + percentage of total

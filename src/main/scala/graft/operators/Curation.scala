@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Staging
 import graft.operators.TextAnalysis.{md5Mod, pround4, wordCount, words, wsToks}
 
 /**
@@ -680,10 +681,12 @@ object Curation {
    * Plan per round: one partial-agg pair-count shuffle + a driver fetch
    * of the single winning pair (model-sized — the same seam as
    * [[Similarity.kmeansCentroids]]) + one scan-local fold applying the
-   * merge, with the token table localCheckpoint'd per round (constant
-   * lineage depth — the [[Dedup.dedupClusters]] / [[WebGraph.pagerank]]
-   * pattern). Stops early if no adjacent pair remains. Returns the merge
-   * list (round, t1, t2, c) — c is the pair's count BEFORE merging.
+   * merge, with the token table re-staged per round and round k−1
+   * released (constant lineage depth — the [[Dedup.dedupClusters]] /
+   * [[WebGraph.pagerank]] pattern), in the body's own [[graft.Staging.scope]]:
+   * nothing stays staged after the call. Stops early if no adjacent pair
+   * remains. Returns the merge list (round, t1, t2, c) — c is the pair's
+   * count BEFORE merging.
    *
    * JOB-COUNT TRADE (deliberate): one shuffle per merge means a 32k-merge
    * vocabulary is 32k sequential jobs — acceptable because TRAINING runs
@@ -692,13 +695,12 @@ object Curation {
    * which applies the trained list in a single depth-independent scan.
    */
   def bpeTrain(docs: DataFrame, idCol: String, textCol: String,
-               iters: Int): DataFrame = {
+               iters: Int): DataFrame = Staging.scope {
     require(iters >= 1, "iters must be >= 1")
     val spark = docs.sparkSession
-    var toksDf = docs
+    var toksDf = Staging(docs
       .select(col(idCol), TextAnalysis.toks(col(textCol)).as("ts"))
-      .filter(size(col("ts")) >= 2)
-      .localCheckpoint()
+      .filter(size(col("ts")) >= 2))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var done = false
     for (r <- 1 to iters if !done) {
@@ -736,10 +738,11 @@ object Curation {
           // expression == chain == fold), with the presence guard internal
           // to the kernel; the former aggregate() HOF fold ran
           // CodegenFallback per row
-          toksDf = toksDf.select(col(idCol),
+          val last = toksDf
+          toksDf = Staging(toksDf.select(col(idCol),
             graft.functions.BpeExprs.bpeEncodeTokens(col("ts"),
-              Seq((p1, p2))).as("ts"))
-            .localCheckpoint()
+              Seq((p1, p2))).as("ts")))
+          Staging.release(last)
         }
       }
     }
@@ -1243,8 +1246,8 @@ object Curation {
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
                   isTarget: Column, dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    val bag = bagRows(docs, textCol, dim, col(idCol), isTarget.as("y"))
-      .localCheckpoint() // one scan feeds the model AND the doc scores
+    val bag = Staging( // one scan feeds the model AND the doc scores
+      bagRows(docs, textCol, dim, col(idCol), isTarget.as("y")))
     bag.join(broadcast(dsirTrain(bag, dim)), Seq("bucket")) // dim rows
       .groupBy(col(idCol))
       .agg(sum(col("n")).as("n_tokens"),
@@ -1515,10 +1518,10 @@ object Curation {
     // flatten/transform/element_at chain under the array() binding trick
     // was CodegenFallback, one interpreted lambda frame per (p, d)
     val pairsOf = graft.functions.NgramExprs.skipgramPairs(ts, window)
-    val pairAgg = docs.select(explode(pairsOf).as("pr"))
-      .select(col("pr.x").as("x"), col("pr.y").as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint() // feeds P (pre-cut, the true marginal) AND the rows
+    val pairAgg = Staging( // feeds P (pre-cut, the true marginal) AND the rows
+      docs.select(explode(pairsOf).as("pr"))
+        .select(col("pr.x").as("x"), col("pr.y").as("y"))
+        .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c_xy")))
     val pairRows = pairAgg.filter(col("c_xy") >= minCount)
     val uni = docs.select(explode(ts).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
@@ -1563,7 +1566,7 @@ object Curation {
     // sides); it is ≤ groups·k rows by construction, but its lineage is
     // the corpus tokenize/distinct/bottom-k — stage it once instead of
     // re-running that scan per branch
-    val s = sketch.select(col(grpCol).as("g"), col("hv")).localCheckpoint()
+    val s = Staging(sketch.select(col(grpCol).as("g"), col("hv")))
     val gs = s.select(col("g")).distinct()
     val pairs = gs.select(col("g").as("source_a"))
       .join(gs.select(col("g").as("source_b")),
@@ -1631,7 +1634,7 @@ object Curation {
    * (doc-count prior + per-bucket multinomial log-likelihood ratio; the
    * prediction is taken on the 4dp-ROUNDED score so both engines agree
    * at the decision boundary). Plan: ONE scan-local bag table
-   * (localCheckpoint) feeds BOTH the model aggregate and the doc scores;
+   * ([[graft.Staging]]) feeds BOTH the model aggregate and the doc scores;
    * the model join back is broadcast BY CONSTRUCTION (dim rows), the
    * prior is a 1-row broadcast. Per-doc sums are DECIMAL(28,12)-exact
    * (order-independent; [[dsirWeights]] conventions throughout).
@@ -1641,8 +1644,8 @@ object Curation {
   def nbcScore(docs: DataFrame, idCol: String, textCol: String,
                isPositive: Column, dim: Int = 64): DataFrame = {
     require(dim > 0, "dim must be positive")
-    val bag = bagRows(docs, textCol, dim, col(idCol), isPositive.as("y"))
-      .localCheckpoint() // one scan feeds the model AND the doc scores
+    val bag = Staging( // one scan feeds the model AND the doc scores
+      bagRows(docs, textCol, dim, col(idCol), isPositive.as("y")))
     bag.join(broadcast(nbcTrain(bag, dim)), Seq("bucket")) // dim rows
       .groupBy(col(idCol))
       .agg(sum(col("n")).as("n_tokens"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Staging
 
 /**
  * Deduplication operators for large-scale training-data pipelines —
@@ -161,7 +162,7 @@ object Dedup {
    */
   def minhashJaccardEstimate(docs: DataFrame, idCol: String, textCol: String,
                              n: Int = 3, maxBucketSize: Int = 1000): DataFrame = {
-    val sig = minhashSignatures(docs, idCol, textCol, n).localCheckpoint()
+    val sig = Staging(minhashSignatures(docs, idCol, textCol, n))
     val cand = candidatesFromBuckets(bucketsFromSignatures(sig, idCol),
       idCol, maxBucketSize)
     val cols = (0 until 8).map(i => s"m$i")
@@ -221,7 +222,7 @@ object Dedup {
    *
    * Plan: candidates are band-bucket-bounded ([[minhashCandidates]] —
    * never all-pairs); the distinct (id, md5(shingle)) table materializes
-   * ONCE (localCheckpoint; a staging parquet at cluster scale) and feeds
+   * ONCE ([[graft.Staging]]; a staging parquet at cluster scale) and feeds
    * the size aggregate plus both intersection joins; text never ships —
    * every join key is a 32-char digest or an id. Caveat documented: the
    * SYMMETRIC LSH blocker under-recalls extreme containments (low
@@ -239,9 +240,8 @@ object Dedup {
     // joins: the former shape materialized the RAW shingle rows once and
     // the digest rows a second time (two text-sized checkpoints; this one
     // carries 32-char digests only)
-    val shd = shingles(docs, idCol, textCol, n)
-      .select(col(idCol), md5(col("shingle")).as("h")).distinct()
-      .localCheckpoint()
+    val shd = Staging(shingles(docs, idCol, textCol, n)
+      .select(col(idCol), md5(col("shingle")).as("h")).distinct())
     val cand = candidatesFromBuckets(
       bucketsFromSignatures(signaturesFromDigestRows(shd, idCol), idCol),
       idCol, maxBucketSize)
@@ -275,9 +275,10 @@ object Dedup {
    *
    * Iteration shape: each round is one join + one min-aggregate over the
    * edge list (both sides bounded by the LSH-bounded pair volume), with
-   * labels materialized per round (`localCheckpoint` — constant lineage
-   * depth instead of an O(iters)-deep nested plan). Min-label propagation
-   * converges in O(component diameter) rounds; near-dup components are
+   * labels staged per round ([[graft.Staging]] — constant lineage depth
+   * instead of an O(iters)-deep nested plan; round k−1 is released once
+   * round k is staged). Min-label propagation converges in
+   * O(component diameter) rounds; near-dup components are
    * shallow in practice (dup clusters are dense), and `maxIters` hard-
    * bounds the loop. The per-round `count()` is a one-row convergence
    * gate — the same model-sized driver seam as k-means, documented.
@@ -289,12 +290,12 @@ object Dedup {
     // branches each embedded the full candidate-generation lineage (the
     // LSH build ran twice inside one materialization job), and wrote twice
     // the bytes; re-projecting checkpointed rows per round is pure CPU
-    val base = pairs.select(col("id1"), col("id2")).localCheckpoint()
+    val base = Staging(pairs.select(col("id1"), col("id2")))
     val edges = base
       .union(base.select(col("id2").as("id1"), col("id1").as("id2")))
-    var labels = edges.select(col("id1").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint()
+    var labels = Staging(edges.select(col("id1").as("id")).distinct()
+      .withColumn("cluster", col("id")))
+    var staged = labels // the live label stage: released once replaced
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIters) {
@@ -302,12 +303,13 @@ object Dedup {
         .join(labels.select(col("id").as("id2"), col("cluster").as("nl")),
           Seq("id2"))
         .groupBy(col("id1").as("id")).agg(min(col("nl")).as("nmin"))
-      val stepped = labels.join(nbrMin, Seq("id"))
+      val stepped = Staging(labels.join(nbrMin, Seq("id"))
         .select(col("id"), col("cluster"),
-          least(col("cluster"), col("nmin")).as("next"))
-        .localCheckpoint() // ONE materialization per round; the label view
+          least(col("cluster"), col("nmin")).as("next"))) // ONE per round
+      Staging.release(staged)
+      staged = stepped
       changed = stepped.filter(col("next") < col("cluster")).count() // 1-row gate
-      labels = stepped.select(col("id"), col("next").as("cluster")) // reads it
+      labels = stepped.select(col("id"), col("next").as("cluster"))
       iter += 1
     }
     labels
@@ -345,9 +347,10 @@ object Dedup {
     * and the MinHash signature struct (null for docs with < n tokens) —
     * so the exact-hash channel and the band channel never re-read the
     * text (guide §2.4). Short columns only. LAZY: callers stage it
-    * (localCheckpoint for lazy consumers; the index writers persist +
-    * unpersist around their two writes — no dedicated materialization
-    * job, the second write reads the cache). */
+    * through [[graft.Staging]] — eagerly for lazy consumers; the index
+    * writers stage it lazily in their own scope, so the first write fills
+    * the stage, the second reads it (no dedicated materialization job)
+    * and the scope releases it. */
   private def dedupKeys(docs: DataFrame, idCol: String,
                         textCol: String, n: Int): DataFrame =
     docs.select(col(idCol), md5(col(textCol)).as("content_hash"),
@@ -355,7 +358,7 @@ object Dedup {
 
   private def stagedDedupKeys(docs: DataFrame, idCol: String,
                               textCol: String, n: Int): DataFrame =
-    dedupKeys(docs, idCol, textCol, n).localCheckpoint()
+    Staging(dedupKeys(docs, idCol, textCol, n))
 
   /** (id, m0..m7) signature view over an (id, `_sig`) table: the raw-doc
     * projection of [[minhashSignatures]] or a [[dedupKeys]] staging. */
@@ -390,20 +393,16 @@ object Dedup {
    * projections — the index is a small fraction of corpus bytes.
    */
   def writeSignatureIndex(docs: DataFrame, idCol: String, textCol: String,
-                          path: String, n: Int = 3): Unit = {
-    // ONE text scan feeds both artifact tables: persisted through the
-    // two writes (the first write populates the cache in its own job,
-    // the second reads it — no dedicated materialization job), released
-    // immediately after
-    val keys = dedupKeys(docs, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      keys.select(col("content_hash")).distinct()
-        .write.mode("overwrite").parquet(s"$path/hashes")
-      bucketsFromSignatures(sigColsFrom(keys, idCol), idCol)
-        .select(col("band"), col("band_key")).distinct()
-        .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
-    } finally keys.unpersist(false)
+                          path: String, n: Int = 3): Unit = Staging.scope {
+    // ONE text scan feeds both artifact tables: staged lazily (the first
+    // write fills the stage in its own job, the second reads it — no
+    // dedicated materialization job), released when this scope ends
+    val keys = Staging(dedupKeys(docs, idCol, textCol, n), eager = false)
+    keys.select(col("content_hash")).distinct()
+      .write.mode("overwrite").parquet(s"$path/hashes")
+    bucketsFromSignatures(sigColsFrom(keys, idCol), idCol)
+      .select(col("band"), col("band_key")).distinct()
+      .write.mode("overwrite").partitionBy("band").parquet(s"$path/bands")
     // the shingle width is part of the artifact's identity: band keys are
     // md5s over n-gram min-signatures, so probing with a different n
     // would match NOTHING and silently disable the near-dup channel
@@ -431,19 +430,16 @@ object Dedup {
   def appendSignatureIndex(spark: org.apache.spark.sql.SparkSession,
                            indexPath: String, newDocs: DataFrame,
                            idCol: String, textCol: String,
-                           n: Int = 3): Unit = {
+                           n: Int = 3): Unit = Staging.scope {
     requireIndexN(spark, indexPath, n, "appended")
-    // ONE text scan feeds both append channels (persist seam, see
+    // ONE text scan feeds both append channels (lazy stage, see
     // writeSignatureIndex)
-    val keys = dedupKeys(newDocs, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      keys.select(col("content_hash")).distinct()
-        .write.mode("append").parquet(s"$indexPath/hashes")
-      bucketsFromSignatures(sigColsFrom(keys, idCol), idCol)
-        .select(col("band"), col("band_key")).distinct()
-        .write.mode("append").partitionBy("band").parquet(s"$indexPath/bands")
-    } finally keys.unpersist(false)
+    val keys = Staging(dedupKeys(newDocs, idCol, textCol, n), eager = false)
+    keys.select(col("content_hash")).distinct()
+      .write.mode("append").parquet(s"$indexPath/hashes")
+    bucketsFromSignatures(sigColsFrom(keys, idCol), idCol)
+      .select(col("band"), col("band_key")).distinct()
+      .write.mode("append").partitionBy("band").parquet(s"$indexPath/bands")
   }
 
   /** [[incrementalDedup]] against a STORED [[writeSignatureIndex]]
@@ -490,10 +486,9 @@ object Dedup {
     // typically a corpus-wide scoring scan, which the unmaterialized
     // diamond would run twice (the table itself is cluster-member-sized,
     // bounded by the LSH pair volume)
-    val members = clusters
+    val members = Staging(clusters
       .join(quality.select(col(idCol).as("id"), col(qualityCol).as("q")),
-        Seq("id"))
-      .localCheckpoint()
+        Seq("id")))
     // two co-partitioned aggregates on cluster instead of max(struct(q,
     // -id)): arithmetic negation only exists for numeric ids — crawl
     // pipelines routinely key on URL/UUID strings, where "-id" casts to
@@ -578,7 +573,7 @@ object Dedup {
     // projections would otherwise inline the scan-local signature kernel
     // (CollapseProject) and re-hash every doc per chunk column — the
     // staged table is two narrow columns, trivially checkpointable
-    val sh = simhashIntRows(docs, idCol, textCol, bits).localCheckpoint()
+    val sh = Staging(simhashIntRows(docs, idCol, textCol, bits))
     val chunkCols = (0 until 3).map { i =>
       shiftright(col("simhash_int"), offsets(i))
         .bitwiseAND(lit((1L << widths(i)) - 1))
@@ -679,14 +674,13 @@ object Dedup {
                         blockCol: String, n: Int = 3,
                         threshold: Double = 0.8,
                         maxShingleDf: Int = 100): DataFrame = {
-    val shAll = shingles(docs, idCol, textCol, n, carryCols = Seq(blockCol))
-      .localCheckpoint()
+    val shAll = Staging(
+      shingles(docs, idCol, textCol, n, carryCols = Seq(blockCol)))
     // one shuffle: df-cap + bounded postings per shingle
-    val buckets = shAll.groupBy(col("shingle"))
+    val buckets = Staging(shAll.groupBy(col("shingle"))
       .agg(collect_list(struct(col(blockCol).as("blk"),
         col(idCol).as("id"))).as("ds"))
-      .filter(size(col("ds")) <= maxShingleDf)
-      .localCheckpoint() // feeds sizes AND pairs; cap-bounded rows
+      .filter(size(col("ds")) <= maxShingleDf)) // feeds sizes AND pairs
     // per-doc size of the df-capped shingle space
     val sizes = buckets.select(explode(col("ds")).as("d"))
       .groupBy(col("d.id").as(idCol)).agg(count(lit(1)).as("sz"))
@@ -824,7 +818,7 @@ object Dedup {
           conv(substring(md5(element_at(ts, p)), 1, 15), 16, 10)
             .cast("long") % stride === 0))
         .otherwise(array().cast("array<int>"))
-    val base = docs.select(col(idCol), toks.as("_ts")).localCheckpoint(false)
+    val base = Staging(docs.select(col(idCol), toks.as("_ts")), eager = false)
     val win = base
       .select(col(idCol), col("_ts"),
         explode(element_at(transform(array(col("_ts")), ts => anchorsOf(ts)), 1))
@@ -1020,9 +1014,9 @@ object Dedup {
    * (every node's smaller-or-equal neighbors and itself connect to that
    * min). Each star step is ONE window-min shuffle over the adjacency
    * (min needs no sorted frame) + a distinct; the edge set is
-   * re-materialized per round (`localCheckpoint` — constant lineage, the
-   * [[dedupClusters]] pattern). Convergence gate = (edge count,
-   * xxhash64 sum) pair per round — one model-sized driver row; a
+   * re-staged per round ([[graft.Staging]] — constant lineage, round k−1
+   * released: the [[dedupClusters]] pattern). Convergence gate = (edge
+   * count, xxhash64 sum) pair per round — one model-sized driver row; a
    * collision that masks non-convergence needs a 64-bit hash-sum tie on
    * a changed edge set, negligible and bounded by `maxIters` anyway.
    */
@@ -1057,15 +1051,15 @@ object Dedup {
     // node universe below — `pairs`' lineage is typically the full LSH
     // candidate build, which the former shape executed a SECOND time for
     // the final `nodes` union
-    val base = pairs.select(col("id1").as("u"), col("id2").as("v"))
-      .localCheckpoint()
-    var edges = base
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+    val base = Staging(pairs.select(col("id1").as("u"), col("id2").as("v")))
+    var edges = Staging(base.filter(col("u") =!= col("v")).distinct())
     var prev = gate(edges)
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      edges = smallStar(largeStar(edges)).localCheckpoint()
+      val last = edges
+      edges = Staging(smallStar(largeStar(edges)))
+      Staging.release(last) // `base` stays: the node union reads it
       val cur = gate(edges)
       converged = cur == prev
       prev = cur

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Staging
 
 /**
  * Export + DDL surface (SURVEY.md §2 B2, B5, B6).
@@ -82,7 +83,7 @@ object Exports {
    * same contract as SQL MERGE).
    */
   def upsertByKey(spark: SparkSession, tableDir: String, batch: DataFrame,
-                  keyCol: String, partitionCol: String): Unit = {
+                  keyCol: String, partitionCol: String): Unit = Staging.scope {
     // asked of the path's own FileSystem, so URI table paths (`file:/…`,
     // `hdfs://…`) are found as well as plain local ones
     val path = new org.apache.hadoop.fs.Path(tableDir)
@@ -95,12 +96,11 @@ object Exports {
         .collect().map(_.get(0)).toSeq // partition-cardinality-sized
       val existing = spark.read.parquet(tableDir)
         .filter(col(partitionCol).isin(touched: _*)) // pruned read
-      val survivors = existing.join(
-        batch.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-        // materialize before the write: Spark (correctly) refuses to
-        // overwrite a path that is also being read from; the survivor set
-        // is bounded by the touched partitions, not the table
-        .localCheckpoint()
+      // staged before the write: Spark (correctly) refuses to overwrite a
+      // path that is also being read from; the survivor set is bounded by
+      // the touched partitions, not the table, and released with the scope
+      val survivors = Staging(existing.join(
+        batch.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti"))
       survivors.select(batch.columns.map(col).toIndexedSeq: _*)
         .union(batch)
         .write.mode("overwrite")

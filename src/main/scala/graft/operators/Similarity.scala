@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import graft.Staging
 import graft.functions.{CentroidExprs, VectorExprs}
 
 /**
@@ -899,15 +900,14 @@ object Similarity {
         col("tf").as("tf"))).as("ds"))
     // global token df: window over the aggregated vocab×blocks table
     val wTok = org.apache.spark.sql.expressions.Window.partitionBy(col("tok"))
-    val buckets = perBlk
+    val buckets = Staging(perBlk // feeds norms AND pairs once
       .withColumn("df", sum(size(col("ds")).cast("long")).over(wTok))
       .crossJoin(broadcast(n))
       .filter(col("df") <= ceil(lit(maxDfFrac) * col("n_docs")))
       .select(transform(col("ds"), d => struct(
         d.getField("id").as("id"),
         (d.getField("tf") *
-          log(lit(1.0) + col("n_docs") / col("df"))).as("w"))).as("ds"))
-      .localCheckpoint() // feeds norms AND pairs once
+          log(lit(1.0) + col("n_docs") / col("df"))).as("w"))).as("ds")))
     val norms = buckets.select(explode(col("ds")).as("d"))
       .groupBy(col("d.id").as("id"))
       .agg(sqrt(sum((col("d.w") * col("d.w")).cast("decimal(28,12)"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Staging
 import graft.operators.TextAnalysis.pround4
 
 /**
@@ -167,13 +168,13 @@ object WebGraph {
   private def rankStage(edges: DataFrame, iters: Int,
                         chains: Int = 1): (DataFrame, DataFrame) = {
     require(iters >= 1, "iters must be >= 1")
-    val e = edges.localCheckpoint()
+    val e = Staging(edges)
     val withOut = e
       .join(e.groupBy(col("src_domain"))
         .agg(sum(col("n_links")).as("outw")), Seq("src_domain"))
     val doms = e.select(col("src_domain").as("domain"))
       .union(e.select(col("dst_domain").as("domain"))).distinct()
-    if (iters * chains > 1) (withOut.localCheckpoint(), doms.localCheckpoint())
+    if (iters * chains > 1) (Staging(withOut), Staging(doms))
     else (withOut, doms)
   }
 
@@ -184,9 +185,9 @@ object WebGraph {
    * staged out-weights plus ONE dst-keyed aggregate. With a `dangling`
    * set, the round's mass on it (one 1-row aggregate, broadcast) is
    * spread uniformly over the n domains — the mass-conserving variant.
-   * Each round but the last is checkpointed (constant-depth lineage); the
-   * LAST stays lazy — its table is consumed exactly once downstream, so a
-   * checkpoint would materialize it only to read it back (one dead job).
+   * Each round but the last is staged (constant-depth lineage) and
+   * releases round k−1; the LAST stays lazy — consumed exactly once
+   * downstream, a stage would only be read back (one dead job).
    * Output: (domain, `name`) rounded to 4dp. With teleport = 1.0 the
    * (1−d)·1.0 and 1.0·w/out products are exact in IEEE arithmetic, so the
    * uniform case computes the same doubles as the unscaled formula.
@@ -214,7 +215,9 @@ object WebGraph {
       }
       val next = in.select(col("domain"),
         (lit(1.0 - damping) * teleport + lit(damping) * mass).as(name))
-      v = if (i < iters) next.localCheckpoint() else next
+      val last = v
+      v = if (i < iters) Staging(next) else next
+      if (i > 1 && i < iters) Staging.release(last) // v₀ is a lazy view
     }
     v.select(col("domain"), pround4(col(name)).as(name))
   }
@@ -270,7 +273,7 @@ object WebGraph {
     // ONE link-extraction scan feeds BOTH the rank edges and the candidate
     // URLs (the former shape ran the regexp extraction twice)
     frontierRankFromLinks(
-      extractLinks(pages, idCol, htmlCol, srcCol).localCheckpoint(),
+      Staging(extractLinks(pages, idCol, htmlCol, srcCol)),
       srcCol, seenUrls, iters, mBits, kHashes, topK)
 
   /** [[frontierRank]] from an ALREADY-STAGED [[extractLinks]] table —
@@ -350,10 +353,9 @@ object WebGraph {
   def pagerankConserving(edges: DataFrame, iters: Int,
                          damping: Double = 0.85): DataFrame = {
     val (withOut, doms) = rankStage(edges, iters)
-    val dangling = doms
+    val dangling = Staging(doms
       .join(withOut.select(col("src_domain").as("domain")), Seq("domain"),
-        "left_anti")
-      .localCheckpoint()
+        "left_anti"))
     powerIteration(withOut, doms, "pr", lit(1.0), Some(dangling), iters,
       damping)
   }
@@ -437,8 +439,8 @@ object WebGraph {
     // the edge table feeds FOUR plan branches (auth agg, hub join, both
     // domain-universe arms); its lineage is typically the HTML
     // link-extraction scan, which the unmaterialized diamond re-ran per
-    // branch. localCheckpoint: materialized once, nothing left cached
-    val edges = edges0.localCheckpoint()
+    // branch. Staged once; the caller's scope releases it
+    val edges = Staging(edges0)
     val auth = edges.groupBy(col("dst_domain").as("domain"))
       .agg(sum(col("n_links")).cast("double").as("auth"))
     val hub = edges
@@ -469,7 +471,7 @@ object WebGraph {
   def degreeTable(edges0: DataFrame): DataFrame = {
     // both direction aggregates read the same (typically
     // extraction-lineage) edge table — staged once, see hitsStep
-    val edges = edges0.localCheckpoint()
+    val edges = Staging(edges0)
     val outd = edges.groupBy(col("src_domain").as("domain"))
       .agg(count(lit(1)).as("out_deg"), sum(col("n_links")).as("out_weight"))
     val ind = edges.groupBy(col("dst_domain").as("domain"))

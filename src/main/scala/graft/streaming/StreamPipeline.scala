@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.{Pipeline, Synth}
+import graft.{Pipeline, Staging, Synth}
 import graft.operators.Route
 
 /**
@@ -25,6 +25,9 @@ import graft.operators.Route
  * The whole transform is the SAME Catalyst plan as the batch pipeline
  * (`Pipeline.transform`) — one definition, two execution modes; that is
  * the point of recasting the per-message flow as a declarative plan.
+ *
+ * The gates' trained models are staged ([[graft.Staging]]) and must live
+ * as long as their stream: a scope around a gate ends after its `stop()`.
  */
 object StreamPipeline {
 
@@ -198,9 +201,9 @@ object StreamPipeline {
                     vocabDocs: DataFrame, minCount: Long = 2L,
                     topK: Option[Int] = None): DataFrame = {
     def toksOf(c: Column) = graft.operators.TextAnalysis.toks(c)
-    val freq = vocabDocs.select(explode(toksOf(col(textCol))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .localCheckpoint() // train ONCE; feeds both the total and the vocab cut
+    val freq = Staging( // train ONCE; feeds both the total and the vocab cut
+      vocabDocs.select(explode(toksOf(col(textCol))).as("tok"))
+        .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     // one model row: full-corpus total + cut vocab map. A fixed minCount
     // does NOT bound the map as the training corpus grows (Heaps' law) —
     // the one-row broadcast would grow with it; pass topK to bound the
@@ -212,12 +215,11 @@ object StreamPipeline {
       topK.fold(cut)(k => cut.orderBy(col("c").desc, col("tok").asc).limit(k))
     }
     val total = freq.agg(sum(col("c")).cast("double").as("s"))
-    val model = kept
+    val model = Staging(kept // materialize once, not per micro-batch trigger
       .agg(map_from_entries(collect_list(struct(col("tok"), col("c"))))
         .as("vocab"))
       .crossJoin(total)
-      .select(col("s"), col("vocab"))
-      .localCheckpoint() // materialize once, not per micro-batch trigger
+      .select(col("s"), col("vocab")))
     docs.select(col(idCol), toksOf(col(textCol)).as("_ts"))
       .filter(size(col("_ts")) > 0)
       .crossJoin(broadcast(model))
@@ -293,9 +295,8 @@ object StreamPipeline {
                      trainDocs: DataFrame, isTarget: Column,
                      dim: Int = 64): DataFrame = {
     import graft.operators.Curation
-    val model = modelRow(Curation.dsirModel(trainDocs, idCol, textCol,
-        isTarget, dim))
-      .localCheckpoint() // train once, not per micro-batch trigger
+    val model = Staging( // train once, not per micro-batch trigger
+      modelRow(Curation.dsirModel(trainDocs, idCol, textCol, isTarget, dim)))
     scoreBags(docs, idCol, textCol, model, dim)(s =>
       graft.operators.TextAnalysis.pround4(s).as("dsir_weight"))
   }
@@ -310,7 +311,7 @@ object StreamPipeline {
    *
    * STATELESS like [[dsirGateStream]] (the same one-row broadcast-model
    * recipe): the model is ONE row (bucket→w map + OOV floor w0 + prior),
-   * dim-BOUNDED BY CONSTRUCTION, trained once (localCheckpoint), never
+   * dim-BOUNDED BY CONSTRUCTION, trained once ([[graft.Staging]]), never
    * per trigger. Scoring is the same [[scoreBags]] fold, so scoring the
    * training corpus through the gate equals the batch scorer bit-for-bit
    * (StreamingSpec). Buckets the training corpus never produced price at
@@ -333,9 +334,9 @@ object StreamPipeline {
         classes.getLong(1) > 0,
       s"nbcGateStream needs BOTH classes in the training corpus; got " +
         s"pos=${classes.get(0)}, neg=${classes.get(1)}")
-    val model = modelRow(Curation.nbcModel(trainDocs, textCol, isPositive, dim))
-      .crossJoin(Curation.nbcPrior(trainDocs, isPositive))
-      .localCheckpoint() // train once, not per micro-batch trigger
+    val model = Staging( // train once, not per micro-batch trigger
+      modelRow(Curation.nbcModel(trainDocs, textCol, isPositive, dim))
+        .crossJoin(Curation.nbcPrior(trainDocs, isPositive)))
     scoreBags(docs, idCol, textCol, model, dim)(s =>
       graft.operators.TextAnalysis.pround4(s + col("prior")).as("nb_score"))
       .withColumn("nb_pred", col("nb_score") > 0)
